@@ -99,20 +99,25 @@ object Bench {
     // second uncontended sample, so a one-off contended build no longer
     // reads as a regression (round-13's graph tail was exactly that —
     // 10.7 s single-shot vs ~5 s real).
-    def runDeployLane(): Seq[(String, Double)] = {
+    def runDeployLane(): (Seq[(String, Double)], Map[String, String]) = {
       val deployEntries = scala.collection.mutable.ListBuffer.empty[(String, Double)]
+      val causes = scala.collection.mutable.Map.empty[String, String]
       import org.apache.spark.sql.functions.{col, count, lit}
       // Every deploy entry runs under the SAME BenchGuard budget as the
       // gate lane: round 18 proved one pathological operator in this lane
       // (plain nanoTime timing, no guard) converts the whole bench into
       // rc=124 with ZERO per-query data — the exact failure mode the gate
-      // guard was built to kill. A breach records the -1 sentinel here and
-      // the entry name in `errors`; the lane moves on. Model-build bodies
-      // that get cancelled leave their model null, so downstream consumers
-      // fail fast into their own -1 sentinels instead of hanging.
-      def timed(name: String)(body: => Unit): Double =
-        BenchGuard.timed(spark, s"deploy-$name", budgetSec,
+      // guard was built to kill. A breach or a crash records the -1
+      // sentinel here and its cause ("timeout" / "error") in `causes`; the
+      // lane moves on. Model-build bodies that get cancelled leave their
+      // model null, so downstream consumers fail fast into their own -1
+      // sentinels instead of hanging.
+      def timed(name: String)(body: => Unit): Double = {
+        val (dt, cause) = BenchGuard.timedCause(spark, s"deploy-$name", budgetSec,
           onTimeout = msg => System.err.println(s"[graft.Bench] $msg"))(body)
+        cause.foreach(causes(name) = _)
+        dt
+      }
       // Guard self-test knob: a deliberately-unfinishable entry proves the
       // degrade path (sentinel + completed JSON line) without touching any
       // real operator. Never set by the driver.
@@ -440,7 +445,7 @@ object Bench {
         graft.operators.DedupOps.unpersistPipelines()
         spark.catalog.clearCache()
       }
-      deployEntries.toSeq
+      (deployEntries.toSeq, causes.toMap)
     }
     // Defensive parse: a malformed knob after the full gate run must not
     // throw away the gate results ("the lane must never take down the
@@ -455,13 +460,18 @@ object Bench {
     // guard sentinel must not win the min (it would mask a pass that
     // completed): the min runs over successful samples, and only an entry
     // with NO successful pass keeps the sentinel — and lands in `errors`
-    // as "deploy:<name>" so a breach is visible without diffing the map.
-    val deployKeys = deployRuns.flatMap(_.map(_._1)).distinct
-    val deployMin = deployRuns.flatten.groupBy(_._1).map { case (k, vs) =>
+    // as "deploy:<name>:<cause>" (one per distinct cause across passes,
+    // "timeout" or "error") so a breach is visible without diffing the map
+    // and is told apart from a crash without scraping stderr.
+    val deployKeys = deployRuns.flatMap(_._1.map(_._1)).distinct
+    val deployMin = deployRuns.flatMap(_._1).groupBy(_._1).map { case (k, vs) =>
       val ok = vs.map(_._2).filter(_ >= 0)
       k -> (if (ok.nonEmpty) ok.min else -1.0)
     }
-    deployKeys.filter(deployMin(_) < 0).foreach(k => errors += s"deploy:$k")
+    deployKeys.filter(deployMin(_) < 0).foreach { k =>
+      deployRuns.flatMap(_._2.get(k)).distinct
+        .foreach(cause => errors += s"deploy:$k:$cause")
+    }
     // `errors` is final only after BOTH lanes have run.
     val errs = errors.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")
     val deploy = deployKeys

@@ -61,4 +61,18 @@ object BenchGuard {
     } else if (failed) -1.0
     else (System.nanoTime() - t0) / 1e9
   }
+
+  /** [[timed]] plus the cause of a -1 sentinel: `Some("timeout")` when the
+    * budget was breached (the signal [[timed]] reports through
+    * `onTimeout`), `Some("error")` when the body threw, `None` on success.
+    * Lets a caller tag its error entries by cause instead of leaving a
+    * crash and a breach indistinguishable. */
+  def timedCause(spark: SparkSession, group: String, budgetSec: Double,
+                 graceSec: Double = 30.0, onTimeout: String => Unit = _ => ())(
+                 body: => Unit): (Double, Option[String]) = {
+    @volatile var breached = false
+    val dt = timed(spark, group, budgetSec, graceSec,
+      onTimeout = msg => { breached = true; onTimeout(msg) })(body)
+    (dt, if (dt >= 0) None else Some(if (breached) "timeout" else "error"))
+  }
 }

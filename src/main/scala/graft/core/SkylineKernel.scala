@@ -153,6 +153,24 @@ object SkylineKernel {
     (accP, accT, accC)
   }
 
+  /** [[skylineCountedTagged]] plus the surviving multiplicity per tag —
+    * the MR optimality numerator (rows of each origin partition on the
+    * global skyline, reference `FlinkSkyline.java:593-608`). Shared by
+    * the streaming global phase and the batch `skyline_stats` aggregate,
+    * so both count survivors under the same rule: equal points with
+    * different tags all survive, each under its own tag. */
+  def mergeTagged(points: ArrayBuffer[Array[Double]], tags: ArrayBuffer[Int],
+                  counts: ArrayBuffer[Long]): TaggedMerge = {
+    val (p, t, c) = skylineCountedTagged(points, tags, counts)
+    val surv = scala.collection.mutable.HashMap.empty[Int, Long]
+    var i = 0
+    while (i < t.length) {
+      surv(t(i)) = surv.getOrElse(t(i), 0L) + c(i)
+      i += 1
+    }
+    TaggedMerge(p, t, c, surv.toMap)
+  }
+
   /** d ≤ 3 staircase sweep (see the object scaladoc). Processing order is
     * (coords lex, tag) via Double.compare — a total order, NaN last. A
     * dominator is lex-strictly-smaller, so accepted entries are final and
@@ -313,6 +331,13 @@ object SkylineKernel {
   def merge(a: ArrayBuffer[Array[Double]], b: ArrayBuffer[Array[Double]]): ArrayBuffer[Array[Double]] =
     skylineOf(a ++ b)
 }
+
+/** Result of [[SkylineKernel.mergeTagged]]: the merged skyline as counted
+  * (point, tag, multiplicity) entries, and the surviving multiplicity per
+  * tag (tags with no survivor are absent). */
+final case class TaggedMerge(points: ArrayBuffer[Array[Double]],
+                             tags: ArrayBuffer[Int], counts: ArrayBuffer[Long],
+                             survivors: Map[Int, Long])
 
 /** Mutable aggregation buffer for the skyline aggregate function.
   *

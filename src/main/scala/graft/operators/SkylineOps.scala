@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.SkylineAgg.skyline_agg
+import graft.functions.SkylineStats.skyline_stats
 
 /** DataFrame-level skyline operators.
   *
@@ -356,54 +357,27 @@ object SkylineOps {
       .select(col("pid"), col("c_local"), col("c_surv"))
 
   /** [[partitionSkylineStats]] plus `c_rows` (total rows per partition),
-    * still two input scans: classification of every row happens in one left
-    * join against the marked local frontiers. */
+    * in ONE input scan: the `skyline_stats` aggregate folds every row into
+    * its partition's local skyline map-side and merges the local skylines,
+    * tagged by partition id, in `finish`. */
   def partitionSkylineStatsFull(df: DataFrame, dims: Seq[String], pid: Column): DataFrame =
     statsByKeys(df.select((pid.as("pid") +: dims.map(col)): _*), dims, Nil)
-      .select(col("pid").cast("int").as("pid"), col("c_rows"),
-        col("c_local"), col("c_surv"))
 
   /** The stats pipeline behind [[partitionSkylineStatsFull]], generalized to
     * extra leading group keys (used by [[triggerCadence]] to compute every
-    * barrier's stats in ONE pass): `tagged` carries `keys ++ "pid" ++ dims`;
-    * local frontiers group by (keys, pid), the global frontier by keys.
-    * Output: one row per (keys, pid) with c_rows / c_local / c_surv.
+    * barrier's stats in ONE pass): `tagged` carries `keys ++ "pid" ++ dims`.
+    * One `skyline_stats` aggregate per key group (a single global group when
+    * `keys` is empty), exploded to one row per (keys, pid) with
+    * c_rows / c_local / c_surv. Only local skylines cross the shuffle — the
+    * MR design's own cost model; no input row is shuffled or joined.
     */
   private def statsByKeys(tagged: DataFrame, dims: Seq[String],
-                          keys: Seq[String]): DataFrame = {
-    val pk = keys :+ "pid"
-    // Scan 1: per-(keys, partition) local frontiers (map-side partial
-    // aggregation).
-    val localFront = tagged.groupBy(pk.map(col): _*)
-      .agg(skyline_agg(vec(dims)).as("sky"))
-      .select(pk.map(col) :+ explode(col("sky")).as("p"): _*)
-      .select(pk.map(col) ++
-        dims.zipWithIndex.map { case (d, i) => col("p")(i).as(d) }: _*)
-      .distinct()
-    // Global frontier = skyline of the union of local frontiers (the MR
-    // merge property) — computed from the frontier-sized intermediate, NOT
-    // by re-scanning the input. Every global-skyline point is on its own
-    // partition's local skyline, so marking localFront rows that survive
-    // globally classifies every local-skyline row in one pass.
-    val globalFront = localFront
-      .groupBy(keys.map(col): _*)
-      .agg(skyline_agg(vec(dims)).as("sky"))
-      .select(keys.map(col) :+ explode(col("sky")).as("p"): _*)
+                          keys: Seq[String]): DataFrame =
+    tagged.groupBy(keys.map(col): _*)
+      .agg(skyline_stats(col("pid").cast("int"), vec(dims)).as("st"))
+      .select(keys.map(col) :+ explode(col("st")).as("s"): _*)
       .select(keys.map(col) ++
-        dims.zipWithIndex.map { case (d, i) => col("p")(i).as(d) }: _*)
-      .distinct()
-      .withColumn("in_glob", lit(1))
-    val marked = localFront
-      .join(globalFront, keys ++ dims, "left")
-      .withColumn("in_loc", lit(1))
-    // Scan 2: one left join (marked is distinct on (keys, pid, dims) — no
-    // row multiplication) classifies every row and yields all three counts
-    // in a single aggregate.
-    tagged.join(marked, pk ++ dims, "left")
-      .groupBy(pk.map(col): _*)
-      .agg(count(lit(1)).as("c_rows"), count(col("in_loc")).as("c_local"),
-        count(col("in_glob")).as("c_surv"))
-  }
+        Seq("pid", "c_rows", "c_local", "c_surv").map(c => col(s"s.$c").as(c)): _*)
 
   /** The reference's emitted result record (byte-layout parity with the
     * hand-built JSON at `java/org.main/FlinkSkyline.java:625-650`):
@@ -443,7 +417,8 @@ object SkylineOps {
     * One scan family, not one per barrier: each row is tagged with EVERY
     * barrier prefix it belongs to (an explode whose ≤ B fanout is absorbed
     * by the map-side partial aggregation), then the shared stats pipeline
-    * runs once grouped by (barrier, pid). At the reference's real cadence
+    * runs once grouped by barrier (one `skyline_stats` buffer per barrier,
+    * keyed inside by pid). At the reference's real cadence
     * (a trigger every 1M records → hundreds of barriers over a long stream)
     * this stays O(1) input scans where the naive per-barrier plan is O(B).
     * Barriers whose prefix is empty still emit a zeroed record (the same

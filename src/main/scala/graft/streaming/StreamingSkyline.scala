@@ -151,9 +151,7 @@ object StreamingSkyline {
     val tags = ArrayBuffer.empty[Int]
     val cnts = ArrayBuffer.empty[Long]
     st.entries.foreach { case (p, t, c) => pts += p; tags += t; cnts += c }
-    var absorbed = false
     results.foreach { r =>
-      absorbed = true
       var i = 0
       while (i < r.sky.length) {
         var j = i + 1
@@ -171,18 +169,16 @@ object StreamingSkyline {
         clock(),
         math.max(st.maxLocalCpuMs, r.cpuMs))
     }
-    if (absorbed) {
-      val (mp, mt, mc) = SkylineKernel.skylineCountedTagged(pts, tags, cnts)
-      st = st.copy(entries =
-        mp.indices.map(i => (mp(i), mt(i), mc(i))).toList)
-    }
+    // Re-merging already-merged entries is idempotent, so an invoke with no
+    // arrivals costs one pass and changes nothing.
+    val m = SkylineKernel.mergeTagged(pts, tags, cnts)
+    st = st.copy(entries =
+      m.points.indices.map(i => (m.points(i), m.tags(i), m.counts(i))).toList)
     if (st.arrived >= totalPartitions) {
       val finishMs = clock()
-      val skySize = st.entries.iterator.map(_._3).sum
-      val survivors = st.entries.groupBy(_._2).view
-        .mapValues(_.iterator.map(_._3).sum).toMap
+      val skySize = m.survivors.values.sum
       val sumRatios = st.localSizes.collect {
-        case (p, size) if size > 0 => survivors.getOrElse(p, 0L).toDouble / size
+        case (p, size) if size > 0 => m.survivors.getOrElse(p, 0L).toDouble / size
       }.sum
       val optimality = sumRatios / totalPartitions
       val mapWall    = if (st.minStartMs == Long.MaxValue) 0L

@@ -42,6 +42,32 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(!timeouts.isEmpty, "breach must be reported through onTimeout")
   }
 
+  test("timedCause tags a crash as error, not timeout") {
+    val spark = TestSpark.spark
+    val (dt, cause) = BenchGuard.timedCause(spark, "bg-cause-err", budgetSec = 60.0) {
+      throw new NullPointerException("operator crash")
+    }
+    assert(dt == -1.0)
+    assert(cause.contains("error"), s"cause=$cause")
+    val (ok, none) = BenchGuard.timedCause(spark, "bg-cause-ok", budgetSec = 60.0) {
+      assert(spark.range(10).count() == 10L)
+    }
+    assert(ok > 0.0 && none.isEmpty, s"success must carry no cause: $none")
+  }
+
+  test("timedCause tags a budget breach as timeout and still reports it via onTimeout") {
+    val spark = TestSpark.spark
+    val timeouts = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val (dt, cause) = BenchGuard.timedCause(spark, "bg-cause-slow", budgetSec = 1.0,
+      graceSec = 20.0, onTimeout = timeouts.add(_)) {
+      spark.sparkContext.parallelize(1 to 4, 4)
+        .foreach(_ => Thread.sleep(60000))
+    }
+    assert(dt == -1.0)
+    assert(cause.contains("timeout"), s"cause=$cause")
+    assert(!timeouts.isEmpty, "the caller's onTimeout must still see the breach")
+  }
+
   test("a breached query does not poison the next measurement") {
     val spark = TestSpark.spark
     BenchGuard.timed(spark, "bg-slow2", budgetSec = 1.0, graceSec = 20.0) {

@@ -95,6 +95,26 @@ class PlanShapeSpec extends AnyFunSuite {
       s"sky2d scan reads beyond its dims: $meta")
   }
 
+  test("MR skyline statistics plan one input scan and no join") {
+    val spark = TestSpark.spark
+    val li = spark.read.parquet(s"$sf/lineitem.parquet")
+    val dims = Seq("l_extendedprice", "l_discount")
+    val pid = graft.operators.SkylineOps.dimPartitionCol(
+      array(dims.map(col): _*), 100000.0, 8)
+    Seq(
+      "metricsJson" -> graft.operators.SkylineOps.metricsJson(li, dims, pid, 8, "1"),
+      "partitionSkylineStatsFull" ->
+        graft.operators.SkylineOps.partitionSkylineStatsFull(li, dims, pid)
+    ).foreach { case (name, df) =>
+      val plan = df.queryExecution.sparkPlan
+      assert(fileScans(plan).size == 1, s"$name must scan its input once:\n$plan")
+      assert(plan.collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      }.isEmpty, s"$name plans a join:\n$plan")
+      assert(!scanMeta(df).contains("l_comment"), s"$name scan reads beyond its dims")
+    }
+  }
+
   test("zorder_layout reads exactly its two layout dimensions") {
     val spark = TestSpark.spark
     val df = graft.queries.PipelineQueries.queries("zorder_layout")(spark, sf)
