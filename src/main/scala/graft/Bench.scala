@@ -35,13 +35,15 @@ object Bench {
       .map { case (name, fn) =>
       // A query that crashes or breaches its budget must not measure as
       // FAST (an aborted job returns in milliseconds and would flatter the
-      // total): record a -1 sentinel and surface the name in an "errors"
-      // field instead.
+      // total): record a -1 sentinel and surface "<name>:<cause>" in an
+      // "errors" field instead, the cause being "timeout" or "error".
+      val causes = scala.collection.mutable.LinkedHashSet.empty[String]
       def once(): Double = {
-        val dt = BenchGuard.timed(spark, s"bench-$name", budgetSec,
+        val (dt, cause) = BenchGuard.timedCause(spark, s"bench-$name", budgetSec,
           onTimeout = msg => System.err.println(s"[graft.Bench] $msg")) {
           fn(spark, sfDir).count(); ()
         }
+        cause.foreach(causes += _)
         // Queries that persist intermediates (dedup LSH) would otherwise leak
         // cached partitions into every later measurement.
         graft.operators.DedupOps.unpersistPipelines()
@@ -55,7 +57,8 @@ object Bench {
       // run gets one retry (a transient OOM/contention hiccup must not mark
       // the query failed for the whole bench); an errored SECOND run falls
       // back to the successful first time. Only a double failure records the
-      // -1 sentinel and the name in `errors`.
+      // -1 sentinel and "<name>:<cause>" in `errors` (one per distinct cause
+      // among the failed attempts).
       val first = once()
       val (best, n) =
         if (first < 0) {
@@ -67,7 +70,7 @@ object Bench {
         }
         else if (first < 0.5) (first, 1)
         else { val second = once(); if (second < 0) (first, 2) else (math.min(first, second), 2) }
-      if (best < 0) errors += name
+      if (best < 0) causes.foreach(c => errors += s"$name:$c")
       (name, first, best, n)
     }
     // `queries` stays a flat name→seconds map (the driver's schema) holding
@@ -109,159 +112,123 @@ object Bench {
       // rc=124 with ZERO per-query data — the exact failure mode the gate
       // guard was built to kill. A breach or a crash records the -1
       // sentinel here and its cause ("timeout" / "error") in `causes`; the
-      // lane moves on. Model-build bodies that get cancelled leave their
-      // model null, so downstream consumers fail fast into their own -1
-      // sentinels instead of hanging.
+      // lane moves on.
       def timed(name: String)(body: => Unit): Double = {
         val (dt, cause) = BenchGuard.timedCause(spark, s"deploy-$name", budgetSec,
           onTimeout = msg => System.err.println(s"[graft.Bench] $msg"))(body)
         cause.foreach(causes(name) = _)
         dt
       }
+      def entry(name: String)(body: => Unit): Unit =
+        deployEntries += name -> timed(name)(body)
+      def skip(name: String): Unit = {
+        causes(name) = "skipped"
+        deployEntries += name -> -1.0
+      }
+      // A model build yields its model only when it finished within budget.
+      // On a breach or a crash the model is dropped (the half-built, lazily
+      // persisted one would otherwise be rebuilt inside the first
+      // consumer's budget and read as consumer time), and every entry that
+      // needs it records its own -1 sentinel with cause "skipped" without
+      // running.
+      def build[M](name: String, needs: Option[Any]*)(make: => M)(
+          materialize: M => Unit): Option[M] =
+        if (needs.exists(_.isEmpty)) { skip(name); None }
+        else {
+          @volatile var built: Option[M] = None
+          val t = timed(name) { val m = make; materialize(m); built = Some(m) }
+          deployEntries += name -> t
+          if (t < 0) None else built
+        }
+      def consume[M](name: String, m: Option[M])(body: M => Unit): Unit =
+        m match {
+          case Some(v) => entry(name)(body(v))
+          case None => skip(name)
+        }
       // Guard self-test knob: a deliberately-unfinishable entry proves the
       // degrade path (sentinel + completed JSON line) without touching any
       // real operator. Never set by the driver.
       if (sys.env.get("SPARK_GRAFT_DEPLOY_HANG").contains("1"))
-        deployEntries += "deploy_hang_probe" -> timed("deploy_hang_probe") {
+        entry("deploy_hang_probe") {
           import org.apache.spark.sql.functions.{sum, xxhash64}
           spark.range(Long.MaxValue).agg(sum(xxhash64(col("id")))).count(); ()
         }
       try {
         val dd = spark.read.parquet(s"$sfDir/documents.parquet")
-        val m = {
-          var model: graft.operators.DedupOps.NearDupModel = null
-          val t = timed("dedup_model") {
-            model = graft.operators.DedupOps.nearDupModel(
-              dd, "doc_id", 3, 12, 3, 1, 2)
-            model.pairs.count(); model.clusters.count() // materialize caches
-          }
-          deployEntries += "dedup_model" -> t
-          model
+        val m = build("dedup_model")(graft.operators.DedupOps.nearDupModel(
+            dd, "doc_id", 3, 12, 3, 1, 2)) { model =>
+          model.pairs.count(); model.clusters.count() // materialize caches
         }
-        deployEntries += "dedup_pairs" -> timed("dedup_pairs")(m.pairs.count())
-        deployEntries += "dedup_clusters" -> timed("dedup_clusters")(m.clusters.count())
-        deployEntries += "dedup_cluster_sizes" -> timed("dedup_cluster_sizes")(
-          m.clusters.groupBy("cluster").agg(count(lit(1))).count())
-        deployEntries += "dedup_keep_list" -> timed("dedup_keep_list")(
-          m.clusters.filter(col("doc_id") === col("cluster")).count())
+        consume("dedup_pairs", m)(_.pairs.count())
+        consume("dedup_clusters", m)(_.clusters.count())
+        consume("dedup_cluster_sizes", m)(
+          _.clusters.groupBy("cluster").agg(count(lit(1))).count())
+        consume("dedup_keep_list", m)(
+          _.clusters.filter(col("doc_id") === col("cluster")).count())
         graft.operators.DedupOps.unpersistPipelines()
-        val bm = {
-          var model: graft.operators.BpeOps.BpeModel = null
-          val t = timed("bpe_model") {
-            model = graft.operators.BpeOps.bpeModel(dd, 8)
-            model.words.count() // materialize the segmented word cache
-          }
-          deployEntries += "bpe_model" -> t
-          model
-        }
-        deployEntries += "bpe_merges" -> timed("bpe_merges")(
-          graft.operators.BpeOps.mergesOf(bm).count())
-        deployEntries += "bpe_vocab" -> timed("bpe_vocab")(
-          graft.operators.BpeOps.vocabOf(bm).count())
-        deployEntries += "bpe_doc_tokens" -> timed("bpe_doc_tokens")(
-          graft.operators.BpeOps.docTokensOf(bm, dd, "doc_id").count())
+        val bm = build("bpe_model")(graft.operators.BpeOps.bpeModel(dd, 8))(
+          _.words.count()) // materialize the segmented word cache
+        consume("bpe_merges", bm)(graft.operators.BpeOps.mergesOf(_).count())
+        consume("bpe_vocab", bm)(graft.operators.BpeOps.vocabOf(_).count())
+        consume("bpe_doc_tokens", bm)(
+          graft.operators.BpeOps.docTokensOf(_, dd, "doc_id").count())
         // k-means family: train+assign once (the gate-independence cost
         // every emb_kmeans-chain gate pays from scratch), then time the
         // cell consumers reusing the persisted assignment.
         val ee = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        val asg = {
-          var a: org.apache.spark.sql.DataFrame = null
-          val t = timed("kmeans_model") {
-            a = graft.operators.VectorOps.kmeansAssign(
-                ee, "vec_id", "embedding",
-                col("vec_id").between(8, 15), 3, 64)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            a.count()
-          }
-          deployEntries += "kmeans_model" -> t
-          a
-        }
-        deployEntries += "kmeans_cells" -> timed("kmeans_cells")(
-          asg.groupBy("cid").agg(count(lit(1))).count())
-        deployEntries += "kmeans_sample" -> timed("kmeans_sample")(
-          graft.operators.VectorOps.clusterBalancedSampleFrom(asg, 10).count())
-        asg.unpersist(blocking = false)
+        val asg = build("kmeans_model")(graft.operators.VectorOps.kmeansAssign(
+            ee, "vec_id", "embedding", col("vec_id").between(8, 15), 3, 64)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(_.count())
+        consume("kmeans_cells", asg)(_.groupBy("cid").agg(count(lit(1))).count())
+        consume("kmeans_sample", asg)(
+          graft.operators.VectorOps.clusterBalancedSampleFrom(_, 10).count())
+        asg.foreach(_.unpersist(blocking = false))
         // ANN family: ONE trained coarse quantizer (+ PQ codebooks, + the
         // residual books) shared by every search / recall / semantic-dedup
         // consumer — the re-training cost each gate pays from scratch is
         // paid exactly once here.
         import graft.operators.VectorOps
-        val ivf = {
-          var m: VectorOps.IvfModel = null
-          val t = timed("ivf_model") {
-            m = VectorOps.ivfModel(ee, "vec_id", "embedding",
-              col("vec_id").between(8, 15), 3, 64)
-            m.cells.count() // materialize the persisted index
-          }
-          deployEntries += "ivf_model" -> t
-          m
-        }
-        deployEntries += "knn_ivf_kmeans" -> timed("knn_ivf_kmeans")(
-          VectorOps.knnIvfKmeansFrom(ivf, ee, "vec_id",
-            col("vec_id") < 8, 5, 3).count())
-        deployEntries += "ann_recall_ivf" -> timed("ann_recall_ivf")(
-          graft.queries.PipelineQueries.annRecall(
-            VectorOps.knnIvfKmeansFrom(ivf, ee, "vec_id",
-              col("vec_id") < 8, 5, 3), ee).count())
+        val ivf = build("ivf_model")(VectorOps.ivfModel(ee, "vec_id", "embedding",
+            col("vec_id").between(8, 15), 3, 64))(
+          _.cells.count()) // materialize the persisted index
+        consume("knn_ivf_kmeans", ivf)(VectorOps.knnIvfKmeansFrom(_, ee, "vec_id",
+          col("vec_id") < 8, 5, 3).count())
+        consume("ann_recall_ivf", ivf)(i => graft.queries.PipelineQueries.annRecall(
+          VectorOps.knnIvfKmeansFrom(i, ee, "vec_id",
+            col("vec_id") < 8, 5, 3), ee).count())
         // Semantic dedup: the deployable artifact is the CLUSTER TABLE
         // (like dedup_model's) — the within-cell pair join + component
         // collapse is the model build; consumers read the persisted
         // labels.
-        val sem = {
-          var c: org.apache.spark.sql.DataFrame = null
-          val t = timed("semdedup_model") {
-            c = VectorOps.semDedupClustersFrom(ivf, ee, "vec_id", 0.35)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            c.count()
-          }
-          deployEntries += "semdedup_model" -> t
-          c
-        }
-        deployEntries += "semdedup_keep_list" -> timed("semdedup_keep_list")(
-          sem.filter(col("doc_id") === col("cluster")).count())
-        deployEntries += "semdedup_cluster_sizes" -> timed("semdedup_cluster_sizes")(
-          sem.groupBy("cluster").agg(count(lit(1))).count())
-        sem.unpersist(blocking = false)
-        val pq = {
-          var m: VectorOps.IvfPqModel = null
-          val t = timed("ivfpq_model") {
-            m = VectorOps.ivfPqModel(ivf, 2, 4)
-            m.coded.count() // materialize the persisted codes
-          }
-          deployEntries += "ivfpq_model" -> t
-          m
-        }
-        deployEntries += "knn_ivfpq" -> timed("knn_ivfpq")(
-          VectorOps.knnIvfPqFrom(pq, ee, "vec_id",
-            col("vec_id") < 8, 5, 3).count())
-        deployEntries += "ann_recall_ivfpq" -> timed("ann_recall_ivfpq")(
-          graft.queries.PipelineQueries.annRecall(
-            VectorOps.knnIvfPqFrom(pq, ee, "vec_id",
-              col("vec_id") < 8, 5, 3), ee).count())
-        val pqr = {
-          var m: VectorOps.IvfPqResModel = null
-          val t = timed("ivfpq_res_model") {
-            m = VectorOps.ivfPqResidualModel(ivf, 2, 4)
-            m.coded.count()
-          }
-          deployEntries += "ivfpq_res_model" -> t
-          m
-        }
-        deployEntries += "ann_recall_ivfpq_res" -> timed("ann_recall_ivfpq_res")(
-          graft.queries.PipelineQueries.annRecall(
-            VectorOps.knnIvfPqResidualFrom(pqr, ee, "vec_id",
-              col("vec_id") < 8, 5, 3), ee).count())
+        val sem = build("semdedup_model", ivf)(
+            VectorOps.semDedupClustersFrom(ivf.get, ee, "vec_id", 0.35)
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(
+          _.count())
+        consume("semdedup_keep_list", sem)(
+          _.filter(col("doc_id") === col("cluster")).count())
+        consume("semdedup_cluster_sizes", sem)(
+          _.groupBy("cluster").agg(count(lit(1))).count())
+        sem.foreach(_.unpersist(blocking = false))
+        val pq = build("ivfpq_model", ivf)(VectorOps.ivfPqModel(ivf.get, 2, 4))(
+          _.coded.count()) // materialize the persisted codes
+        consume("knn_ivfpq", pq)(VectorOps.knnIvfPqFrom(_, ee, "vec_id",
+          col("vec_id") < 8, 5, 3).count())
+        consume("ann_recall_ivfpq", pq)(p => graft.queries.PipelineQueries.annRecall(
+          VectorOps.knnIvfPqFrom(p, ee, "vec_id", col("vec_id") < 8, 5, 3), ee).count())
+        val pqr = build("ivfpq_res_model", ivf)(
+          VectorOps.ivfPqResidualModel(ivf.get, 2, 4))(_.coded.count())
+        consume("ann_recall_ivfpq_res", pqr)(p => graft.queries.PipelineQueries.annRecall(
+          VectorOps.knnIvfPqResidualFrom(p, ee, "vec_id",
+            col("vec_id") < 8, 5, 3), ee).count())
         // Refined search off the SAME persisted model (round 17): the
         // serving-path number — ADC over the persisted codes + the exact
         // refine of the top-20 pool (the gate's RrCand), no train/encode.
         // The marginal cost over ann_recall_ivfpq_res IS the refine stage.
-        deployEntries += "knn_ivfpq_rerank" -> timed("knn_ivfpq_rerank")(
-          VectorOps.knnIvfPqResidualRerankFrom(pqr, ee, "vec_id",
-            "embedding", col("vec_id") < 8, 5, 3, 20).count())
-        deployEntries += "ann_recall_ivfpq_rr" -> timed("ann_recall_ivfpq_rr")(
-          graft.queries.PipelineQueries.annRecall(
-            VectorOps.knnIvfPqResidualRerankFrom(pqr, ee, "vec_id",
-              "embedding", col("vec_id") < 8, 5, 3, 20), ee).count())
+        consume("knn_ivfpq_rerank", pqr)(VectorOps.knnIvfPqResidualRerankFrom(_, ee,
+          "vec_id", "embedding", col("vec_id") < 8, 5, 3, 20).count())
+        consume("ann_recall_ivfpq_rr", pqr)(p => graft.queries.PipelineQueries.annRecall(
+          VectorOps.knnIvfPqResidualRerankFrom(p, ee, "vec_id",
+            "embedding", col("vec_id") < 8, 5, 3, 20), ee).count())
         graft.operators.DedupOps.unpersistPipelines()
         // kNN-GRAPH family: the similarity graph is built ONCE (the cost
         // every graph_* gate pays from scratch) and the persisted edge
@@ -271,79 +238,58 @@ object Bench {
         // composes its 5 rounds into ONE job (9.5 → 1.1 s) and the
         // component collapse's single-shot 10.7 s was mostly box noise
         // (min-of-2 reads ~3.6 s — ~8 checkpointed rounds of real work).
-        val kgEdges = {
-          var e: org.apache.spark.sql.DataFrame = null
-          val t = timed("kgraph_model") {
-            e = VectorOps.knnGraph(ee, "vec_id", "embedding", 3, 4, 4, 64)
+        val kgEdges = build("kgraph_model")(
+            VectorOps.knnGraph(ee, "vec_id", "embedding", 3, 4, 4, 64)
               .select(col("qid").as("src"), col("nid").as("dst"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            e.count()
-          }
-          deployEntries += "kgraph_model" -> t
-          e
-        }
-        deployEntries += "graph_degrees" -> timed("graph_degrees")(
-          kgEdges.groupBy("src").agg(count(lit(1)).as("deg"))
-            .groupBy("deg").agg(count(lit(1))).count())
-        deployEntries += "graph_pagerank" -> timed("graph_pagerank")(
-          graft.operators.GraphOps.pageRank(kgEdges, 5).count())
-        deployEntries += "graph_triangles" -> timed("graph_triangles")(
-          graft.operators.GraphOps.triangles(kgEdges).count())
-        deployEntries += "graph_components" -> timed("graph_components")(
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(
+          _.count())
+        consume("graph_degrees", kgEdges)(_.groupBy("src").agg(count(lit(1)).as("deg"))
+          .groupBy("deg").agg(count(lit(1))).count())
+        consume("graph_pagerank", kgEdges)(
+          graft.operators.GraphOps.pageRank(_, 5).count())
+        consume("graph_triangles", kgEdges)(
+          graft.operators.GraphOps.triangles(_).count())
+        consume("graph_components", kgEdges)(e =>
           graft.operators.DedupOps.nearDupClusters(
               ee.select(col("vec_id")), "vec_id",
-              kgEdges.select(col("src").as("id_a"), col("dst").as("id_b")))
+              e.select(col("src").as("id_a"), col("dst").as("id_b")))
             .groupBy("cluster").agg(count(lit(1))).count())
-        kgEdges.unpersist(blocking = false)
+        kgEdges.foreach(_.unpersist(blocking = false))
         graft.operators.DedupOps.unpersistPipelines()
         // Fuzzy-pair family: ONE shingle pass + PPJoin pair graph (+ the
         // estimator signature table) shared by the contamination rollup
         // and the estimator-accuracy readout.
-        val fm = {
-          var m: graft.operators.DedupOps.FuzzyPairModel = null
-          val t = timed("jaccard_model") {
-            m = graft.operators.DedupOps.fuzzyPairModel(
-              dd, "doc_id", 3, 1, 2, 36)
-            // Materialize BOTH persisted artifacts inside the build
-            // timing: sigs used to materialize lazily under the first
-            // consumer, so "minhash_sigs" read ~4 s of BUILD cost as if
-            // it were a consumer cost (r13 deploy map) — the model entry
-            // is where that time honestly belongs.
-            m.pairs.count(); m.sigs.count()
-          }
-          deployEntries += "jaccard_model" -> t
-          m
+        val fm = build("jaccard_model")(graft.operators.DedupOps.fuzzyPairModel(
+            dd, "doc_id", 3, 1, 2, 36)) { m =>
+          // Materialize BOTH persisted artifacts inside the build
+          // timing: sigs used to materialize lazily under the first
+          // consumer, so "minhash_sigs" read ~4 s of BUILD cost as if
+          // it were a consumer cost (r13 deploy map) — the model entry
+          // is where that time honestly belongs.
+          m.pairs.count(); m.sigs.count()
         }
-        deployEntries += "minhash_sigs" -> timed("minhash_sigs")(fm.sigs.count())
-        deployEntries += "dedup_source_matrix" -> timed("dedup_source_matrix")(
-          graft.operators.DedupOps.sourcePairMatrix(
-            fm.pairs, dd, "doc_id", "source").count())
-        deployEntries += "minhash_est" -> timed("minhash_est")(
-          graft.operators.DedupOps.minhashEstimatesFrom(
-            fm.pairs, fm.sigs).count())
+        consume("minhash_sigs", fm)(_.sigs.count())
+        consume("dedup_source_matrix", fm)(m => graft.operators.DedupOps
+          .sourcePairMatrix(m.pairs, dd, "doc_id", "source").count())
+        consume("minhash_est", fm)(m => graft.operators.DedupOps
+          .minhashEstimatesFrom(m.pairs, m.sigs).count())
         graft.operators.DedupOps.unpersistPipelines()
         // Retrieval family: ONE tokenize+shuffle pass builds the inverted
         // index (posting table + doc lengths + corpus stats); BM25,
         // conjunctive search, the postings browse artifact, and the RRF
         // hybrid all reuse it.
-        val im = {
-          var m: graft.operators.IndexOps.IndexModel = null
-          val t = timed("idx_model") {
-            m = graft.operators.IndexOps.indexModel(dd, "doc_id")
-            m.td.count(); m.dl.count() // materialize the index
-          }
-          deployEntries += "idx_model" -> t
-          m
+        val im = build("idx_model")(graft.operators.IndexOps.indexModel(dd, "doc_id")) {
+          m => m.td.count(); m.dl.count() // materialize the index
         }
         val probeTerms = Seq("spark", "vector", "hash")
-        deployEntries += "idx_bm25" -> timed("idx_bm25")(
-          graft.operators.IndexOps.bm25From(im, probeTerms, 20).count())
-        deployEntries += "idx_search" -> timed("idx_search")(
-          graft.operators.IndexOps.conjunctiveFrom(im, probeTerms, 2L).count())
-        deployEntries += "idx_postings" -> timed("idx_postings")(
-          graft.operators.IndexOps.postingsFrom(im, 300L, 5).count())
-        deployEntries += "search_rrf" -> timed("search_rrf") {
-          val lex = graft.operators.IndexOps.bm25From(im, probeTerms, 20)
+        consume("idx_bm25", im)(
+          graft.operators.IndexOps.bm25From(_, probeTerms, 20).count())
+        consume("idx_search", im)(
+          graft.operators.IndexOps.conjunctiveFrom(_, probeTerms, 2L).count())
+        consume("idx_postings", im)(
+          graft.operators.IndexOps.postingsFrom(_, 300L, 5).count())
+        consume("search_rrf", im) { m =>
+          val lex = graft.operators.IndexOps.bm25From(m, probeTerms, 20)
             .select(col("doc_id").as("id"), col("rnk"))
           val sem = graft.operators.VectorOps.knnBrute(ee, "vec_id",
               "embedding", col("vec_id") === 0, 20)
@@ -354,18 +300,10 @@ object Bench {
         // Decontamination family: the Bloom bitset of the eval suite is
         // built ONCE (≤ 65536 ints of driver state, however large the
         // suite grows) and applied per training corpus.
-        val blm = {
-          var m: graft.operators.BloomOps.BloomModel = null
-          val t = timed("bloom_model") {
-            m = graft.operators.BloomOps.bloomModel(
-              dd.filter(col("source") === "src0"), 8)
-          }
-          deployEntries += "bloom_model" -> t
-          m
-        }
-        deployEntries += "bloom_apply" -> timed("bloom_apply")(
-          graft.operators.BloomOps.applyBloom(blm,
-            dd.filter(col("source") =!= "src0"), "doc_id").count())
+        val blm = build("bloom_model")(graft.operators.BloomOps.bloomModel(
+          dd.filter(col("source") === "src0"), 8))(_ => ())
+        consume("bloom_apply", blm)(graft.operators.BloomOps.applyBloom(_,
+          dd.filter(col("source") =!= "src0"), "doc_id").count())
         // Multimodal fingerprint family: decode + fingerprint ONCE into
         // the persisted hash-class table (the value-space-bounded
         // artifact every mm_audiohash_* gate rebuilds from the raw
@@ -374,34 +312,25 @@ object Bench {
         val mmSegs = 16 // the mm_audiohash gates' segment count
         val mmClasses = {
           import graft.operators.MultimodalOps._
-          var c: org.apache.spark.sql.DataFrame = null
-          val t = timed("mm_model") {
-            c = dd
-              .select(wavFingerprint8(
-                wavBlob(lit(8000), lit(1), lit(8), asBlob(col("text"))),
-                mmSegs).as("p"))
-              .filter(col("p.fp").isNotNull)
-              .groupBy(col("p.fp").as("h")).agg(count(lit(1)).as("cnt"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            c.count()
-          }
-          deployEntries += "mm_model" -> t
-          c
+          build("mm_model")(dd
+            .select(wavFingerprint8(
+              wavBlob(lit(8000), lit(1), lit(8), asBlob(col("text"))),
+              mmSegs).as("p"))
+            .filter(col("p.fp").isNotNull)
+            .groupBy(col("p.fp").as("h")).agg(count(lit(1)).as("cnt"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(_.count())
         }
-        deployEntries += "mm_audiohash" -> timed("mm_audiohash")(
-          mmClasses.groupBy(col("cnt").as("sz"))
-            .agg(count(lit(1)).as("n_buckets")).count())
-        deployEntries += "mm_audiohash_pairs" -> timed("mm_audiohash_pairs")(
+        consume("mm_audiohash", mmClasses)(_.groupBy(col("cnt").as("sz"))
+          .agg(count(lit(1)).as("n_buckets")).count())
+        consume("mm_audiohash_pairs", mmClasses)(c =>
           graft.operators.DedupOps.hammingPairs(
-            mmClasses.select(col("h").as("id"), col("h")),
-            mmSegs, 2, 4).count())
-        deployEntries += "mm_audiohash_clusters" -> timed("mm_audiohash_clusters")(
+            c.select(col("h").as("id"), col("h")), mmSegs, 2, 4).count())
+        consume("mm_audiohash_clusters", mmClasses)(c =>
           graft.operators.DedupOps.smallNearDupClusters(
-            mmClasses.select(col("h")), "h",
+            c.select(col("h")), "h",
             graft.operators.DedupOps.hammingPairs(
-              mmClasses.select(col("h").as("id"), col("h")),
-              mmSegs, 2, 4)).count())
-        mmClasses.unpersist(blocking = false)
+              c.select(col("h").as("id"), col("h")), mmSegs, 2, 4)).count())
+        mmClasses.foreach(_.unpersist(blocking = false))
 
         // SKYLINE family deploy shape (round 15): materialize the onion
         // layers ONCE per dim set, then every consumer is a point-table
@@ -410,34 +339,18 @@ object Bench {
         // because the gates use two dim sets: 2D full lineitem
         // (layers + topdom), 3D 5%-sample (skyband).
         val liSky = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        val sky2 = {
-          var model: graft.operators.SkylineOps.SkylineModel = null
-          val t = timed("sky_model") {
-            model = graft.operators.SkylineOps.skylineModel(
-              liSky, Seq("l_quantity", "l_extendedprice"), 2)
-            model.pts.count() // materialize the point table
-          }
-          deployEntries += "sky_model" -> t
-          model
-        }
-        deployEntries += "sky_layers" -> timed("sky_layers")(
-          graft.operators.SkylineOps.layerRowsFrom(sky2, liSky).count())
-        deployEntries += "sky_topdom" -> timed("sky_topdom")(
-          graft.operators.SkylineOps.topDominatingFrom(sky2, liSky, 10).count())
-        val sky3 = {
-          var model: graft.operators.SkylineOps.SkylineModel = null
-          val t = timed("sky3_model") {
-            model = graft.operators.SkylineOps.skylineModel(
-              liSky.filter(col("l_orderkey") % 20 === 0),
-              Seq("l_quantity", "l_extendedprice", "l_discount"), 3)
-            model.pts.count()
-          }
-          deployEntries += "sky3_model" -> t
-          model
-        }
-        deployEntries += "sky_skyband" -> timed("sky_skyband")(
-          graft.operators.SkylineOps.skybandRowsFrom(sky3,
-            liSky.filter(col("l_orderkey") % 20 === 0), 3).count())
+        val sky2 = build("sky_model")(graft.operators.SkylineOps.skylineModel(
+            liSky, Seq("l_quantity", "l_extendedprice"), 2))(
+          _.pts.count()) // materialize the point table
+        consume("sky_layers", sky2)(
+          graft.operators.SkylineOps.layerRowsFrom(_, liSky).count())
+        consume("sky_topdom", sky2)(
+          graft.operators.SkylineOps.topDominatingFrom(_, liSky, 10).count())
+        val sky3 = build("sky3_model")(graft.operators.SkylineOps.skylineModel(
+            liSky.filter(col("l_orderkey") % 20 === 0),
+            Seq("l_quantity", "l_extendedprice", "l_discount"), 3))(_.pts.count())
+        consume("sky_skyband", sky3)(graft.operators.SkylineOps.skybandRowsFrom(_,
+          liSky.filter(col("l_orderkey") % 20 === 0), 3).count())
         graft.core.Caches.releaseAll()
       } catch { case e: Throwable =>
         System.err.println(s"[graft.Bench] deploy lane: ${e.getMessage}")

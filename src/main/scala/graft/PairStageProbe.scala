@@ -18,17 +18,10 @@ import org.apache.spark.sql.functions._
   *   3. `cand_sec` — candidate pairs off the WARM sig cache (hot-bucket
   *                   window + bk self-join + distinct);
   *   4. `full_sec` — the production [[graft.operators.DedupOps.minhashNearDups]]
-  *                   count in the same JVM with sr/sig still warm (the
-  *                   CacheManager matches the re-derived plan fragments),
-  *                   so `full_sec − cand_sec` ≈ the verify stage
-  *                   (candidate re-gen is cache-served in both terms);
-  *   5. `fullp_sec` — (r18) the
-  *                   [[graft.operators.DedupOps.minhashNearDupsSizePruned]]
-  *                   twin over the same warm caches — the size-ratio
-  *                   verify-prune A/B; pair count REQUIRED equal to lane
-  *                   4 (the prune is exactness-preserving). Both lanes
-  *                   read the same warm sr/sig, so the back-to-back
-  *                   order costs fullp no cold-cache penalty.
+  *                   count in the same JVM. It computes its band keys
+  *                   and its verify straight from the text, so it reads
+  *                   none of the sr/sig caches of lanes 1–3: it is the
+  *                   whole pairs leg, not a verify-stage increment.
   *
   * Per rep the caches are RELEASED and rebuilt, so stage 1/2 always
   * measure cold builds; counts are required identical across reps.
@@ -80,8 +73,7 @@ object PairStageProbe {
       }
       final case class Stages(srSec: Double, nSr: Long, sigSec: Double,
                               nSig: Long, candSec: Double, nCand: Long,
-                              fullSec: Double, nPairs: Long,
-                              fullpSec: Double)
+                              fullSec: Double, nPairs: Long)
       def runOnce(): Stages = {
         val ops = graft.operators.DedupOps
         val sr = graft.core.Caches.persistTracked(
@@ -92,14 +84,6 @@ object PairStageProbe {
         val (candSec, nCand) = timed(ops.candidatePairsKeyed(sig).count())
         val (fullSec, nPairs) = timed(
           ops.minhashNearDups(docs, "doc_id", 3, 12, 3, 1, 2).count())
-        // r18: the size-ratio verify prune A/B — same warm caches, same
-        // JVM slot shape; counts REQUIRED equal to the unpruned lane
-        // (the prune is exactness-preserving by construction).
-        val (fullpSec, nPairsP) = timed(
-          ops.minhashNearDupsSizePruned(docs, "doc_id", 3, 12, 3, 1, 2)
-            .count())
-        require(nPairsP == nPairs,
-          s"size-pruned pair count diverged: $nPairsP vs $nPairs")
         // Release only the probe's OWN caches (r18, ADVICE): a blanket
         // clearCache() would also evict the persisted `docs` corpus frame
         // (persisted once before the reps loop), so reps >= 2 would
@@ -108,8 +92,7 @@ object PairStageProbe {
         // only ever calls unpersistPipelines, never clearCache).
         ops.unpersistPipelines()
         graft.core.Caches.releaseAll()
-        Stages(srSec, nSr, sigSec, nSig, candSec, nCand, fullSec, nPairs,
-          fullpSec)
+        Stages(srSec, nSr, sigSec, nSig, candSec, nCand, fullSec, nPairs)
       }
       val runs = (0 until reps).map(_ => runOnce())
       val f = runs.head
@@ -121,8 +104,7 @@ object PairStageProbe {
       f"""{"n":$n,"reps":$reps,"sr_sec":${mn(_.srSec)}%.2f,"sr_first":${f.srSec}%.2f,"n_sr":${f.nSr},""" +
         f""""sig_sec":${mn(_.sigSec)}%.2f,"sig_first":${f.sigSec}%.2f,"n_sig":${f.nSig},""" +
         f""""cand_sec":${mn(_.candSec)}%.2f,"cand_first":${f.candSec}%.2f,"n_cand":${f.nCand},""" +
-        f""""full_sec":${mn(_.fullSec)}%.2f,"full_first":${f.fullSec}%.2f,"n_pairs":${f.nPairs},""" +
-        f""""fullp_sec":${mn(_.fullpSec)}%.2f,"fullp_first":${f.fullpSec}%.2f}"""
+        f""""full_sec":${mn(_.fullSec)}%.2f,"full_first":${f.fullSec}%.2f,"n_pairs":${f.nPairs}}"""
     }
 
     val line =

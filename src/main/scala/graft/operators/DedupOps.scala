@@ -7,22 +7,26 @@ import org.apache.spark.sql.functions._
   * and SimHash document signatures.
   *
   * Scale shape (the whole point at 100 TB): candidate generation is a
-  * hash-bucketed self-join on (band, minhash-value) — only documents that
+  * hash-bucketed self-join on the folded band key — only documents that
   * collide in at least one band ever meet, never an all-pairs product. The
-  * verification stage joins the (few) candidate pairs back to their shingle
-  * sets and checks true Jaccard with integer arithmetic. Everything is
-  * builtin column expressions (`xxhash64`, higher-order array functions) —
-  * no UDFs, fully codegen'd, shuffles bounded by signature size × corpus,
-  * not corpus².
+  * MinHash path builds no shingle table: band keys come from one native
+  * pass per document
+  * ([[graft.plans.MinhashBands]]), and each of the (few) candidate pairs
+  * joins its two texts and checks true Jaccard with integer arithmetic
+  * over their exact shingle-set overlap ([[graft.plans.ShingleOverlap]]).
+  * The exact (PPJoin), containment and window operators work on shingle
+  * rows. Everything is builtin or native codegen'd column expressions — no
+  * UDFs; shuffles are bounded by signature size × corpus, not corpus².
   */
 object DedupOps {
 
-  // Cache lifecycle: the near-dup operators persist linear-in-corpus
-  // intermediates (shingle rows, banded signatures) because their plans
-  // consume them 2-3 times; they register with the process-wide
-  // [[graft.core.Caches]] registry (see its scaladoc for the sequential-use
-  // contract) and callers release them AFTER consuming the result via
-  // [[unpersistPipelines]] or the scoped [[withDedupCaches]].
+  // Cache lifecycle: the shingle-row operators (PPJoin, containment,
+  // window coverage) persist linear-in-corpus intermediates (shingle
+  // rows, span tables) because their plans consume them 2-3 times; they
+  // register with the process-wide [[graft.core.Caches]] registry (see its
+  // scaladoc for the sequential-use contract) and callers release them
+  // AFTER consuming the result via [[unpersistPipelines]] or the scoped
+  // [[withDedupCaches]].
   private def cachePersist(df: DataFrame): DataFrame =
     graft.core.Caches.persistTracked(df)
 
@@ -47,18 +51,6 @@ object DedupOps {
     * — `body` must consume its result eagerly; the registered caches are
     * released on the way out, success or failure. */
   def withDedupCaches[T](body: => T): T = graft.core.Caches.scoped(body)
-
-  /** Diagnostic round log for the [[nearDupClusters]] fixpoint loop
-    * (SPARK_GRAFT_CC_LOG=1) — bench/probe instrumentation only. */
-  private val ccLog = sys.env.get("SPARK_GRAFT_CC_LOG").contains("1")
-
-  /** One-shot plan dump of [[nearDupClusters]]' ROUND-UPDATE DataFrame
-    * (SPARK_GRAFT_CC_EXPLAIN=1): the operator's cost lives in the per-round
-    * plan, which the final returned plan hides behind the last checkpoint's
-    * `Scan ExistingRDD` — this prints round 1's formatted plan so the shape
-    * (exchange count, join strategy per round) is auditable. Plan-dump
-    * instrumentation only; never set by the driver. */
-  private val ccExplain = sys.env.get("SPARK_GRAFT_CC_EXPLAIN").contains("1")
 
   /** Default hot-bucket cap for the LSH candidate self-joins ([[candidatePairs]],
     * [[simhashNearDups]], [[graft.operators.VectorOps.cosNearDups]]): a join
@@ -142,6 +134,57 @@ object DedupOps {
     * and exact-Jaccard stages need. */
   def shingleRows(docs: DataFrame, idCol: String, n: Int): DataFrame =
     rawShingleRows(docs, idCol, n).distinct()
+
+  /** The `b` folded MinHash band keys of `text` as `array<bigint>`, from one
+    * native pass over its tokens ([[graft.plans.MinhashBands]]): the keys
+    * [[bandedKeys]] folds from [[rawShingleRows]], bit for bit. Explode it
+    * exactly once ([[textBandKeys]]) — read element-wise, projection
+    * collapse could evaluate it once per reference. */
+  def minhashBands(text: Column, n: Int, b: Int, r: Int): Column = {
+    graft.plans.GraftFunctions.registerCurrent()
+    call_function(graft.plans.GraftFunctions.MinhashBandsName,
+      split(text, " "), lit(n), lit(b), lit(r))
+  }
+
+  /** Folded band-key rows (id, bk) straight from the text — the same rows
+    * as `bandedKeys(rawShingleRows(docs, idCol, n), b, r)` with no shingle
+    * row, no exchange and no aggregate. */
+  def textBandKeys(docs: DataFrame, idCol: String, n: Int, b: Int,
+                   r: Int): DataFrame =
+    graft.plans.GraftFunctions.on(docs)
+      .select(col(idCol).as("id"),
+        explode(minhashBands(col("text"), n, b, r)).as("bk"))
+
+  /** `struct<c_inter, sz_a, sz_b>`: the distinct word-`n`-gram shingle-set
+    * sizes of two texts and of their intersection
+    * ([[graft.plans.ShingleOverlap]]). */
+  def shingleOverlap(textA: Column, textB: Column, n: Int): Column = {
+    graft.plans.GraftFunctions.registerCurrent()
+    call_function(graft.plans.GraftFunctions.ShingleOverlapName,
+      split(textA, " "), split(textB, " "), lit(n))
+  }
+
+  /** Candidate pairs (id_a, id_b) whose shingle-set Jaccard is ≥ num/den
+    * (integer cross-multiplication), verified straight from text: each
+    * candidate joins its two texts — `textsA` (id, text) on id_a, `textsB`
+    * on id_b — and [[shingleOverlap]] counts both sets and their
+    * intersection, so |A∪B| = |A| + |B| − |A∩B|. Rows through the shuffles:
+    * the candidates and the texts, never a corpus-wide shingle table.
+    * Output: (id_a, id_b, c_inter, c_union). */
+  private def verifiedPairs(cand: DataFrame, textsA: DataFrame,
+                            textsB: DataFrame, n: Int, num: Int,
+                            den: Int): DataFrame =
+    cand
+      .join(textsA.select(col("id").as("id_a"), col("text").as("ta")), "id_a")
+      .join(textsB.select(col("id").as("id_b"), col("text").as("tb")), "id_b")
+      // Through a generator, which the threshold filter cannot be pushed
+      // below: a projected struct would be re-inlined into the join
+      // condition once per field reference.
+      .select(col("id_a"), col("id_b"),
+        inline(array(shingleOverlap(col("ta"), col("tb"), n))))
+      .select(col("id_a"), col("id_b"), col("c_inter"),
+        (col("sz_a") + col("sz_b") - col("c_inter")).as("c_union"))
+      .filter(col("c_inter") * den >= col("c_union") * num)
 
   /** SUB-DOCUMENT (window-level) exact dedup, Lee et al. "Deduplicating
     * Training Data Makes Language Models Better" (arXiv:2107.06499) at
@@ -338,7 +381,7 @@ object DedupOps {
     * Candidate pairs sharing NO shingle vanish from the count — harmless
     * by construction: every caller thresholds with num > 0, which a zero
     * intersection can never pass. Output: (id_a, id_b, c_inter). */
-  private def pairIntersections(sr: DataFrame, cand: DataFrame): DataFrame =
+  private[graft] def pairIntersections(sr: DataFrame, cand: DataFrame): DataFrame =
     cand
       .join(sr.as("x"), col("id_a") === col("x.id"))
       .select(col("id_a"), col("id_b"), col("x.s").as("sx"))
@@ -347,7 +390,7 @@ object DedupOps {
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("c_inter"))
 
   /** The longs-only per-doc distinct-shingle size table (id, sz). */
-  private def shingleSizes(sr: DataFrame): DataFrame =
+  private[graft] def shingleSizes(sr: DataFrame): DataFrame =
     sr.groupBy("id").agg(count(lit(1)).as("sz"))
 
   /** One row per id carrying all `k` minhash values (m0..m{k-1}): `k`
@@ -362,8 +405,10 @@ object DedupOps {
     * minima map-side. The previous build exploded a k-struct array per
     * shingle row, a k× row fanout THROUGH the exchange (measured 29 s on
     * the sf0.1 gate, ~2× cut by this shape). An array-typed per-doc
-    * signature expression would be worse still: projection collapse inlines
-    * it and recomputes the shingling once per hash. */
+    * signature expression read element-wise would be worse still:
+    * projection collapse inlines it and recomputes the shingling once per
+    * hash — which is why [[textBandKeys]] computes the keys natively and
+    * consumes them through a single explode. */
   private def minhashAggRow(shingleRows: DataFrame, k: Int): DataFrame =
     shingleRows.groupBy(col("id"))
       .agg(min(xxhash64(lit(0), col("s"))).as("m0"),
@@ -411,9 +456,10 @@ object DedupOps {
         xxhash64((lit(g) +: (0 until r).map(t =>
           col(s"m${g * r + t}"))): _*)): _*)).as("bk"))
 
-  /** [[candidatePairs]] over the folded [[bandedKeys]] — the production
+  /** [[candidatePairs]] over folded band keys (id, bk) — the production
     * candidate stage ([[minhashNearDups]]/[[incrementalDedup]] run this
-    * shape); same hot-bucket cap semantics on the folded key. */
+    * shape over [[textBandKeys]]); same hot-bucket cap semantics on the
+    * folded key. */
   def candidatePairsKeyed(sig: DataFrame,
                           maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val g = dropHotBuckets(sig, Seq("bk"), maxBucket)
@@ -447,89 +493,36 @@ object DedupOps {
       .distinct()
   }
 
-  /** [[candidatePairs]] from raw documents (convenience; no caching). Feeds
-    * the signatures from [[rawShingleRows]]: per-band MIN is duplicate-
-    * invariant, so the candidate-only path pays no distinct shuffle. */
+  /** [[candidatePairs]] from raw documents: [[candidatePairsKeyed]] over
+    * [[textBandKeys]] (no caching, no shingle rows). */
   def minhashCandidates(docs: DataFrame, idCol: String, n: Int,
                         b: Int, r: Int,
                         maxBucket: Int = DefaultMaxBucket): DataFrame =
-    candidatePairsKeyed(bandedKeys(rawShingleRows(docs, idCol, n), b, r),
-      maxBucket)
+    candidatePairsKeyed(textBandKeys(docs, idCol, n, b, r), maxBucket)
 
   /** Verified near-duplicate pairs: LSH candidates whose true shingle-set
     * Jaccard is ≥ num/den (integer cross-multiplication — no float compare).
     * Output: (id_a, id_b, c_inter, c_union).
     *
-    * The shingle rows and the banded signatures are persisted
-    * (MEMORY_AND_DISK) so the text is shingled exactly once: without the
-    * cache, the self-join of the candidate stage evaluates the
-    * scan→shingle→36-hash→min-agg subtree on BOTH sides, and the
-    * verification stage re-shingles a third time — 3 full build pipelines
-    * for one query. Both cached sets are linear in the corpus (distinct
-    * shingles; b rows of r longs per doc) and spill to disk if they outgrow
-    * executor memory. Release them after consuming the result —
-    * [[unpersistPipelines]] / [[withDedupCaches]].
+    * One pipeline, nothing persisted: the band keys explode from one native
+    * pass over each document's tokens ([[textBandKeys]]), the candidate
+    * stage is [[candidatePairsKeyed]] (hot-bucket cap, band-key self-join,
+    * distinct), and each candidate joins its two texts for the exact
+    * overlap ([[verifiedPairs]]). The text is read three times — once for
+    * the keys, once per pair side — and no shingle table, signature
+    * table or size table is ever built, so there is nothing to release.
+    * (Size-ratio pruning has nothing to skip here: the per-pair overlap
+    * reads both shingle sets either way.)
     */
   def minhashNearDups(docs: DataFrame, idCol: String, n: Int, b: Int, r: Int,
                       num: Int, den: Int,
-                      maxBucket: Int = DefaultMaxBucket): DataFrame =
-    minhashNearDupsImpl(docs, idCol, n, b, r, num, den, maxBucket,
-      sizePrune = false)
-
-  /** [[minhashNearDups]] with the SIZE-RATIO verify prune — an
-    * exactness-PRESERVING candidate cut before the intersection probe:
-    * J(A,B) = |A∩B|/|A∪B| ≤ min(|A|,|B|)/max(|A|,|B|) (the intersection
-    * is at most the smaller set, the union at least the larger), so a
-    * candidate whose size ratio already falls below num/den can never
-    * verify and its intersection probe is skipped without counting. Only
-    * pairs the exact count would reject are dropped — output is
-    * row-identical to [[minhashNearDups]] (the prune bound is the PPJoin
-    * length filter, Xiao et al.).
-    *
-    * MEASURED (r18, PairStageProbe `fullp` lane, 10M docs, b=12 r=3
-    * τ=1/2, PAIR_STAGE_r18.json): NEUTRAL at gate shape, leaning
-    * slightly positive — 39.8/43.4 s (min/first) vs 47.1/47.1 unpruned
-    * over the same warm shingle/signature caches. Structurally it
-    * CANNOT be a large win there: banding precision leaves < 0.03% of
-    * candidates prunable (1,000,203 → 999,963 verified), so the probe
-    * mostly shows the two extra size-table joins costing ~nothing
-    * against the warm shingle cache; the 4–7 s edge is within this
-    * box's phase noise and position-confounded (the pruned lane runs
-    * second each rep). Default stays the unpruned path — identical
-    * output by construction, one fewer plan stage; reach for this
-    * variant where banding admits MANY size-skewed false candidates
-    * (low r, aggressive b, containment-like length skew), where the
-    * same bound is the established prefix-filter win. */
-  def minhashNearDupsSizePruned(docs: DataFrame, idCol: String, n: Int,
-                                b: Int, r: Int, num: Int, den: Int,
-                                maxBucket: Int = DefaultMaxBucket): DataFrame =
-    minhashNearDupsImpl(docs, idCol, n, b, r, num, den, maxBucket,
-      sizePrune = true)
-
-  private def minhashNearDupsImpl(docs: DataFrame, idCol: String, n: Int,
-                                  b: Int, r: Int, num: Int, den: Int,
-                                  maxBucket: Int,
-                                  sizePrune: Boolean): DataFrame = {
+                      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     require(num > 0 && den > 0 && num <= den,
       s"Jaccard threshold must be in (0, 1]: $num/$den")
-    val sr  = cacheEager(shingleRows(docs, idCol, n))
-    val sig = cacheEager(bandedKeys(sr, b, r))
-    val sz = shingleSizes(sr)
-    val cand0 = candidatePairsKeyed(sig, maxBucket)
-    val cand =
-      if (!sizePrune) cand0
-      else cand0
-        .join(sz.select(col("id").as("id_a"), col("sz").as("pa")), "id_a")
-        .join(sz.select(col("id").as("id_b"), col("sz").as("pb")), "id_b")
-        .filter(least(col("pa"), col("pb")) * den >=
-          greatest(col("pa"), col("pb")) * num)
-        .select(col("id_a"), col("id_b"))
-    pairIntersections(sr, cand)
-      .join(sz.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sz.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
-      .select(col("id_a"), col("id_b"), col("c_inter"),
-        (col("sz_a") + col("sz_b") - col("c_inter")).as("c_union"))
-      .filter(col("c_inter") * den >= col("c_union") * num)
+    val texts = docs.select(col(idCol).as("id"), col("text"))
+    verifiedPairs(
+      candidatePairsKeyed(textBandKeys(docs, idCol, n, b, r), maxBucket),
+      texts, texts, n, num, den)
   }
 
   /** Exact n-gram-Jaccard near-duplicate pairs — no LSH, no probability —
@@ -867,15 +860,12 @@ object DedupOps {
               coalesce(col("nmin"), col("lbl")),
               coalesce(col("j2"), col("lbl"))).as("lbl"),
             col("lbl").as("old"))
-      if (ccExplain && iter == 0) round.explain("formatted")
       val next = round.localCheckpoint()
       changed = next.filter(col("lbl") =!= col("old")).count()
       labelsRdd.foreach(_.unpersist(blocking = false)) // superseded round
       labels = next.select(col("id"), col("lbl"))
       labelsRdd = ckptRdd(next)
       iter += 1
-      if (ccLog) System.err.println(
-        s"[graft.nearDupClusters] round $iter changed=$changed")
     }
     // The returned plan reads the LAST checkpoint — release it only after
     // the caller consumes the result (unpersistPipelines / withDedupCaches).
@@ -942,17 +932,20 @@ object DedupOps {
     * graph and cluster labels computed ONCE (both persisted via
     * [[graft.core.Caches]]), feeding every downstream surface — keep-lists
     * (`clusters.filter(doc_id === cluster)`), cluster-size histograms,
-    * curation chains — without re-running shingling + banding + collapse
-    * per consumer. Opt-in: the driver gates each re-derive their own chain
-    * by design (gate independence — each query must stand alone against
-    * its oracle); a pipeline that consumes several surfaces builds this
-    * once instead. Consume eagerly, then release via
+    * curation chains — without re-running banding + verify + collapse per
+    * consumer. These two tables are the model's only persisted state:
+    * [[minhashNearDups]] itself keeps no shingle or signature cache.
+    * Opt-in: the gated queries each re-derive their own chain by design
+    * (gate independence — each query must stand alone against its
+    * oracle); a pipeline that consumes several surfaces builds this once
+    * instead. Consume eagerly, then release via
     * [[unpersistPipelines]] / [[withDedupCaches]] like every other
     * pipeline intermediate. */
   final case class NearDupModel(pairs: DataFrame, clusters: DataFrame)
 
-  /** Build a [[NearDupModel]]: [[minhashNearDups]] → persist →
-    * [[nearDupClusters]] over the SAME persisted pair graph → persist. */
+  /** Build a [[NearDupModel]]: [[minhashNearDups]] (from text, nothing
+    * cached inside) → persist → [[nearDupClusters]] over the SAME persisted
+    * pair graph → persist. */
   def nearDupModel(docs: DataFrame, idCol: String, n: Int, b: Int, r: Int,
                    num: Int, den: Int,
                    maxBucket: Int = DefaultMaxBucket): NearDupModel = {
@@ -1167,12 +1160,15 @@ object DedupOps {
     * Scale shape: the exact pass is a LEFT ANTI hash join on the
     * normalized key (both sides pruned to two columns; the NEW side is
     * batch-sized, so AQE broadcasts it against the corpus-sized build).
-    * The fuzzy pass runs ONE banding over the tagged old ∪ new union —
-    * the hot-bucket guard sees COMBINED bucket occupancy, so an old-side
-    * boilerplate cluster cannot fan a new doc out quadratically — and the
-    * band-key equi-join carries the side tags, so only cross-side
-    * candidates materialize (old×old, the overwhelmingly largest pair
-    * population at steady state, never leaves the bucket). */
+    * The fuzzy pass runs ONE banding over the tagged old ∪ new union, its
+    * keys straight from text ([[minhashBands]]) with the side tag riding
+    * along — the hot-bucket guard sees COMBINED bucket occupancy, so an
+    * old-side boilerplate cluster cannot fan a new doc out quadratically —
+    * and the band-key equi-join filters on the side tags, so only
+    * cross-side candidates materialize (old×old, the overwhelmingly
+    * largest pair population at steady state, never leaves the bucket).
+    * Each candidate is verified against its new and old texts
+    * ([[verifiedPairs]]); nothing is persisted. */
   def incrementalDedup(oldDocs: DataFrame, newDocs: DataFrame, idCol: String,
                        n: Int, b: Int, r: Int, num: Int, den: Int,
                        maxBucket: Int = DefaultMaxBucket): DataFrame = {
@@ -1184,27 +1180,21 @@ object DedupOps {
     val exactSurvivors = newKeyed
       .join(oldKeys, Seq("k"), "left_anti").select(col("id"))
     // One banding over the union; ids are disjoint across sides by
-    // contract (same id space, different rows), so the side tag rejoins
-    // by id after the per-id signature aggregation.
+    // contract (same id space, different rows).
     val tagged = oldDocs.select(col(idCol), col("text"), lit(0).as("side"))
       .unionAll(newDocs.select(col(idCol), col("text"), lit(1).as("side")))
-    val sr = cacheEager(shingleRows(tagged, idCol, n))
-    val g = dropHotBuckets(bandedKeys(sr, b, r), Seq("bk"), maxBucket)
-      .join(tagged.select(col(idCol).as("id"), col("side")), "id")
+    val g = dropHotBuckets(
+      graft.plans.GraftFunctions.on(tagged).select(col(idCol).as("id"),
+        col("side"), explode(minhashBands(col("text"), n, b, r)).as("bk")),
+      Seq("bk"), maxBucket)
     val cond = col("a.bk") === col("b.bk") &&
       col("a.side") === 1 && col("b.side") === 0
     val cand = g.as("a").join(g.as("b"), cond)
-      .select(col("a.id").as("id_new"), col("b.id").as("id_old"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    // Same array-free verify as the batch paths: [[pairIntersections]]
-    // counts shared shingles per candidate, sizes give the union.
-    val sz = shingleSizes(sr)
-    val fuzzyDropped = pairIntersections(sr,
-        cand.select(col("id_new").as("id_a"), col("id_old").as("id_b")))
-      .join(sz.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sz.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
-      .filter(col("c_inter") * den >=
-        (col("sz_a") + col("sz_b") - col("c_inter")) * num)
+    def texts(d: DataFrame) = d.select(col(idCol).as("id"), col("text"))
+    val fuzzyDropped = verifiedPairs(cand, texts(newDocs), texts(oldDocs),
+        n, num, den)
       .select(col("id_a").as("id")).distinct()
     exactSurvivors.join(fuzzyDropped, Seq("id"), "left_anti")
       .select(col("id").as(idCol))

@@ -92,6 +92,8 @@ object GraftFunctions {
   val WavWinEnergiesName = "graft_wav_win_energies"
   val BmpCellsName = "graft_bmp_cells"
   val ShinglesName = "graft_shingles"
+  val MinhashBandsName = "graft_minhash_bands"
+  val ShingleOverlapName = "graft_shingle_overlap"
 
   /** The native-function catalog, one entry per expression — shared by
     * the in-process [[register]] path and the `spark.sql.extensions`
@@ -121,7 +123,13 @@ object GraftFunctions {
       (children: Seq[Expression]) => BmpCells.fromChildren(children)),
     (FunctionIdentifier(ShinglesName),
       new ExpressionInfo(classOf[Shingles].getName, ShinglesName),
-      (children: Seq[Expression]) => Shingles.fromChildren(children)))
+      (children: Seq[Expression]) => Shingles.fromChildren(children)),
+    (FunctionIdentifier(MinhashBandsName),
+      new ExpressionInfo(classOf[MinhashBands].getName, MinhashBandsName),
+      (children: Seq[Expression]) => MinhashBands.fromChildren(children)),
+    (FunctionIdentifier(ShingleOverlapName),
+      new ExpressionInfo(classOf[ShingleOverlap].getName, ShingleOverlapName),
+      (children: Seq[Expression]) => ShingleOverlap.fromChildren(children)))
 
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry

@@ -264,6 +264,35 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("dedup_minhash reads text only: no shingle rows, no cache, one overlap per pair") {
+    // Band keys explode from one native pass per document and each
+    // candidate verifies against its two texts: no graft_shingles
+    // generator, no persisted intermediate, and the overlap struct is
+    // evaluated once (not re-inlined into the threshold filter). Shuffles
+    // at this scale: the hot-bucket window's band-key exchange on each
+    // self-join side (the same subtree, so AQE reuses one) and the
+    // candidate distinct; the self-join and both text joins broadcast.
+    val spark = TestSpark.spark
+    // The executed plan (before any stage runs): exchanges are inserted.
+    val plan = graft.queries.PipelineQueries.queries("dedup_minhash")(spark, sf)
+      .queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan
+        case p => p
+      }
+    val tree = plan.treeString
+    graft.operators.DedupOps.unpersistPipelines()
+    assert(!tree.contains("graft_shingles"), s"shingle rows are back:\n$tree")
+    assert(plan.collect {
+      case i: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => i
+    }.isEmpty, s"dedup_minhash persisted an intermediate:\n$tree")
+    assert("graft_shingle_overlap\\(".r.findAllIn(tree).length == 1,
+      s"the overlap must be evaluated once per pair:\n$tree")
+    val exchanges = plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }.length
+    assert(exchanges == 3, s"dedup_minhash exchange count moved ($exchanges):\n$tree")
+  }
+
   // ---- Deploy-lane pins: shared-model CONSUMERS must read the persisted
   // model, never re-train. Structural assertions via SparkPlan.collect,
   // which does NOT descend into an InMemoryTableScan's cached plan — so

@@ -37,35 +37,23 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
     assert(!keys.exists(p => p._1 == 3L || p._2 == 3L), "dissimilar doc paired")
     val exact = pairs.find(p => p._1 == 1L && p._2 == 4L).get
     assert(exact._3 == exact._4, "exact duplicate should have inter == union")
-  }
 
-  test("minhashNearDupsSizePruned equals minhashNearDups while the size-ratio bound engages") {
-    // doc 2's shingles are a strict subset of doc 1's (tokens 1..10 of
-    // 1..40), so single-row bands (r=1) collide them — a CANDIDATE whose
-    // size ratio 8/38 < 1/2 can never verify at τ=1/2: exactly the pair
-    // the prune drops before the intersection probe.
-    val df = docsDF(
-      (1L, (1 to 40).map(i => s"tok$i").mkString(" ")),
-      (2L, (1 to 10).map(i => s"tok$i").mkString(" ")),
-      (3L, (1 to 40).map(i => s"tok$i").mkString(" ")),
-      (4L, (100 to 130).map(i => s"other$i").mkString(" ")))
-    def run(f: (org.apache.spark.sql.DataFrame, String, Int, Int, Int, Int, Int, Int) => org.apache.spark.sql.DataFrame) =
-      DedupOps.withDedupCaches {
-        f(df, "doc_id", 3, 12, 1, 1, 2, Int.MaxValue)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sorted.toSeq
-      }
-    val cand = DedupOps.withDedupCaches {
-      DedupOps.minhashCandidates(df, "doc_id", 3, 12, 1)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    assert(cand.contains((1L, 2L)),
+    // Size-skewed candidate: doc 6's shingles are a strict subset of doc
+    // 5's (tokens 1..10 of 1..40), so single-row bands (r=1) collide them,
+    // but their Jaccard 8/38 < 1/2 must fail the exact verify.
+    val skew = docsDF(
+      (5L, (1 to 40).map(i => s"tok$i").mkString(" ")),
+      (6L, (1 to 10).map(i => s"tok$i").mkString(" ")),
+      (7L, (1 to 40).map(i => s"tok$i").mkString(" ")),
+      (8L, (100 to 130).map(i => s"other$i").mkString(" ")))
+    val cand = DedupOps.minhashCandidates(skew, "doc_id", 3, 12, 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(cand.contains((5L, 6L)),
       s"fixture must make the size-skewed pair a candidate: $cand")
-    val base   = run(DedupOps.minhashNearDups)
-    val pruned = run(DedupOps.minhashNearDupsSizePruned)
-    assert(pruned == base, s"prune changed the verified set: $pruned vs $base")
-    assert(base.exists(p => (p._1, p._2) == ((1L, 3L))), "true dup pair missing")
-    assert(!base.exists(p => (p._1, p._2) == ((1L, 2L))),
-      "size-skewed candidate must fail verification in both paths")
+    val verified = DedupOps.minhashNearDups(skew, "doc_id", 3, 12, 1, 1, 2, Int.MaxValue)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(verified.toSeq == Seq((5L, 7L, 38L, 38L)),
+      s"only the true dup pair verifies: ${verified.toSeq}")
   }
 
   test("jaccardNearDups (prefix-filtered) finds exactly the J >= 1/2 pairs") {
