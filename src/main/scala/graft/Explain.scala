@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Plan inspector: `runMain graft.Explain <sfDir> <query> [query...]` prints
   * each query's formatted plan (what a 1000-executor cluster would run). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(4, logLevel = "ERROR")
     val exec = sys.env.get("GRAFT_EXPLAIN_EXEC").contains("1")
     names.foreach { n =>
       println(s"===== $n =====")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Empirical per-query decomposition (optimization guide §1): runs named
@@ -25,18 +24,8 @@ object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.tail.toSeq else Seq("graph_components")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(32))
 
     case class Job(id: Int, start: Long, var end: Long = 0L,
                    stages: Seq[Int] = Nil)
@@ -86,17 +75,18 @@ object JobProbe {
       // Drain the listener bus before reading aggregates: a fixed sleep is
       // racy on a loaded box (task/job-end events can still be in flight
       // after it, silently undercounting the very queries being probed), so
-      // poll until the (job count, task count) pair is stable across two
-      // consecutive reads, bounded at 5 s.
+      // poll until the (job count, ended-job count, task count) triple is
+      // stable across two consecutive reads, bounded at 5 s. The ended-job
+      // count makes a job-end still in flight reset the check, so no job
+      // is read with end = 0.
+      def progress = (jobs.synchronized((jobs.size, jobs.values.count(_.end != 0))),
+        stages.synchronized(stages.valuesIterator.map(_.tasks).sum))
       var drained = false
       var waitedMs = 0
       while (!drained && waitedMs < 5000) {
-        val before = (jobs.synchronized(jobs.size),
-          stages.synchronized(stages.valuesIterator.map(_.tasks).sum))
+        val before = progress
         Thread.sleep(250); waitedMs += 250
-        val after = (jobs.synchronized(jobs.size),
-          stages.synchronized(stages.valuesIterator.map(_.tasks).sum))
-        drained = before == after
+        drained = before == progress
       }
       val js = jobs.synchronized(jobs.values.toSeq)
       val sumJobs = js.map(j => (j.end - j.start).max(0L)).sum / 1000.0

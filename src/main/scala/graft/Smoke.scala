@@ -1,17 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Local smoke: runs SparkEntry.entry exactly as the driver's t1 check does
   * (rows > 0 on sf0.001). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(4, logLevel = "ERROR")
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")
     assert(n > 0, "entry() returned no rows")

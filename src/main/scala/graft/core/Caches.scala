@@ -24,20 +24,10 @@ object Caches {
   private val liveRdds =
     new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]
 
-  /** Level for [[persistTracked]]: MEMORY_AND_DISK unless overridden via
-    * SPARK_GRAFT_PERSIST_LEVEL ([[org.apache.spark.storage.StorageLevel
-    * .fromString]] names, e.g. MEMORY_AND_DISK_SER). The override is a
-    * BENCH A/B knob (IvfkbProbe's heap-cliff experiment — r18), not a
-    * correctness knob: any level yields identical rows; fail fast on a
-    * typo rather than silently benching the default. */
-  private val trackedLevel: StorageLevel =
-    sys.env.get("SPARK_GRAFT_PERSIST_LEVEL")
-      .map(StorageLevel.fromString).getOrElse(StorageLevel.MEMORY_AND_DISK)
-
-  /** Persist ([[trackedLevel]] — MEMORY_AND_DISK by default) and register
-    * for [[releaseAll]]. */
+  /** Persist at MEMORY_AND_DISK (evicted blocks spill rather than
+    * recompute) and register for [[releaseAll]]. */
   def persistTracked(df: DataFrame): DataFrame = {
-    val p = df.persist(trackedLevel)
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     live.add(p)
     p
   }

@@ -414,15 +414,6 @@ object DedupOps {
       .agg(min(xxhash64(lit(0), col("s"))).as("m0"),
         (1 until k).map(j => min(xxhash64(lit(j), col("s"))).as(s"m$j")): _*)
 
-  /** MinHash signature rows (id, band, hv) — the long-form readout; the
-    * per-shingle work is one aggregation ([[minhashAggRow]]), the k-row
-    * fanout happens after it, on one row per doc. */
-  def minhashSignatureRows(shingleRows: DataFrame, k: Int): DataFrame =
-    minhashAggRow(shingleRows, k)
-      .select(col("id"), explode(array((0 until k).map(j =>
-        struct(lit(j).as("band"), col(s"m$j").as("hv"))): _*)).as("bh"))
-      .select(col("id"), col("bh.band").as("band"), col("bh.hv").as("hv"))
-
   /** Banded LSH keys: fold `b*r` minhash values into `b` bands of `r` hash
     * columns (h0..h{r-1}) each — the equi-join key of the candidate stage.
     * Hash j lands in band j/r, slot j%r; the band rows are exploded from

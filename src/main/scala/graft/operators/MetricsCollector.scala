@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 /** O24 parity: the metrics-collector sink
@@ -46,12 +45,4 @@ object MetricsCollector {
   /** Batch append (the collector's `mode='a'` CSV). */
   def appendBatch(metrics: DataFrame, path: String, jsonCol: String = "value"): Unit =
     toRows(metrics, jsonCol).write.mode("append").option("header", "true").csv(path)
-
-  /** Streaming variant: every micro-batch of result records appends to the
-    * same CSV directory. */
-  def streamWriter(metrics: Dataset[String], path: String): DataStreamWriter[_] =
-    metrics.toDF("value").writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        appendBatch(batch.toDF(), path)
-    }
 }

@@ -3,14 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One SparkSession for the whole (forked) test JVM — never stopped;
-  * the JVM exit tears it down. */
+  * the JVM exit tears it down. Built by the same factory as the mains. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-tests")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(8)
 }
