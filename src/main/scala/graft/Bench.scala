@@ -37,7 +37,7 @@ object Bench {
         cause.foreach(causes += _)
         // Queries that persist intermediates (dedup LSH) would otherwise leak
         // cached partitions into every later measurement.
-        graft.operators.DedupOps.unpersistPipelines()
+        graft.core.Caches.releaseAll()
         spark.catalog.clearCache()
         dt
       }
@@ -156,7 +156,7 @@ object Bench {
           _.clusters.groupBy("cluster").agg(count(lit(1))).count())
         consume("dedup_keep_list", m)(
           _.clusters.filter(col("doc_id") === col("cluster")).count())
-        graft.operators.DedupOps.unpersistPipelines()
+        graft.core.Caches.releaseAll()
         val bm = build("bpe_model")(graft.operators.BpeOps.bpeModel(dd, 8))(
           _.words.count()) // materialize the segmented word cache
         consume("bpe_merges", bm)(graft.operators.BpeOps.mergesOf(_).count())
@@ -220,7 +220,7 @@ object Bench {
         consume("ann_recall_ivfpq_rr", pqr)(p => graft.queries.PipelineQueries.annRecall(
           VectorOps.knnIvfPqResidualRerankFrom(p, ee, "vec_id",
             "embedding", col("vec_id") < 8, 5, 3, 20), ee).count())
-        graft.operators.DedupOps.unpersistPipelines()
+        graft.core.Caches.releaseAll()
         // kNN-GRAPH family: the similarity graph is built ONCE (the cost
         // every graph_* gate pays from scratch) and the persisted edge
         // list feeds each algorithm consumer — what remains per consumer
@@ -246,7 +246,7 @@ object Bench {
               e.select(col("src").as("id_a"), col("dst").as("id_b")))
             .groupBy("cluster").agg(count(lit(1))).count())
         kgEdges.foreach(_.unpersist(blocking = false))
-        graft.operators.DedupOps.unpersistPipelines()
+        graft.core.Caches.releaseAll()
         // Fuzzy-pair family: ONE shingle pass + PPJoin pair graph (+ the
         // estimator signature table) shared by the contamination rollup
         // and the estimator-accuracy readout.
@@ -264,7 +264,7 @@ object Bench {
           .sourcePairMatrix(m.pairs, dd, "doc_id", "source").count())
         consume("minhash_est", fm)(m => graft.operators.DedupOps
           .minhashEstimatesFrom(m.pairs, m.sigs).count())
-        graft.operators.DedupOps.unpersistPipelines()
+        graft.core.Caches.releaseAll()
         // Retrieval family: ONE tokenize+shuffle pass builds the inverted
         // index (posting table + doc lengths + corpus stats); BM25,
         // conjunctive search, the postings browse artifact, and the RRF
@@ -342,11 +342,10 @@ object Bench {
             Seq("l_quantity", "l_extendedprice", "l_discount"), 3))(_.pts.count())
         consume("sky_skyband", sky3)(graft.operators.SkylineOps.skybandRowsFrom(_,
           liSky.filter(col("l_orderkey") % 20 === 0), 3).count())
-        graft.core.Caches.releaseAll()
       } catch { case e: Throwable =>
         System.err.println(s"[graft.Bench] deploy lane: ${e.getMessage}")
       } finally {
-        graft.operators.DedupOps.unpersistPipelines()
+        graft.core.Caches.releaseAll()
         spark.catalog.clearCache()
       }
       (deployEntries.toSeq, causes.toMap)

@@ -70,7 +70,7 @@ object JobProbe {
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      graft.operators.DedupOps.unpersistPipelines()
+      graft.core.Caches.releaseAll()
       spark.catalog.clearCache()
       // Drain the listener bus before reading aggregates: a fixed sleep is
       // racy on a loaded box (task/job-end events can still be in flight

@@ -143,7 +143,7 @@ object ScaleBatch {
         DedupOps.nearDupClusters(docs, "doc_id", pairs)
           .filter(col("cluster") =!= col("doc_id")).count()
       }
-      DedupOps.unpersistPipelines()
+      graft.core.Caches.releaseAll()
 
       // SUB-DOCUMENT leg (round 12): window-level coverage over the same
       // corpus — 17 positioned spans per doc (24 tokens, k=8), so the
@@ -156,7 +156,7 @@ object ScaleBatch {
           .agg(sum(when(col("covered_tokens") > 0, 1L).otherwise(0L)),
             sum(col("covered_tokens"))).head()
       }
-      DedupOps.unpersistPipelines()
+      graft.core.Caches.releaseAll()
 
       // BOILERPLATE leg (round 12, second wave): document-frequency
       // coverage at minDocs=2 over the same corpus. This corpus has no
@@ -169,7 +169,7 @@ object ScaleBatch {
           .agg(sum(when(col("bp_covered_tokens") > 0, 1L).otherwise(0L)),
             sum(col("bp_covered_tokens"))).head()
       }
-      DedupOps.unpersistPipelines()
+      graft.core.Caches.releaseAll()
 
       // CONTAINMENT leg (round 12, second wave): the rare-first
       // prefix ⋈ FULL shingle-rows candidate geometry (the r15

@@ -24,7 +24,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      graft.operators.DedupOps.unpersistPipelines() // free dedup caches
+      graft.core.Caches.releaseAll() // free dedup caches
       spark.catalog.clearCache() // plus anything else query-persisted
     }
     spark.stop()

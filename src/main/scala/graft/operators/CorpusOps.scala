@@ -582,7 +582,7 @@ object CorpusOps {
     require(nShards > 0 && nShards <= 4096 && budget > 0,
       s"bad nShards=$nShards (1..4096) budget=$budget")
     val ordHex = md5(concat(lit("pack:"), col(idCol).cast("string")))
-    // Persisted (release via DedupOps.unpersistPipelines / Caches): the
+    // Persisted (release via Caches.releaseAll): the
     // tokenized rows feed both the bucket-sum branch and the final window —
     // one corpus tokenization, not two.
     val t = graft.core.Caches.persistTracked(docs

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Caches
+
 /** Fuzzy-deduplication operators: MinHash+LSH near-duplicate pair detection
   * and SimHash document signatures.
   *
@@ -25,32 +27,12 @@ object DedupOps {
   // rows, span tables) because their plans consume them 2-3 times; they
   // register with the process-wide [[graft.core.Caches]] registry (see its
   // scaladoc for the sequential-use contract) and callers release them
-  // AFTER consuming the result via [[unpersistPipelines]] or the scoped
-  // [[withDedupCaches]].
-  private def cachePersist(df: DataFrame): DataFrame =
-    graft.core.Caches.persistTracked(df)
-
-  // Eager variant for intermediates consumed by SEVERAL independent
-  // downstream shuffle stages: AQE materializes those stages concurrently,
-  // and a still-lazy cache is then computed once per racing stage (the
-  // block store keeps one copy but each stage pays the full upstream
-  // pipeline — JobProbe measured the containment gate's shingle pipeline
-  // evaluated 3× in parallel, ~13 s task time each at sf0.1). See
-  // [[graft.core.Caches.persistEagerTracked]].
-  private def cacheEager(df: DataFrame): DataFrame =
-    graft.core.Caches.persistEagerTracked(df)
-
-  /** Unpersist every intermediate graft operators have persisted so far.
-    * Call after consuming a near-dup/k-means result (count/collect/write);
-    * long-lived sessions that skip it accumulate cached shingle sets — disk
-    * blocks are not LRU-evicted. Plans built from the released DataFrames
-    * stay correct (they recompute). */
-  def unpersistPipelines(): Unit = graft.core.Caches.releaseAll()
-
-  /** Scoped cache lifecycle: `withDedupCaches { minhashNearDups(...).count() }`
-    * — `body` must consume its result eagerly; the registered caches are
-    * released on the way out, success or failure. */
-  def withDedupCaches[T](body: => T): T = graft.core.Caches.scoped(body)
+  // AFTER consuming the result via [[graft.core.Caches.releaseAll]] or the
+  // scoped [[graft.core.Caches.scoped]]. Intermediates consumed by SEVERAL
+  // independent downstream shuffle stages persist eagerly
+  // ([[graft.core.Caches.persistEagerTracked]]): AQE materializes those
+  // stages concurrently, and a still-lazy cache is then computed once per
+  // racing stage.
 
   /** Default hot-bucket cap for the LSH candidate self-joins ([[candidatePairs]],
     * [[simhashNearDups]], [[graft.operators.VectorOps.cosNearDups]]): a join
@@ -230,7 +212,7 @@ object DedupOps {
     // 10M-doc envelope cell spills it), and the binary form cuts the
     // persisted row roughly a third with identical equality semantics.
     // Persisted — consumed twice (occurrence counts + the join back).
-    val sp = cacheEager(
+    val sp = Caches.persistEagerTracked(
       graft.plans.GraftFunctions.on(docs)
         .select(col(idCol).as("doc_id"),
           posexplode(shingles(col("text"), k)))
@@ -278,7 +260,7 @@ object DedupOps {
     require(k >= 2 && k <= 1000, s"window width out of range: $k")
     import org.apache.spark.sql.expressions.Window
     // Same binary-digest span table as [[duplicatedSpanCoverage]].
-    val sp = cacheEager(
+    val sp = Caches.persistEagerTracked(
       graft.plans.GraftFunctions.on(docs)
         .select(col(idCol).as("doc_id"),
           posexplode(shingles(col("text"), k)))
@@ -339,7 +321,7 @@ object DedupOps {
     require(minDocs >= 2, s"minDocs must be >= 2: $minDocs")
     import org.apache.spark.sql.expressions.Window
     // Same binary-digest span table as [[duplicatedSpanCoverage]].
-    val sp = cacheEager(
+    val sp = Caches.persistEagerTracked(
       graft.plans.GraftFunctions.on(docs)
         .select(col(idCol).as("doc_id"),
           posexplode(shingles(col("text"), k)))
@@ -540,12 +522,12 @@ object DedupOps {
     * The distinct shingle rows are persisted (MEMORY_AND_DISK): they feed
     * the frequency pass, the prefix build, and both verification joins —
     * four consumers of one linear-in-corpus build. Release after consuming
-    * the result — [[unpersistPipelines]] / [[withDedupCaches]].
+    * the result — [[Caches.releaseAll]] / [[Caches.scoped]].
     */
   def jaccardNearDups(docs: DataFrame, idCol: String, n: Int,
                       num: Int, den: Int): DataFrame =
     jaccardNearDupsFromShingles(
-      cacheEager(shingleRows(docs, idCol, n)), num, den)
+      Caches.persistEagerTracked(shingleRows(docs, idCol, n)), num, den)
 
   /** [[jaccardNearDups]] from an already-built (and persisted) distinct
     * shingle table — the stage split that lets a shared-model pipeline
@@ -571,7 +553,7 @@ object DedupOps {
     // Persisted: the candidate self-join would otherwise recompute the whole
     // frequency+rank pipeline on BOTH sides. rnk/sz ride into the cache for
     // the positional filter below.
-    val prefix = cacheEager(
+    val prefix = Caches.persistEagerTracked(
       sr.join(dfreq, "s")
         .select(col("id"), col("s"),
           row_number().over(ordered).as("rnk"),
@@ -671,7 +653,7 @@ object DedupOps {
     require(num > 0 && den > 0 && num <= den,
       s"containment threshold must be in (0, 1]: $num/$den")
     import org.apache.spark.sql.expressions.Window
-    val sr = cacheEager(shingleRows(docs, idCol, n))
+    val sr = Caches.persistEagerTracked(shingleRows(docs, idCol, n))
     // r16: the df / prefix / candidate stages key on xxhash64(s) — ONE
     // long instead of the n-word shingle string, on both sides of every
     // corpus-wide exchange in the candidate geometry (the bandedKeys
@@ -733,7 +715,7 @@ object DedupOps {
     * est_matches ∈ 0..k). */
   def minhashEstimates(docs: DataFrame, idCol: String, n: Int, k: Int,
                        num: Int, den: Int): DataFrame = {
-    val sr = cacheEager(shingleRows(docs, idCol, n))
+    val sr = Caches.persistEagerTracked(shingleRows(docs, idCol, n))
     minhashEstimatesFrom(jaccardNearDupsFromShingles(sr, num, den),
       mdSignatures(sr, k))
   }
@@ -785,7 +767,7 @@ object DedupOps {
     * count shrinks. One step per materialized round is the right shape.)
     * The driver-side loop carries only a change counter, never data. The corpus joins in exactly once, at the
     * end, to label singletons. Caches are registered for
-    * [[unpersistPipelines]].
+    * [[Caches.releaseAll]].
     *
     * Each round's label table is an EAGER `localCheckpoint`, not a plain
     * persist: the iteration references `labels` three times per round, so a
@@ -799,7 +781,7 @@ object DedupOps {
     * lineage to replay) — the standard iterative-algorithm trade, and cheap
     * at this table's size. Checkpoint storage sits below the CacheManager,
     * so rounds are freed explicitly: each superseded round in-loop, the
-    * final one via [[graft.core.Caches]] on [[unpersistPipelines]]. The
+    * final one via [[graft.core.Caches]] on [[Caches.releaseAll]]. The
     * iterative loop is batch-only by contract.
     *
     * Ids keep their native (orderable) type end-to-end — no silent cast.
@@ -808,14 +790,14 @@ object DedupOps {
     // Cache the directed pair list BEFORE mirroring it: both unionAll
     // branches would otherwise each evaluate the full (expensive, uncached)
     // pair-detection subtree.
-    val fwd = cachePersist(pairs.select(col("id_a").as("a"), col("id_b").as("b")))
-    val edges = cachePersist(fwd.unionAll(
+    val fwd = Caches.persistTracked(pairs.select(col("id_a").as("a"), col("id_b").as("b")))
+    val edges = Caches.persistTracked(fwd.unionAll(
       fwd.select(col("b").as("a"), col("a").as("b"))))
     // The checkpoint's backing storage lives below the CacheManager, so it
     // must be freed explicitly: superseded rounds in-loop (their data has
     // already fed the next round's materialization), the final round via
     // the Caches registry after the caller consumes the result.
-    def ckptRdd(df: DataFrame) = graft.core.Caches.checkpointRdd(df)
+    def ckptRdd(df: DataFrame) = Caches.checkpointRdd(df)
     // Seed with the first propagation already applied: lbl₀ = min(id,
     // neighbors) — one fewer fixpoint round than an identity start.
     var labels = edges.groupBy("a")
@@ -859,8 +841,8 @@ object DedupOps {
       iter += 1
     }
     // The returned plan reads the LAST checkpoint — release it only after
-    // the caller consumes the result (unpersistPipelines / withDedupCaches).
-    labelsRdd.foreach(graft.core.Caches.trackRdd)
+    // the caller consumes the result (Caches.releaseAll / Caches.scoped).
+    labelsRdd.foreach(Caches.trackRdd)
     // A silent non-converged result would mislabel clusters; 50 rounds
     // covers any pathological dup-graph diameter under pointer doubling
     // (2^50 hops), so running out means the input is broken — fail loudly,
@@ -930,7 +912,7 @@ object DedupOps {
     * (gate independence — each query must stand alone against its
     * oracle); a pipeline that consumes several surfaces builds this once
     * instead. Consume eagerly, then release via
-    * [[unpersistPipelines]] / [[withDedupCaches]] like every other
+    * [[Caches.releaseAll]] / [[Caches.scoped]] like every other
     * pipeline intermediate. */
   final case class NearDupModel(pairs: DataFrame, clusters: DataFrame)
 
@@ -940,9 +922,9 @@ object DedupOps {
   def nearDupModel(docs: DataFrame, idCol: String, n: Int, b: Int, r: Int,
                    num: Int, den: Int,
                    maxBucket: Int = DefaultMaxBucket): NearDupModel = {
-    val pairs = graft.core.Caches.persistTracked(
+    val pairs = Caches.persistTracked(
       minhashNearDups(docs, idCol, n, b, r, num, den, maxBucket))
-    val clusters = graft.core.Caches.persistTracked(
+    val clusters = Caches.persistTracked(
       nearDupClusters(docs, idCol, pairs))
     NearDupModel(pairs, clusters)
   }
@@ -954,20 +936,20 @@ object DedupOps {
     * (id_a, id_b, c_inter, c_union), and [[sigs]] the lazily-persisted
     * k-slot md5-fold signature table ([[mdSignatures]]) for estimator
     * readouts. Same release contract as [[NearDupModel]]
-    * ([[unpersistPipelines]] / [[withDedupCaches]] after consuming). */
+    * ([[Caches.releaseAll]] / [[Caches.scoped]] after consuming). */
   final case class FuzzyPairModel(shingles: DataFrame, pairs: DataFrame,
                                   k: Int) {
     lazy val sigs: DataFrame =
-      graft.core.Caches.persistTracked(mdSignatures(shingles, k))
+      Caches.persistTracked(mdSignatures(shingles, k))
   }
 
   /** Build a [[FuzzyPairModel]]: shingle ONCE → persist →
     * [[jaccardNearDupsFromShingles]] → persist; signatures on demand. */
   def fuzzyPairModel(docs: DataFrame, idCol: String, n: Int,
                      num: Int, den: Int, k: Int = 36): FuzzyPairModel = {
-    val sr = cacheEager(shingleRows(docs, idCol, n))
+    val sr = Caches.persistEagerTracked(shingleRows(docs, idCol, n))
     FuzzyPairModel(sr,
-      graft.core.Caches.persistTracked(
+      Caches.persistTracked(
         jaccardNearDupsFromShingles(sr, num, den)), k)
   }
 
@@ -1119,7 +1101,7 @@ object DedupOps {
     }
     val m = blocks - maxDist
     val combos = (0 until blocks).combinations(m).toSeq
-    val sig = cacheEager(sig0.select(col("id"), col("h")))
+    val sig = Caches.persistEagerTracked(sig0.select(col("id"), col("h")))
     val exploded = dropHotBuckets(
       sig.select(col("id"), col("h"),
         explode(array(combos.zipWithIndex.map { case (bs, ci) =>

@@ -64,8 +64,8 @@ object GraphOps {
     * consuming twice. For iters ≥ ckptEvery the FINAL round is
     * checkpointed too, so the returned frame is a cheap block read that
     * survives repeated consumption — but those blocks are registered
-    * with [[graft.core.Caches]], so `Caches.releaseAll()` /
-    * [[DedupOps.unpersistPipelines]] BEFORE consuming the result frees
+    * with [[graft.core.Caches]], so `Caches.releaseAll()` BEFORE
+    * consuming the result frees
     * them and the read FAILS (lineage is truncated by design; it cannot
     * recompute). Consume, then release — the registry's contract. */
   def pageRank(edges: DataFrame, iters: Int,

@@ -57,64 +57,32 @@ object IndexOps {
     * and the corpus statistics enter the plan as literals (same integer
     * score formula, bit-for-bit). */
   def bm25From(m: IndexModel, terms: Seq[String], topN: Int): DataFrame = {
-    require(terms.nonEmpty && terms.distinct.size == terms.size,
-      "terms must be non-empty and distinct")
-    require(topN >= 1 && topN <= 10000, s"topN out of range: $topN")
     require(m.nDocs > 0 && m.tTotal > 0, "bm25From over an empty index")
-    val matched = m.td.filter(col("t").isin(terms: _*))
-    val dfreq = matched.groupBy("t").agg(count(lit(1)).as("df"))
-    val scored = matched
-      .join(m.dl, "doc_id")
-      .join(broadcast(dfreq), "t")
-      .withColumn("idf",
-        (length(bin(expr(s"(4 * ${m.nDocs}) div (2 * df + 1)"))) - 1)
-          .cast("long"))
-      .withColumn("contrib",
-        expr(s"(idf * 44 * ${m.tTotal} * tf * 1000) div " +
-          s"(20 * ${m.tTotal} * tf + 6 * ${m.tTotal} + 18 * dl * ${m.nDocs})"))
-      .groupBy("doc_id").agg(sum("contrib").as("score"))
-    scored.orderBy(col("score").desc, col("doc_id")).limit(topN)
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("score").desc, col("doc_id"))))
-      .select(col("doc_id"), col("score"), col("rnk").cast("long").as("rnk"))
+    bm25Of(m.td, m.dl, terms, topN)(
+      _.withColumn("n_docs", lit(m.nDocs)).withColumn("t_total", lit(m.tTotal)))
   }
 
   /** [[conjunctive]] against a pre-built [[IndexModel]]. */
   def conjunctiveFrom(m: IndexModel, terms: Seq[String],
-                      minTf: Long = 1L): DataFrame = {
-    require(terms.nonEmpty && terms.distinct.size == terms.size,
-      "terms must be non-empty and distinct")
-    m.td.filter(col("t").isin(terms: _*) && col("tf") >= minTf)
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("k"), sum("tf").as("total_tf"))
-      .filter(col("k") === terms.size)
-      .select(col("doc_id"), col("total_tf"))
-  }
+                      minTf: Long = 1L): DataFrame =
+    conjunctiveOf(m.td, terms, minTf)
 
   /** [[postings]] against a pre-built [[IndexModel]]. */
-  def postingsFrom(m: IndexModel, minDf: Long, cap: Int): DataFrame = {
-    require(cap >= 1 && cap <= 1000, s"cap must be in 1..1000: $cap")
-    val w = Window.partitionBy("t").orderBy("doc_id")
-    val capped = m.td
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= cap)
-      .groupBy("t")
-      .agg(concat_ws(",", array_sort(collect_list(col("doc_id"))))
-        .as("sample_docs"))
-    m.td.groupBy("t")
-      .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
-      .filter(col("df") >= minDf)
-      .join(capped, "t")
-  }
+  def postingsFrom(m: IndexModel, minDf: Long, cap: Int): DataFrame =
+    postingsOf(m.td, minDf, cap)
 
   /** Index statistics + capped posting list per token: document frequency,
     * collection frequency, and the `cap` lowest doc_ids as a comma-joined
     * string (bounded browse artifact). Tokens below `minDf` are dropped.
     * Output: (t, df, cf, sample_docs). */
   def postings(docs: DataFrame, idCol: String, minDf: Long,
-               cap: Int): DataFrame = {
+               cap: Int): DataFrame =
+    postingsOf(postingsBase(docs, idCol), minDf, cap)
+
+  /** The one body of [[postings]] / [[postingsFrom]] over a posting table
+    * `td` (t, doc_id, tf). */
+  private def postingsOf(td: DataFrame, minDf: Long, cap: Int): DataFrame = {
     require(cap >= 1 && cap <= 1000, s"cap must be in 1..1000: $cap")
-    val td = postingsBase(docs, idCol)
     val w = Window.partitionBy("t").orderBy("doc_id")
     val capped = td
       .withColumn("_rn", row_number().over(w))
@@ -159,19 +127,26 @@ object IndexOps {
     * docs. Output: (doc_id, score, rnk) ranked (score desc, doc_id). */
   def bm25(docs: DataFrame, idCol: String, terms: Seq[String],
            topN: Int): DataFrame = {
-    require(terms.nonEmpty && terms.distinct.size == terms.size,
-      "terms must be non-empty and distinct")
-    require(topN >= 1 && topN <= 10000, s"topN out of range: $topN")
     val td = graft.core.Caches.persistTracked(postingsBase(docs, idCol))
     val dl = td.groupBy("doc_id").agg(sum("tf").as("dl"))
     val stats = docs.agg(count(lit(1)).as("n_docs"))
       .crossJoin(td.agg(sum("tf").as("t_total")))
+    bm25Of(td, dl, terms, topN)(_.crossJoin(broadcast(stats)))
+  }
+
+  /** The one body of [[bm25]] / [[bm25From]] over postings `td`
+    * (t, doc_id, tf) and lengths `dl` (doc_id, dl); `withStats` adds the
+    * corpus statistics as columns n_docs and t_total to the matched
+    * postings. */
+  private def bm25Of(td: DataFrame, dl: DataFrame, terms: Seq[String],
+                     topN: Int)(withStats: DataFrame => DataFrame): DataFrame = {
+    requireTerms(terms)
+    require(topN >= 1 && topN <= 10000, s"topN out of range: $topN")
     val matched = td.filter(col("t").isin(terms: _*))
     val dfreq = matched.groupBy("t").agg(count(lit(1)).as("df"))
-    val scored = matched
-      .join(dl, "doc_id")
-      .join(broadcast(dfreq), "t")
-      .crossJoin(broadcast(stats))
+    val scored = withStats(matched
+        .join(dl, "doc_id")
+        .join(broadcast(dfreq), "t"))
       .withColumn("idf",
         (length(bin(expr("(4 * n_docs) div (2 * df + 1)"))) - 1).cast("long"))
       .withColumn("contrib",
@@ -224,14 +199,22 @@ object IndexOps {
     * frequency >= `minTf`. Output: (doc_id, total_tf) — total occurrences
     * of probe terms in the matched document. */
   def conjunctive(docs: DataFrame, idCol: String, terms: Seq[String],
-                  minTf: Long = 1L): DataFrame = {
-    require(terms.nonEmpty && terms.distinct.size == terms.size,
-      "terms must be non-empty and distinct")
-    postingsBase(docs, idCol)
-      .filter(col("t").isin(terms: _*) && col("tf") >= minTf)
+                  minTf: Long = 1L): DataFrame =
+    conjunctiveOf(postingsBase(docs, idCol), terms, minTf)
+
+  /** The one body of [[conjunctive]] / [[conjunctiveFrom]] over a posting
+    * table `td` (t, doc_id, tf). */
+  private def conjunctiveOf(td: DataFrame, terms: Seq[String],
+                            minTf: Long): DataFrame = {
+    requireTerms(terms)
+    td.filter(col("t").isin(terms: _*) && col("tf") >= minTf)
       .groupBy("doc_id")
       .agg(count(lit(1)).as("k"), sum("tf").as("total_tf"))
       .filter(col("k") === terms.size)
       .select(col("doc_id"), col("total_tf"))
   }
+
+  private def requireTerms(terms: Seq[String]): Unit =
+    require(terms.nonEmpty && terms.distinct.size == terms.size,
+      "terms must be non-empty and distinct")
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.SkylineAgg.skyline_agg
@@ -16,15 +17,23 @@ import graft.functions.SkylineStats.skyline_stats
   * global BNL merge — reference: `java/org.main/FlinkSkyline.java:162-174`).
   *
   * Scale design (100 TB): the frontier is usually tiny relative to the input
-  * (≪ 1% for realistic distributions), so every operator here does one full
+  * (≪ 1% for realistic distributions), so [[skylineRows]] does one full
   * scan to produce the frontier (map-side partial aggregation ⇒ O(skyline)
   * shuffle bytes per partition), then a second scan with a semi-join to
   * recover the original duplicate-preserving rows. The join strategy is left
   * to AQE: when the frontier is small (the common case) it becomes a runtime
   * broadcast join; for anti-correlated high-dim data the frontier can be
   * huge (the reference's own 4D runs blow up — BASELINE.md 4D row), and a
-  * forced broadcast would kill the driver, so no hint is forced. No
-  * full-data shuffle anywhere; both scans are codegen'd column pipelines.
+  * forced broadcast would kill the driver, so no hint is forced.
+  *
+  * The onion extensions (layers, k-skyband, top-k dominating) share ONE
+  * shape. One peel builds the first k layers as a DISTINCT point table
+  * (k frontier scans, each layer's points anti-joined out of the rest
+  * before the next). One body per query then answers from that point table
+  * with a single corpus scan: the `*From` consumers over a
+  * [[SkylineModel]]'s persisted table, the one-shot operators over an
+  * unpersisted peel. No full-data shuffle anywhere; every scan is a
+  * codegen'd column pipeline.
   */
 object SkylineOps {
 
@@ -47,48 +56,48 @@ object SkylineOps {
     df.select(dims.map(col): _*)
       .join(frontier(df, dims), dims, "left_semi")
 
+  /** [[frontier]] cast back from the aggregate's double vector to `df`'s
+    * column types, so the points equi-join the input again. */
+  private def typedFrontier(df: DataFrame, dims: Seq[String]): DataFrame = {
+    val types = df.select(dims.map(col): _*).schema
+      .fields.map(f => f.name -> f.dataType).toMap
+    frontier(df, dims).select(dims.map(c => col(c).cast(types(c)).as(c)): _*)
+  }
+
+  /** Rows of alias `b` dominate rows of alias `a` over `dims`: ≤ on every
+    * dimension and < on at least one (minimization). */
+  private def dominates(b: String, a: String, dims: Seq[String]): Column =
+    dims.map(c => col(s"$b.$c") <= col(s"$a.$c")).reduce(_ && _) &&
+      dims.map(c => col(s"$b.$c") < col(s"$a.$c")).reduce(_ || _)
+
+  /** The onion peel: the first `layers` skyline layers of `df`'s DISTINCT
+    * points as one unpersisted table (dims..., layer). Layer l is the
+    * frontier of what layers 1..l−1 left behind: one [[frontier]]
+    * aggregation scan (O(frontier) shuffle bytes) after anti-joining the
+    * earlier layers' points out. Layers are disjoint, so the union needs
+    * no dedup. `layers` is a small constant by use case (the onion is
+    * walked a few levels deep, never peeled to exhaustion), which bounds
+    * the anti-join chain. */
+  private def peel(df: DataFrame, dims: Seq[String], layers: Int): DataFrame = {
+    var rest = df.select(dims.map(col): _*)
+    (1 to layers).map { l =>
+      val sky = typedFrontier(rest, dims)
+      if (l < layers) rest = rest.join(sky, dims, "left_anti")
+      sky.withColumn("layer", lit(l.toLong))
+    }.reduce(_ unionAll _)
+  }
+
   /** TOP-K DOMINATING skyline points (the frontier restriction of the
     * top-k dominating query, Yiu & Mamoulis, VLDB'07 — "which Pareto
     * options matter MOST"): each DISTINCT skyline point scored by the
     * number of input rows it strictly dominates, ranked by (score desc,
     * dims asc). Output: dims..., dom_cnt, rnk ≤ k.
     *
-    * Scale shape: the frontier is small by nature (it shrinks as dominance
-    * gets easier), so it broadcasts, and scoring is ONE corpus scan through
-    * a broadcast nested-loop join — O(n·|frontier|) comparisons with
-    * nothing corpus-sized shuffled; the final rank windows over frontier-
-    * sized data only. If a (high-dimensional) frontier ever outgrows
-    * broadcast, pre-filter with [[gridPrefilter]] before scoring.
-    */
+    * Scale shape: [[topDominatingFrom]] over a one-layer peel, i.e. the
+    * frontier in one scan, then one corpus scan to score it. */
   def topDominatingSkyline(df: DataFrame, dims: Seq[String], k: Int): DataFrame = {
     require(k >= 1, s"topDominatingSkyline needs k >= 1: k=$k")
-    // frontier() IS the distinct point set in one scan — going through
-    // skylineRows().distinct() would add a second corpus scan + semi-join
-    // only to dedup back to it. Its dims come back double-cast (the
-    // aggregate's vector type), so cast back to the input column types.
-    val dtypes = df.select(dims.map(col): _*).schema
-      .fields.map(f => f.name -> f.dataType).toMap
-    val sky = frontier(df, dims)
-      .select(dims.map(c => col(c).cast(dtypes(c)).as(c)): _*)
-    val le = dims.map(c => col(s"s.$c") <= col(s"r.$c")).reduce(_ && _)
-    val lt = dims.map(c => col(s"s.$c") < col(s"r.$c")).reduce(_ || _)
-    // Inner scoring join with the FRONTIER broadcast (the corpus streams
-    // through it once); skyline points dominating nothing re-enter with a
-    // zero count via a frontier-sized left join afterwards — a left-outer
-    // scoring join would have to preserve the broadcast side, which Spark
-    // (rightly) refuses to plan as a broadcast.
-    val scored = df.select(dims.map(col): _*).as("r")
-      .join(broadcast(sky.as("s")), le && lt)
-      .groupBy(dims.map(c => col(s"s.$c").as(c)): _*)
-      .agg(count(lit(1)).as("dom_cnt"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("dom_cnt").desc +: dims.map(col): _*)
-    sky.join(scored, dims, "left")
-      .select(dims.map(col) :+ coalesce(col("dom_cnt"), lit(0L)).as("dom_cnt"): _*)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(dims.map(col) :+ col("dom_cnt") :+
-        col("rnk").cast("long").as("rnk"): _*)
+    topDominatingFrom(SkylineModel(dims, 1, peel(df, dims, 1)), df, k)
   }
 
   /** SKYLINE LAYERS (onion peeling): layer 1 is the frontier, layer i the
@@ -98,29 +107,13 @@ object SkylineOps {
     * duplicate rows of a layer point all tagged with that layer
     * (SURVEY §1.2 duplicate semantics per layer).
     *
-    * Scale shape: each layer is one [[frontier]] aggregation scan (local
-    * skylines partial-combine map-side, O(frontier) bytes shuffle) plus a
-    * semi/anti join against the frontier point set — AQE broadcasts it
-    * when small, exactly like [[skylineRows]]. `layers` is a small
-    * constant by use case (the onion is walked a few levels deep, never
-    * peeled to exhaustion), which also bounds the anti-join lineage chain.
-    */
+    * Scale shape: [[layerRowsFrom]] over an unpersisted peel — `layers`
+    * frontier scans build the point table, then one corpus scan joins to
+    * it. */
   def skylineLayerRows(df: DataFrame, dims: Seq[String], layers: Int): DataFrame = {
     require(layers >= 1 && layers <= 8,
       s"layers must be in 1..8 (peel-to-exhaustion is not the use case): $layers")
-    val dtypes = df.select(dims.map(col): _*).schema
-      .fields.map(f => f.name -> f.dataType).toMap
-    var rest = df.select(dims.map(col): _*)
-    var out: Option[DataFrame] = None
-    for (l <- 1 to layers) {
-      val sky = frontier(rest, dims)
-        .select(dims.map(c => col(c).cast(dtypes(c)).as(c)): _*)
-      val rows = rest.join(sky, dims, "left_semi")
-        .withColumn("layer", lit(l.toLong))
-      out = Some(out.fold(rows)(_.unionAll(rows)))
-      if (l < layers) rest = rest.join(sky, dims, "left_anti")
-    }
-    out.get
+    layerRowsFrom(SkylineModel(dims, layers, peel(df, dims, layers)), df)
   }
 
   /** k-SKYBAND: all rows dominated by FEWER than `k` distinct points — the
@@ -132,47 +125,16 @@ object SkylineOps {
     * Scale shape — never an all-pairs dominator count: dominance strictly
     * decreases the onion layer, so (a) the k-skyband is contained in the
     * first k skyline layers, and (b) every dominator of a first-k-layers
-    * point lies in those same layers. So the corpus is touched only by k
-    * [[frontier]] aggregation scans (O(frontier) shuffle bytes each) plus
-    * the final duplicate-recovering semi-join; the quadratic dominator
-    * count runs on the candidate POINT set only (frontier-scale × k,
-    * broadcast both sides), never on the corpus.
+    * point lies in those same layers. So this is [[skybandRowsFrom]] over
+    * a k-layer [[skylineModel]]: the corpus is touched by the k peel scans
+    * and one duplicate-recovering join, and the quadratic dominator count
+    * runs on the candidate POINT set only. The model is persisted (its
+    * points feed both sides of the dominator join); release it via
+    * [[graft.core.Caches.releaseAll]] after consuming the result.
     */
   def skybandRows(df: DataFrame, dims: Seq[String], k: Int): DataFrame = {
     require(k >= 1 && k <= 8, s"k must be in 1..8 (the top-k use case): $k")
-    val dtypes = df.select(dims.map(col): _*).schema
-      .fields.map(f => f.name -> f.dataType).toMap
-    // Peel k layers of DISTINCT points (disjoint by construction — their
-    // union needs no dedup).
-    var rest = df.select(dims.map(col): _*)
-    var cand: Option[DataFrame] = None
-    for (l <- 1 to k) {
-      val sky = frontier(rest, dims)
-        .select(dims.map(c => col(c).cast(dtypes(c)).as(c)): _*)
-      cand = Some(cand.fold(sky)(_.unionAll(sky)))
-      if (l < k) rest = rest.join(sky, dims, "left_anti")
-    }
-    // Persisted: the candidate set feeds both sides of the dominator join
-    // AND the duplicate-recovery join — without the cache each consumer
-    // re-executes the whole k-scan peel chain. Registered with
-    // [[graft.core.Caches]]; release after consuming the result.
-    val pts = graft.core.Caches.persistTracked(cand.get)
-    val le = dims.map(c => col(s"b.$c") <= col(s"a.$c")).reduce(_ && _)
-    val lt = dims.map(c => col(s"b.$c") < col(s"a.$c")).reduce(_ || _)
-    // Distinct-dominator count over the candidate point set (dominators of
-    // a candidate are themselves candidates — see scaladoc). Left join so
-    // dominated-by-nobody frontier points keep count 0.
-    val counted = pts.as("a")
-      .join(broadcast(pts.as("b")), le && lt, "left")
-      .groupBy(dims.map(c => col(s"a.$c").as(c)): _*)
-      .agg(count(col(s"b.${dims.head}")).as("dom_cnt"))
-      .filter(col("dom_cnt") < k)
-    // Duplicate recovery: equi-join back to the corpus — AQE broadcasts the
-    // candidate side when small (the common case; no forced hint for the
-    // same high-dim blow-up reason as [[skylineRows]]).
-    df.select(dims.map(col): _*)
-      .join(counted, dims)
-      .select(dims.map(col) :+ col("dom_cnt"): _*)
+    skybandRowsFrom(skylineModel(df, dims, k), df, k)
   }
 
   /** Grouped skyline: non-dominated rows within each group. One shuffle on
@@ -191,64 +153,49 @@ object SkylineOps {
   }
 
   /** The skyline family's shared DEPLOY artifact: the first `layers`
-    * onion layers as one persisted DISTINCT point table (dims…, layer) —
-    * built with the same peel chain as [[skylineLayerRows]] /
-    * [[skybandRows]], materialized ONCE; the per-query consumers
+    * onion layers as one DISTINCT point table (dims…, layer). Built by
+    * [[skylineModel]] it is persisted ONCE, and the per-query consumers
     * ([[layerRowsFrom]], [[skybandRowsFrom]], [[topDominatingFrom]]) are
     * then point-table joins and one corpus scan each, never a re-peel.
-    * Point tables are frontier-scale (they SHRINK as dominance gets
-    * easier), so every consumer join broadcasts. Release via
-    * [[graft.core.Caches.releaseAll]] after the consumers finish. */
+    * The one-shot operators run the same consumers over an unpersisted
+    * peel. Point tables are frontier-scale (they SHRINK as dominance gets
+    * easier). Release via [[graft.core.Caches.releaseAll]] after the
+    * consumers finish. */
   final case class SkylineModel(dims: Seq[String], layers: Int,
                                 pts: DataFrame)
 
-  /** Build a [[SkylineModel]]: `layers` [[frontier]] aggregation scans
-    * (each O(frontier) shuffle bytes), anti-joining each layer's points
-    * out before the next peel — [[skylineLayerRows]]'s exact chain on the
-    * DISTINCT point set. */
+  /** Build a [[SkylineModel]]: the onion peel's `layers` [[frontier]]
+    * aggregation scans (each O(frontier) shuffle bytes), persisted. */
   def skylineModel(df: DataFrame, dims: Seq[String],
                    layers: Int): SkylineModel = {
     require(layers >= 1 && layers <= 8,
       s"layers must be in 1..8 (the onion-walk use case): $layers")
-    val dtypes = df.select(dims.map(col): _*).schema
-      .fields.map(f => f.name -> f.dataType).toMap
-    var rest = df.select(dims.map(col): _*)
-    var out: Option[DataFrame] = None
-    for (l <- 1 to layers) {
-      val sky = frontier(rest, dims)
-        .select(dims.map(c => col(c).cast(dtypes(c)).as(c)): _*)
-      out = Some(out.fold(sky.withColumn("layer", lit(l.toLong)))(
-        _.unionAll(sky.withColumn("layer", lit(l.toLong)))))
-      if (l < layers) rest = rest.join(sky, dims, "left_anti")
-    }
     SkylineModel(dims, layers,
-      graft.core.Caches.persistTracked(out.get))
+      graft.core.Caches.persistTracked(peel(df, dims, layers)))
   }
 
-  /** [[skylineLayerRows]] from a prebuilt model: ONE corpus scan through
-    * a broadcast equi-join to the point table — every duplicate row of a
-    * layer point comes back tagged with that layer (identical output to
-    * the re-peeling operator at equal `layers`; spec-pinned). */
+  /** Layer rows from a model: ONE corpus scan equi-joined to the point
+    * table, so every duplicate row of a layer point comes back tagged with
+    * that layer. No hint is forced: AQE picks the join, as in
+    * [[skylineRows]] (the point table broadcasts when small). */
   def layerRowsFrom(m: SkylineModel, df: DataFrame): DataFrame =
     df.select(m.dims.map(col): _*)
-      .join(broadcast(m.pts), m.dims)
+      .join(m.pts, m.dims)
       .select(m.dims.map(col) :+ col("layer"): _*)
 
-  /** [[skybandRows]] from a prebuilt model (`k` ≤ the model's layers):
-    * the dominator count runs over the model's first-k-layers point set
-    * (point-scale, both sides broadcast), then one corpus equi-join
-    * recovers duplicates — identical output to the re-peeling operator
-    * (the k-skyband is contained in the first k layers, and so are all
-    * its dominators). */
+  /** k-skyband from a model (`k` ≤ the model's layers): the distinct-
+    * dominator count runs over the first-k-layers point set (point-scale,
+    * the dominator side broadcast; a left join keeps dominated-by-nobody
+    * points at count 0), then one corpus equi-join recovers duplicates
+    * (AQE picks its strategy). The k-skyband is contained in the first k
+    * layers, and so are all its dominators. */
   def skybandRowsFrom(m: SkylineModel, df: DataFrame, k: Int): DataFrame = {
     require(k >= 1 && k <= m.layers,
       s"k=$k needs a model with >= k layers (built ${m.layers})")
     val pts = m.pts.filter(col("layer") <= k)
       .select(m.dims.map(col): _*)
-    val le = m.dims.map(c => col(s"b.$c") <= col(s"a.$c")).reduce(_ && _)
-    val lt = m.dims.map(c => col(s"b.$c") < col(s"a.$c")).reduce(_ || _)
     val counted = pts.as("a")
-      .join(broadcast(pts.as("b")), le && lt, "left")
+      .join(broadcast(pts.as("b")), dominates("b", "a", m.dims), "left")
       .groupBy(m.dims.map(c => col(s"a.$c").as(c)): _*)
       .agg(count(col(s"b.${m.dims.head}")).as("dom_cnt"))
       .filter(col("dom_cnt") < k)
@@ -257,22 +204,23 @@ object SkylineOps {
       .select(m.dims.map(col) :+ col("dom_cnt"): _*)
   }
 
-  /** [[topDominatingSkyline]] from a prebuilt model: the scoring join
-    * streams the corpus once through the model's layer-1 frontier
-    * (broadcast), then ranks frontier-scale rows — identical output to
-    * the self-training operator. */
+  /** Top-k dominating from a model: the scoring join streams the corpus
+    * once through the model's layer-1 frontier (broadcast), then ranks
+    * frontier-scale rows. Skyline points dominating nothing re-enter with
+    * a zero count via a frontier-sized left join afterwards — a left-outer
+    * scoring join would have to preserve the broadcast side, which Spark
+    * (rightly) refuses to plan as a broadcast. If a (high-dimensional)
+    * frontier ever outgrows broadcast, pre-filter with [[gridPrefilter]]
+    * before scoring. */
   def topDominatingFrom(m: SkylineModel, df: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"topDominatingFrom needs k >= 1: k=$k")
     val sky = m.pts.filter(col("layer") === 1)
       .select(m.dims.map(col): _*)
-    val le = m.dims.map(c => col(s"s.$c") <= col(s"r.$c")).reduce(_ && _)
-    val lt = m.dims.map(c => col(s"s.$c") < col(s"r.$c")).reduce(_ || _)
     val scored = df.select(m.dims.map(col): _*).as("r")
-      .join(broadcast(sky.as("s")), le && lt)
+      .join(broadcast(sky.as("s")), dominates("s", "r", m.dims))
       .groupBy(m.dims.map(c => col(s"s.$c").as(c)): _*)
       .agg(count(lit(1)).as("dom_cnt"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("dom_cnt").desc +: m.dims.map(col): _*)
+    val w = Window.orderBy(col("dom_cnt").desc +: m.dims.map(col): _*)
     sky.join(scored, m.dims, "left")
       .select(m.dims.map(col) :+ coalesce(col("dom_cnt"), lit(0L)).as("dom_cnt"): _*)
       .withColumn("rnk", row_number().over(w))

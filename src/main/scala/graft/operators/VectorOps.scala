@@ -335,7 +335,7 @@ object VectorOps {
     * RESOURCE CONTRACT (changed with the delegation): the search now
     * persists its bounded candidate table via [[graft.core.Caches]] —
     * release after consuming the result
-    * ([[DedupOps.unpersistPipelines]] / [[DedupOps.withDedupCaches]]),
+    * ([[graft.core.Caches.releaseAll]] / [[graft.core.Caches.scoped]]),
     * the same obligation [[knnGraph]]/[[cosNearDups]] always had. */
   def knnLsh(embs: DataFrame, idCol: String, vecCol: String,
              queryPred: Column, k: Int, tables: Int, bits: Int, dims: Int): DataFrame =
@@ -470,7 +470,7 @@ object VectorOps {
     * — [[DedupOps.DefaultMaxBucket]]'s contract); `Int.MaxValue` (the
     * default) disables the cap. The persisted candidate table registers
     * with [[graft.core.Caches]] — consume the result, then release
-    * ([[DedupOps.unpersistPipelines]] / [[DedupOps.withDedupCaches]]).
+    * ([[graft.core.Caches.releaseAll]] / [[graft.core.Caches.scoped]]).
     * Output: (qid, nid, rnk ≤ k). */
   def knnLshMultiProbe(embs: DataFrame, idCol: String, vecCol: String,
                        queryPred: Column, k: Int, tables: Int, bits: Int,
@@ -507,10 +507,10 @@ object VectorOps {
           probeStruct(t, bits, dims, flips)): _*)).as("tp"))
       .select(col("qid"), col("tp.t").as("t"),
         explode(col("tp.probes")).as("bucket"))
-    // Persisted (release via DedupOps.unpersistPipelines /
-    // Caches.releaseAll): the candidate table is consumed twice (the
-    // corpus-pruning semi-join and the final re-rank join); without the
-    // cache each consumer re-runs the WHOLE hyperplane + cap pipeline —
+    // Persisted (release via Caches.releaseAll): the candidate table is
+    // consumed twice (the corpus-pruning semi-join and the final re-rank
+    // join); without the cache each consumer re-runs the WHOLE
+    // hyperplane + cap pipeline —
     // measured as a flat 2× on the 1M envelope. Bounded rows: two longs
     // per candidate, ≤ queries × tables × (1+flips) × bucketCap.
     val cand = graft.core.Caches.persistTracked(
@@ -573,7 +573,7 @@ object VectorOps {
                maxBucket: Int = DedupOps.DefaultMaxBucket): DataFrame = {
     GraftFunctions.register(embs.sparkSession)
     val e = embs.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    // Persisted (release via DedupOps.unpersistPipelines): feeds the
+    // Persisted (release via Caches.releaseAll): feeds the
     // guard's count window and both candidate join sides. IDS-ONLY —
     // three longs per (row, table): persisting the vector replicated per
     // table (the previous shape) multiplies the cache by tables × the
@@ -973,8 +973,8 @@ object VectorOps {
     * state (plan literals downstream). [[cells]] — the persisted
     * (id, v, fv, cid, dist) assignment, i.e. the INDEX — materializes
     * lazily on first consumer. Release everything via
-    * [[graft.core.Caches.releaseAll]] / `DedupOps.unpersistPipelines`
-    * after the consumers finish, like every other pipeline intermediate. */
+    * [[graft.core.Caches.releaseAll]] after the consumers finish, like
+    * every other pipeline intermediate. */
   final case class IvfModel(quant: DataFrame,
                             seedRows: Seq[(Long, Array[Long])],
                             cents: Seq[(Long, Array[Long])],
@@ -984,16 +984,15 @@ object VectorOps {
   }
 
   /** Train an [[IvfModel]] — [[kmeansAssign]]'s training run, returned as
-    * a reusable artifact instead of a one-shot assignment. */
+    * a reusable artifact instead of a one-shot assignment: the
+    * `sampleMod = 1` case of [[ivfModelSampled]]. */
   def ivfModel(embs: DataFrame, idCol: String, vecCol: String,
-               centroidPred: Column, iters: Int, dims: Int): IvfModel = {
-    GraftFunctions.register(embs.sparkSession)
-    val (quant, seeds, cents) =
-      trainKmeans(embs, idCol, vecCol, centroidPred, iters, dims)
-    IvfModel(quant, seeds, cents, dims)
-  }
+               centroidPred: Column, iters: Int, dims: Int): IvfModel =
+    ivfModelSampled(embs, idCol, vecCol, centroidPred, iters, dims,
+      sampleMod = 1)
 
-  /** [[ivfModel]] with SAMPLED Lloyd training: centroids train on the
+  /** [[ivfModel]] with SAMPLED Lloyd training (`sampleMod = 1` trains on
+    * every row): centroids train on the
     * deterministic 1-in-`sampleMod` hash sample of the quantized corpus
     * (salted-md5 draw over the id — replayed bit-for-bit by the SQL
     * oracle), then the FULL corpus is assigned exactly once by the
@@ -1145,15 +1144,9 @@ object VectorOps {
     */
   def knnIvfKmeans(embs: DataFrame, idCol: String, vecCol: String,
                    queryPred: Column, k: Int, centroidPred: Column,
-                   iters: Int, probes: Int, dims: Int): DataFrame = {
-    val m = ivfModel(embs, idCol, vecCol, centroidPred, iters, dims)
-    // Fresh (unpersisted) assignment: the gate path is one-shot, so
-    // materializing the index buys nothing — [[knnIvfKmeansFrom]] is the
-    // reuse path.
-    ivfSearch(m, assignCells(m.quant, m.cents)
-        .select(col("id").as("nid"), col("fv").as("nv"), col("cid")),
-      embs, idCol, queryPred, k, probes)
-  }
+                   iters: Int, probes: Int, dims: Int): DataFrame =
+    knnIvfKmeansSampled(embs, idCol, vecCol, queryPred, k, centroidPred,
+      iters, probes, dims, sampleMod = 1)
 
   /** [[knnIvfKmeans]] with a SAMPLED-training coarse quantizer
     * ([[ivfModelSampled]]) — the one-shot gate path of the sampled build:
@@ -1165,6 +1158,9 @@ object VectorOps {
                           sampleMod: Int): DataFrame = {
     val m = ivfModelSampled(embs, idCol, vecCol, centroidPred, iters, dims,
       sampleMod)
+    // Fresh (unpersisted) assignment: the gate path is one-shot, so
+    // materializing the index buys nothing — [[knnIvfKmeansFrom]] is the
+    // reuse path.
     ivfSearch(m, assignCells(m.quant, m.cents)
         .select(col("id").as("nid"), col("fv").as("nv"), col("cid")),
       embs, idCol, queryPred, k, probes)
@@ -1295,22 +1291,9 @@ object VectorOps {
   def knnIvfPq(embs: DataFrame, idCol: String, vecCol: String,
                queryPred: Column, k: Int, centroidPred: Column,
                coarseIters: Int, probes: Int, pqIters: Int, m: Int,
-               dims: Int): DataFrame = {
-    // Validate the PQ hyperparameters BEFORE the coarse training runs —
-    // ivfPqModel re-checks, but only after ivfModel has already paid the
-    // multi-job Lloyd loop (minutes at corpus scale for an instant error).
-    require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
-    require(pqIters >= 0, s"pqIters must be >= 0: $pqIters")
-    val pm = ivfPqModel(
-      ivfModel(embs, idCol, vecCol, centroidPred, coarseIters, dims),
-      pqIters, m)
-    // Fresh (unpersisted) encode for the one-shot gate path; the reuse
-    // path is [[knnIvfPqFrom]] over the model's persisted codes.
-    ivfPqSearch(pm,
-      assignCells(pm.ivf.quant, pm.ivf.cents)
-        .select(col("id"), col("cid"), pqCodesCol(pm.books, pm.sub)),
-      embs, idCol, queryPred, k, probes)
-  }
+               dims: Int): DataFrame =
+    knnIvfPqSampled(embs, idCol, vecCol, queryPred, k, centroidPred,
+      coarseIters, probes, pqIters, m, dims, sampleMod = 1)
 
   /** [[knnIvfPq]] with the FULLY SAMPLED index build — coarse quantizer
     * AND all m sub-codebooks train on the same deterministic
@@ -1324,12 +1307,18 @@ object VectorOps {
                       queryPred: Column, k: Int, centroidPred: Column,
                       coarseIters: Int, probes: Int, pqIters: Int, m: Int,
                       dims: Int, sampleMod: Int): DataFrame = {
+    // Validate the PQ hyperparameters BEFORE the coarse training runs —
+    // ivfPqModelSampled re-checks, but only after the coarse model has
+    // already paid the multi-job Lloyd loop (minutes at corpus scale for
+    // an instant error).
     require(m >= 1 && dims % m == 0, s"m=$m must divide dims=$dims")
     require(pqIters >= 0, s"pqIters must be >= 0: $pqIters")
     val pm = ivfPqModelSampled(
       ivfModelSampled(embs, idCol, vecCol, centroidPred, coarseIters, dims,
         sampleMod),
       pqIters, m, sampleMod)
+    // Fresh (unpersisted) encode for the one-shot gate path; the reuse
+    // path is [[knnIvfPqFrom]] over the model's persisted codes.
     ivfPqSearch(pm,
       assignCells(pm.ivf.quant, pm.ivf.cents)
         .select(col("id"), col("cid"), pqCodesCol(pm.books, pm.sub)),
@@ -1662,7 +1651,7 @@ object VectorOps {
                   maxBucket: Int = DedupOps.DefaultMaxBucket): DataFrame = {
     GraftFunctions.register(embs.sparkSession)
     val e = embs.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    // Persisted (release via DedupOps.unpersistPipelines): the bucket rows
+    // Persisted (release via Caches.releaseAll): the bucket rows
     // feed the guard's count window and both candidate join sides. IDS-
     // ONLY, three longs per (row, table) — [[knnGraph]]'s cache-width
     // rationale; the norms side re-scans the corpus once instead.

@@ -115,6 +115,38 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("skyline onion gates share one peel: bounded lineitem scans, no persist in layers/topdom") {
+    // sky_layers, sky_skyband and sky_topdom answer from ONE onion peel
+    // (k frontier scans over the anti-joined rest) plus one corpus scan.
+    // Scans inside a persisted model are counted by following the cache,
+    // once per cache read: sky_skyband's 3-layer peel (7 scans) is read
+    // by both sides of the dominator join, plus the corpus scan. Layer
+    // rows come from the point table, never from re-scanning each
+    // layer's rest. Layers and top-dominating persist nothing.
+    val spark = TestSpark.spark
+    val budget = Map("sky_layers" -> 4, "sky_skyband" -> 15, "sky_topdom" -> 3)
+    budget.foreach { case (name, maxScans) =>
+      graft.core.Caches.scoped {
+        val plan = graft.queries.SkylineQueries.queries(name)(spark, sf)
+          .queryExecution.executedPlan
+        val top = plan match {
+          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+            a.executedPlan
+          case p => p
+        }
+        val scans = fileScans(plan)
+        assert(scans.forall(_.relation.location.rootPaths
+          .exists(_.toString.contains("lineitem"))), s"$name scans beyond lineitem")
+        info(s"$name: ${scans.size} lineitem scans")
+        assert(scans.size <= maxScans,
+          s"$name plans ${scans.size} lineitem scans (> $maxScans):\n${top.treeString}")
+        if (name != "sky_skyband") assert(top.collect {
+          case i: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => i
+        }.isEmpty, s"$name persists an intermediate:\n${top.treeString}")
+      }
+    }
+  }
+
   test("zorder_layout reads exactly its two layout dimensions") {
     val spark = TestSpark.spark
     val df = graft.queries.PipelineQueries.queries("zorder_layout")(spark, sf)
@@ -246,7 +278,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     val tree = graft.queries.PipelineQueries.queries("dedup_containment")(spark, sf)
       .queryExecution.sparkPlan.treeString
-    graft.operators.DedupOps.unpersistPipelines()
+    graft.core.Caches.releaseAll()
     assert(!tree.contains("CartesianProduct"),
       s"containment candidates must come from the shingle equi-join:\n$tree")
   }
@@ -259,7 +291,7 @@ class PlanShapeSpec extends AnyFunSuite {
     Seq("dedup_minhash", "dedup_jaccard").foreach { name =>
       val tree = graft.queries.PipelineQueries.queries(name)(spark, sf)
         .queryExecution.sparkPlan.treeString
-      graft.operators.DedupOps.unpersistPipelines()
+      graft.core.Caches.releaseAll()
       assert(!tree.contains("CartesianProduct"), s"$name planned a cartesian:\n$tree")
     }
   }
@@ -281,7 +313,7 @@ class PlanShapeSpec extends AnyFunSuite {
         case p => p
       }
     val tree = plan.treeString
-    graft.operators.DedupOps.unpersistPipelines()
+    graft.core.Caches.releaseAll()
     assert(!tree.contains("graft_shingles"), s"shingle rows are back:\n$tree")
     assert(plan.collect {
       case i: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => i

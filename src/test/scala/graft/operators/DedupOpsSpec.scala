@@ -104,7 +104,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
       val got = DedupOps.jaccardNearDups(docsDF(rows: _*), "doc_id", 2, 2, 3)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
       assert(got == expected, s"docs=$texts\ngot $got\nexpected $expected")
-      DedupOps.unpersistPipelines()
+      graft.core.Caches.releaseAll()
     }
   }
 
@@ -120,7 +120,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
     val rows = Seq((1L, base), (2L, near)) ++
       (1 to m).map(i => (100L + i, clusterText))
     val df = docsDF(rows: _*)
-    def run(cap: Int) = DedupOps.withDedupCaches {
+    def run(cap: Int) = graft.core.Caches.scoped {
       DedupOps.minhashNearDups(df, "doc_id", 3, 12, 3, 1, 2, cap)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
@@ -141,7 +141,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
       DedupOps.rawShingleRows(df, "doc_id", 3), 12, 3)
     val hot = DedupOps.hotBuckets(sig, Seq("band", "h0", "h1", "h2"), m - 1)
       .collect().map(r => r.getAs[Long]("bsz"))
-    DedupOps.unpersistPipelines()
+    graft.core.Caches.releaseAll()
     assert(hot.length == 12 && hot.forall(_ == m.toLong),
       s"expected 12 hot band buckets of size $m: ${hot.toSeq}")
   }
@@ -153,7 +153,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
     val near = ((1 to 59).map(i => s"w$i") :+ "zzz").mkString(" ")
     val df = docsDF(Seq((1L, base), (2L, near)) ++
       (1 to m).map(i => (200L + i, clusterText)): _*)
-    def run(cap: Int) = DedupOps.withDedupCaches {
+    def run(cap: Int) = graft.core.Caches.scoped {
       DedupOps.simhashNearDups(df, "doc_id", 3, 6, xxhash64(_), cap)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
@@ -223,7 +223,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
       val got = DedupOps.nearDupClusters(docs, "doc_id",
           pairs.toDF("id_a", "id_b"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      DedupOps.unpersistPipelines()
+      graft.core.Caches.releaseAll()
       assert(got == expected, s"edges=$pairs\ngot $got\nexpected $expected")
     }
   }
@@ -234,7 +234,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
       (2L, ((1 to 38).map(i => s"tok$i") ++ Seq("zzz", "tok40")).mkString(" ")),
       (3L, (100 to 140).map(i => s"other$i").mkString(" ")),
       (4L, (1 to 40).map(i => s"tok$i").mkString(" ")))
-    DedupOps.withDedupCaches {
+    graft.core.Caches.scoped {
       val m = DedupOps.nearDupModel(df, "doc_id", 3, 12, 3, 1, 2)
       val gotPairs = m.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val gotClusters = m.clusters.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -253,14 +253,14 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
     }
     val spark = TestSpark.spark
     assert(spark.sharedState.cacheManager.isEmpty,
-      "model intermediates still cached after withDedupCaches")
+      "model intermediates still cached after Caches.scoped")
   }
 
   test("dedup caches: withDedupCaches leaves no cached partitions or checkpoint RDDs behind") {
     val spark = TestSpark.spark
     val before = spark.sparkContext.getPersistentRDDs.size
     val df = docsDF((1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "p q r s t u"))
-    DedupOps.withDedupCaches {
+    graft.core.Caches.scoped {
       DedupOps.minhashNearDups(df, "doc_id", 3, 12, 3, 1, 2).count()
       DedupOps.jaccardNearDups(df, "doc_id", 3, 1, 2).count()
       // The component loop checkpoints per round — storage below the
@@ -269,7 +269,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
         DedupOps.minhashNearDups(df, "doc_id", 3, 12, 3, 1, 2)).count()
     }
     assert(spark.sharedState.cacheManager.isEmpty,
-      "dedup intermediates still cached after withDedupCaches")
+      "dedup intermediates still cached after Caches.scoped")
     assert(spark.sparkContext.getPersistentRDDs.size <= before,
       s"checkpoint RDD storage leaked: ${spark.sparkContext.getPersistentRDDs.size} > $before")
   }
@@ -279,7 +279,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
     val near = ((1 to 59).map(i => s"w$i") :+ "zzz").mkString(" ")
     val far  = (200 to 260).map(i => s"q$i").mkString(" ")
     val df = docsDF((1L, base), (2L, near), (3L, far), (4L, base))
-    val got = DedupOps.withDedupCaches {
+    val got = graft.core.Caches.scoped {
       DedupOps.simhashNearDups(df, "doc_id", 3)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     }
@@ -308,7 +308,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
         a <- sigs.keys; b <- sigs.keys if a < b
         d = java.lang.Long.bitCount(sigs(a) ^ sigs(b)) if d <= 3
       } yield (a, b, d.toLong)).toSet
-      val got = DedupOps.withDedupCaches {
+      val got = graft.core.Caches.scoped {
         DedupOps.simhashNearDups(df, "doc_id", 3, blocks)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       }
@@ -331,7 +331,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
         a <- hs; b <- hs if a < b
         d = java.lang.Long.bitCount(a ^ b) if d <= 2
       } yield (a, b, d.toLong)).toSet
-      val got = DedupOps.withDedupCaches {
+      val got = graft.core.Caches.scoped {
         DedupOps.hammingPairs(df, 16, 2, blocks)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       }
@@ -425,7 +425,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
-    DedupOps.unpersistPipelines()
+    graft.core.Caches.releaseAll()
     assert(got == bruteCoverage(rows, k))
     // Spot-check the semantics the fixture encodes: doc 4 has zero
     // windows; doc 5 is fully uncovered; docs 1/2 cover exactly the
@@ -454,7 +454,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       val dist = DedupOps.nearDupClusters(nodes, "h", pairs)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      DedupOps.unpersistPipelines()
+      graft.core.Caches.releaseAll()
       assert(small == dist, s"edges=$edges")
     }
     // The value-space guard: more edges than declared must fail loudly,
@@ -512,7 +512,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
-    DedupOps.unpersistPipelines()
+    graft.core.Caches.releaseAll()
     assert(got == bruteRuns(rows, k))
     assert(got(1L) == ((2L, 8L, 16L)), "gap > k must split runs")
     assert(got(2L)._1 == 1L, "abutting windows must merge into one run")
@@ -521,7 +521,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
     // operator's interval union.
     val cov = DedupOps.duplicatedSpanCoverage(docsDF(rows: _*), "doc_id", k)
       .collect().map(r => r.getLong(0) -> r.getLong(4)).toMap
-    DedupOps.unpersistPipelines()
+    graft.core.Caches.releaseAll()
     got.foreach { case (id, (_, _, covered)) => assert(cov(id) == covered) }
   }
 
@@ -535,7 +535,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
         .collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
         .toMap
-      DedupOps.unpersistPipelines()
+      graft.core.Caches.releaseAll()
       assert(got == bruteRuns(rows, k), s"k=$k rows=$rows")
     }
   }
@@ -552,7 +552,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
         .collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
         .toMap
-      DedupOps.unpersistPipelines()
+      graft.core.Caches.releaseAll()
       assert(got == bruteCoverage(rows, k), s"k=$k rows=$rows")
     }
   }
@@ -590,7 +590,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
       .toMap
-    DedupOps.unpersistPipelines()
+    graft.core.Caches.releaseAll()
     assert(got == bruteBoiler(rows, 8, 3))
     // The semantics the fixture encodes: only the 3-doc template counts;
     // a self-repeat (duplicatedSpanCoverage's business) and a 2-doc dup
@@ -611,7 +611,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
           .collect()
           .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
           .toMap
-        DedupOps.unpersistPipelines()
+        graft.core.Caches.releaseAll()
         assert(got == bruteBoiler(rows, k, minDocs), s"k=$k minDocs=$minDocs rows=$rows")
     }
   }
@@ -625,13 +625,13 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .toSet
-    DedupOps.unpersistPipelines()
+    graft.core.Caches.releaseAll()
     // short: 8 distinct 3-shingles, every one inside long (40 tokens → 38
     // shingles) → containment exactly 1 at wildly different sizes.
     assert(got == Set((1L, 2L, 8L, 8L, 38L)))
     // Jaccard at even the permissive 1/2 threshold misses it: 8/38.
     val jac = DedupOps.jaccardNearDups(df, "doc_id", 3, 1, 2).collect()
-    DedupOps.unpersistPipelines()
+    graft.core.Caches.releaseAll()
     assert(jac.isEmpty)
   }
 
@@ -658,7 +658,7 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
         .toSet
       assert(got == expected, s"docs=$texts\ngot $got\nexpected $expected")
-      DedupOps.unpersistPipelines()
+      graft.core.Caches.releaseAll()
     }
   }
 }

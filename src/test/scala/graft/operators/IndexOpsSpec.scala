@@ -118,6 +118,24 @@ class IndexOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("bm25From scores in 64-bit when 20·T passes Int.MaxValue") {
+    // T = 2·10⁸ tokens: 20·T and 6·T overflow 32-bit arithmetic, so the
+    // model's statistics must enter the plan as 64-bit values. Same
+    // corpus postings and lengths as above, only T replaced.
+    graft.core.Caches.scoped {
+      val m0 = IndexOps.indexModel(corpus(), "doc_id")
+      val t = 200000000L
+      val m = m0.copy(tTotal = t)
+      def contrib(idf: Long, tf: Long, dl: Long): Long =
+        idf * 44 * t * tf * 1000 / (20 * t * tf + 6 * t + 18 * dl * 5)
+      val exp = Map(1L -> contrib(1, 2, 3), 2L -> contrib(2, 1, 2),
+        3L -> contrib(1, 3, 4), 4L -> contrib(2, 1, 1), 5L -> contrib(1, 1, 2))
+      val got = IndexOps.bm25From(m, Seq("red", "green"), 10).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == exp)
+    }
+  }
+
   test("conjunctive: all terms required, per-term tf threshold applies") {
     // red AND blue: docs 1 (2+1), 3 (3+1), 5 (1+1) — doc2 has no red.
     val got = IndexOps.conjunctive(corpus(), "doc_id",

@@ -88,7 +88,7 @@ class StreamBoilerplateSpec extends AnyFunSuite {
     val bp = graft.operators.DedupOps
       .boilerplateCoverage(docs, "doc_id", 8, 3)
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
-    graft.operators.DedupOps.unpersistPipelines()
+    graft.core.Caches.releaseAll()
     val flaggedPerDoc = flags.groupBy(_._1).view.mapValues(_.count(_._3)).toMap
     // The template crosses at doc 3 (ts order): batch marks docs 1-3's
     // copies (n_bp_windows = 1 each); the stream flags from doc 3 on.

@@ -88,7 +88,7 @@ class StreamSubstrDedupSpec extends AnyFunSuite {
     val cov = graft.operators.DedupOps
       .duplicatedSpanCoverage(docs, "doc_id", 8)
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
-    graft.operators.DedupOps.unpersistPipelines()
+    graft.core.Caches.releaseAll()
     val flaggedPerDoc = flags.groupBy(_._1).view.mapValues(_.count(_._3)).toMap
     // Boilerplate window: doc 1 holds the first copy (ts order) -> doc 2's
     // copy flags; doc 3 flags nothing.

@@ -1,7 +1,14 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: for each query parquet in
 outDir, run the oracle SQL from oracle_sql.json in DuckDB over sfDir tables,
-compare row-count, sorted-column names, and row multiset."""
+compare row-count, sorted-column names, and row multiset.
+
+Usage: check.py SF_DIR OUT_DIR [name,name,...]
+
+Every requested query must have output: the named ones, or without a name
+filter every oracle_sql.json key (plus any extra output directory). A query
+whose output is missing (say, its gate crashed in Verify, which logs the
+error and moves on) prints NO OUTPUT and fails the check."""
 import sys, json, glob, os
 import duckdb
 
@@ -15,9 +22,8 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem",
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-names = sorted([os.path.basename(d) for d in glob.glob(f"{outdir}/*") if os.path.isdir(d)])
-if only is not None:
-    names = [n for n in names if n in only]
+dirs = {os.path.basename(d) for d in glob.glob(f"{outdir}/*") if os.path.isdir(d)}
+names = sorted(set(only) if only is not None else set(oracle) | dirs)
 fails = 0
 for name in names:
     files = glob.glob(f"{outdir}/{name}/*.parquet")
