@@ -2,17 +2,14 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Optional comma-separated query filter for local iteration; the driver
+    // leaves it unset and measures everything. An unknown name fails here,
+    // before any query runs, instead of silently shrinking the total.
+    val names = SparkEntry.select(sys.env.getOrElse("SPARK_GRAFT_ONLY", "")).sorted
     val spark = GraftSession(GraftSession.cpus(4))
     // Warm-up: JVM/codegen/scan setup lands here, not on whichever query
     // happens to run first.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    // Optional comma-separated query filter for local iteration; the driver
-    // leaves it unset and measures everything. Names are trimmed and empties
-    // dropped so "a, b" works and SPARK_GRAFT_ONLY="" means "no filter", not
-    // "measure nothing".
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
     val errors = scala.collection.mutable.ListBuffer.empty[String]
     // Per-query time budget: a breach records the -1 sentinel + an errors
     // entry and the bench MOVES ON — one pathological query must never
@@ -21,9 +18,9 @@ object Bench {
     // slowest legitimate query at sf0.1 by ~30× while still bounding the
     // worst case of the whole run.
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_BUDGET_SEC", "150").toDouble
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val queries = SparkEntry.queries
+    val results = names.map { name =>
+      val fn = queries(name)
       // A query that crashes or breaches its budget must not measure as
       // FAST (an aborted job returns in milliseconds and would flatter the
       // total): record a -1 sentinel and surface "<name>:<cause>" in an

@@ -4,7 +4,7 @@ package graft
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq
+    val names = SparkEntry.select(args.drop(1).mkString(","))
     val spark = GraftSession(4, logLevel = "ERROR")
     val exec = sys.env.get("GRAFT_EXPLAIN_EXEC").contains("1")
     names.foreach { n =>

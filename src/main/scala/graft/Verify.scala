@@ -5,21 +5,18 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Optional comma-separated filter for local iteration (same contract as
+    // Bench's SPARK_GRAFT_ONLY); the driver leaves it unset and dumps all.
+    val names = SparkEntry.select(sys.env.getOrElse("SPARK_GRAFT_ONLY", ""))
     val spark = GraftSession(GraftSession.cpus(4))
     new java.io.File(outDir).mkdirs()
     // Write the oracle file FIRST: if a mid-dump timeout kills the run, the
     // driver still has a parseable oracle_sql.json for the queries that did
     // land (r14's correctness artifact arrived empty; never again).
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson)
-    // Optional comma-separated filter for local iteration (same contract as
-    // Bench's SPARK_GRAFT_ONLY); the driver leaves it unset and dumps all.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    val queries = SparkEntry.queries
+    names.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

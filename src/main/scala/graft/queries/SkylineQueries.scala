@@ -69,32 +69,88 @@ object SkylineQueries {
   private def anglePid = SkylineOps.anglePartitionCol(
     array(col("l_discount"), col("l_tax")), 2, NPart)
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sky2d" -> ((s, d) => skylineRows(li(s, d), Dims2)),
+  // sky_topdom: distinct 2D frontier points (the O(n log n) min-y /
+  // prefix-min formulation yields them directly) scored by strict-
+  // dominance counts over the whole table, ranked (count desc, dims asc).
+  private val skyTopdomSql: String =
+    """WITH pts AS (SELECT l_quantity AS x, l_extendedprice AS y FROM lineitem),
+      |d AS (SELECT x, MIN(y) AS my FROM pts GROUP BY x),
+      |w AS (SELECT x, my, MIN(my) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM d),
+      |sky AS (SELECT x, my AS y FROM w WHERE pm IS NULL OR pm > my),
+      |c AS (SELECT s.x, s.y, COUNT(p.x) AS dom_cnt
+      |  FROM sky s LEFT JOIN pts p
+      |    ON s.x <= p.x AND s.y <= p.y AND (s.x < p.x OR s.y < p.y)
+      |  GROUP BY s.x, s.y),
+      |r AS (SELECT x, y, dom_cnt,
+      |  ROW_NUMBER() OVER (ORDER BY dom_cnt DESC, x, y) AS rnk FROM c)
+      |SELECT x AS l_quantity, y AS l_extendedprice, CAST(dom_cnt AS BIGINT) AS dom_cnt,
+      |  CAST(rnk AS BIGINT) AS rnk
+      |FROM r WHERE rnk <= 10""".stripMargin
 
-    "sky2d_dup" -> ((s, d) => skylineRows(li(s, d), Seq("l_quantity", "l_discount"))),
+  // sky_layers: the min-y/prefix-min 2D skyline applied twice — layer 2
+  // runs on the rows whose (x, y) is NOT a layer-1 point (anti join), and
+  // each layer re-joins pts to restore duplicate rows.
+  private val skyLayersSql: String =
+    """WITH pts AS (SELECT l_quantity AS x, l_extendedprice AS y FROM lineitem),
+      |d1 AS (SELECT x, MIN(y) AS my FROM pts GROUP BY x),
+      |w1 AS (SELECT x, my, MIN(my) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM d1),
+      |s1 AS (SELECT x, my AS y FROM w1 WHERE pm IS NULL OR pm > my),
+      |rest AS (SELECT p.x, p.y FROM pts p ANTI JOIN s1 ON p.x = s1.x AND p.y = s1.y),
+      |d2 AS (SELECT x, MIN(y) AS my FROM rest GROUP BY x),
+      |w2 AS (SELECT x, my, MIN(my) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM d2),
+      |s2 AS (SELECT x, my AS y FROM w2 WHERE pm IS NULL OR pm > my)
+      |SELECT p.x AS l_quantity, p.y AS l_extendedprice, CAST(1 AS BIGINT) AS layer
+      |  FROM pts p JOIN s1 ON p.x = s1.x AND p.y = s1.y
+      |UNION ALL
+      |SELECT r.x AS l_quantity, r.y AS l_extendedprice, CAST(2 AS BIGINT) AS layer
+      |  FROM rest r JOIN s2 ON r.x = s2.x AND r.y = s2.y""".stripMargin
+
+  // sky_skyband: textbook distinct-dominator count (quadratic — cheap on
+  // the deterministic key sample), rows dominated by < 3 distinct points.
+  private val skySkybandSql: String =
+    s"""WITH t AS (SELECT l_quantity, l_extendedprice, l_discount FROM lineitem WHERE l_orderkey % 20 = 0),
+       |d AS (SELECT DISTINCT l_quantity, l_extendedprice, l_discount FROM t),
+       |c AS (SELECT a.l_quantity, a.l_extendedprice, a.l_discount,
+       |  (SELECT COUNT(*) FROM d b
+       |   WHERE ${domSql(Seq("l_quantity", "l_extendedprice", "l_discount"))}) AS dom_cnt
+       |  FROM d a)
+       |SELECT t.l_quantity, t.l_extendedprice, t.l_discount,
+       |  CAST(c.dom_cnt AS BIGINT) AS dom_cnt
+       |FROM t JOIN c USING (l_quantity, l_extendedprice, l_discount)
+       |WHERE c.dom_cnt < 3""".stripMargin
+
+  // Lazy: the oracle SQL interpolates helpers declared below this list.
+  lazy val gates: Seq[Gate] = Seq(
+    Gate("sky2d", (s, d) => skylineRows(li(s, d), Dims2),
+      sky2dSql("l_extendedprice", "l_discount", "lineitem")),
+
+    Gate("sky2d_dup", (s, d) => skylineRows(li(s, d), Seq("l_quantity", "l_discount")),
+      sky2dSql("l_quantity", "l_discount", "lineitem")),
 
     // Top-10 dominating skyline points: each distinct frontier point
     // scored by the rows it strictly dominates — "which Pareto options
     // matter most". Dims chosen for a MULTI-point frontier at fixture
     // scale (3 points with distinct counts at sf0.01), so rank order,
     // tiebreaks, and counts are genuinely compared cross-engine.
-    "sky_topdom" -> ((s, d) =>
+    Gate("sky_topdom", (s, d) =>
       SkylineOps.topDominatingSkyline(li(s, d),
-        Seq("l_quantity", "l_extendedprice"), 10)),
+        Seq("l_quantity", "l_extendedprice"), 10),
+      skyTopdomSql),
 
     // First two skyline layers (onion peeling) — layer 1 = the frontier,
     // layer 2 = the frontier of the rest; duplicate rows keep their layer.
-    "sky_layers" -> ((s, d) =>
+    Gate("sky_layers", (s, d) =>
       SkylineOps.skylineLayerRows(li(s, d),
-        Seq("l_quantity", "l_extendedprice"), 2)),
+        Seq("l_quantity", "l_extendedprice"), 2),
+      skyLayersSql),
 
     // 3-skyband on the sky3d sample: every row dominated by < 3 distinct
     // points, tagged with its dominator count — the top-k-safe relaxation
     // of the frontier (skyline = 1-skyband).
-    "sky_skyband" -> ((s, d) =>
+    Gate("sky_skyband", (s, d) =>
       SkylineOps.skybandRows(li(s, d).filter(col("l_orderkey") % 20 === 0),
-        Seq("l_quantity", "l_extendedprice", "l_discount"), 3)),
+        Seq("l_quantity", "l_extendedprice", "l_discount"), 3),
+      skySkybandSql),
 
     // DEPLOY-LANE consumers of the shared SkylineModel artifact (one
     // materialized onion peel, point-table joins per consumer — never a
@@ -102,58 +158,78 @@ object SkylineQueries {
     // *From consumer, and reuses the re-peeling gate's oracle verbatim
     // (the consumers are row-for-row equal by construction —
     // SkylineOpsEdgeSpec pins it; these gates make the DRIVER check it).
-    "sky_layers_from" -> ((s, d) =>
+    Gate("sky_layers_from", (s, d) =>
       SkylineOps.layerRowsFrom(
         SkylineOps.skylineModel(li(s, d),
           Seq("l_quantity", "l_extendedprice"), 2),
-        li(s, d))),
+        li(s, d)),
+      skyLayersSql),
 
-    "sky_skyband_from" -> ((s, d) => {
+    Gate("sky_skyband_from", (s, d) => {
       val t = li(s, d).filter(col("l_orderkey") % 20 === 0)
       SkylineOps.skybandRowsFrom(
         SkylineOps.skylineModel(t,
           Seq("l_quantity", "l_extendedprice", "l_discount"), 3),
         t, 3)
-    }),
+    },
+      skySkybandSql),
 
-    "sky_topdom_from" -> ((s, d) =>
+    Gate("sky_topdom_from", (s, d) =>
       SkylineOps.topDominatingFrom(
         SkylineOps.skylineModel(li(s, d),
           Seq("l_quantity", "l_extendedprice"), 1),
-        li(s, d), 10)),
+        li(s, d), 10),
+      skyTopdomSql),
 
-    "sky3d" -> ((s, d) =>
+    Gate("sky3d", (s, d) =>
       skylineRows(li(s, d).filter(col("l_orderkey") % 20 === 0),
-        Seq("l_quantity", "l_extendedprice", "l_discount"))),
+        Seq("l_quantity", "l_extendedprice", "l_discount")),
+      s"""WITH t AS (SELECT l_quantity, l_extendedprice, l_discount FROM lineitem WHERE l_orderkey % 20 = 0)
+         |SELECT * FROM t a WHERE NOT EXISTS (SELECT 1 FROM t b
+         |WHERE ${domSql(Seq("l_quantity", "l_extendedprice", "l_discount"))})""".stripMargin),
 
-    "sky4d" -> ((s, d) =>
+    Gate("sky4d", (s, d) =>
       skylineRows(li(s, d).filter(col("l_orderkey") % 40 === 0),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))),
+        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")),
+      s"""WITH t AS (SELECT l_quantity, l_extendedprice, l_discount, l_tax FROM lineitem WHERE l_orderkey % 40 = 0)
+         |SELECT * FROM t a WHERE NOT EXISTS (SELECT 1 FROM t b
+         |WHERE ${domSql(Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))})""".stripMargin),
 
     // Denser 3D coverage (4× sky3d's sample): the high-dim scale path gated
     // at the largest size the quadratic DuckDB NOT-EXISTS oracle tolerates.
-    "sky3d_dense" -> ((s, d) =>
+    Gate("sky3d_dense", (s, d) =>
       skylineRows(li(s, d).filter(col("l_orderkey") % 5 === 0),
-        Seq("l_quantity", "l_extendedprice", "l_discount"))),
+        Seq("l_quantity", "l_extendedprice", "l_discount")),
+      s"""WITH t AS (SELECT l_quantity, l_extendedprice, l_discount FROM lineitem WHERE l_orderkey % 5 = 0)
+         |SELECT * FROM t a WHERE NOT EXISTS (SELECT 1 FROM t b
+         |WHERE ${domSql(Seq("l_quantity", "l_extendedprice", "l_discount"))})""".stripMargin),
 
     // Denser 4D coverage (8× sky4d's sample): 4D is the reference's
     // frontier-blow-up regime (BASELINE.md 4D row, ~717 s at 500k records),
     // so the gate density here is bounded by the quadratic DuckDB oracle,
     // not by the Spark side (~4 s at sf0.01 for the NOT-EXISTS check).
-    "sky4d_dense" -> ((s, d) =>
+    Gate("sky4d_dense", (s, d) =>
       skylineRows(li(s, d).filter(col("l_orderkey") % 5 === 0),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))),
+        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")),
+      s"""WITH t AS (SELECT l_quantity, l_extendedprice, l_discount, l_tax FROM lineitem WHERE l_orderkey % 5 = 0)
+         |SELECT * FROM t a WHERE NOT EXISTS (SELECT 1 FROM t b
+         |WHERE ${domSql(Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))})""".stripMargin),
 
-    "sky_grouped" -> ((s, d) =>
+    Gate("sky_grouped", (s, d) =>
       groupedSkylineRows(li(s, d).filter(col("l_orderkey") % 20 === 0),
-        Seq("l_returnflag"), Seq("l_extendedprice", "l_discount"))),
+        Seq("l_returnflag"), Seq("l_extendedprice", "l_discount")),
+      s"""WITH t AS (SELECT l_returnflag, l_extendedprice, l_discount FROM lineitem WHERE l_orderkey % 20 = 0)
+         |SELECT * FROM t a WHERE NOT EXISTS (SELECT 1 FROM t b
+         |WHERE b.l_returnflag = a.l_returnflag AND ${domSql(Seq("l_extendedprice", "l_discount"))})""".stripMargin),
 
     // Time-windowed skyline AFTER an equi-join: per order month (a tumbling
     // calendar window), the price/discount frontier — the reference's
     // QoS-over-time shape as a batch gate, and the only gate where the
     // skyline consumes a big-big join (lineitem ⋈ orders on orderkey:
     // shuffle join, AQE free to pick the strategy).
-    "sky_monthly" -> ((s, d) => {
+    // sky_monthly: the O(n log n) per-group 2D formulation (min-y per x +
+    // prefix-min over x, partitioned by month) after the orderkey join.
+    Gate("sky_monthly", (s, d) => {
       val mon = col("o_orderdate")
       val j = li(s, d).select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
         .join(ords(s, d).select(col("o_orderkey"),
@@ -161,104 +237,142 @@ object SkylineQueries {
           col("l_orderkey") === col("o_orderkey"))
         .select(col("mon"), col("l_extendedprice"), col("l_discount"))
       groupedSkylineRows(j, Seq("mon"), Seq("l_extendedprice", "l_discount"))
-    }),
+    },
+      """WITH j AS (SELECT year(o.o_orderdate) * 100 + month(o.o_orderdate) AS mon,
+        |  l.l_extendedprice AS x, l.l_discount AS y
+        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+        |d AS (SELECT mon, x, MIN(y) AS my FROM j GROUP BY mon, x),
+        |r AS (SELECT mon, x, my, MIN(my) OVER (PARTITION BY mon ORDER BY x
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM d)
+        |SELECT CAST(p.mon AS BIGINT) AS mon, p.x AS l_extendedprice, p.y AS l_discount
+        |FROM j p JOIN r ON p.mon = r.mon AND p.x = r.x
+        |WHERE p.y = r.my AND (r.pm IS NULL OR r.pm > p.y)""".stripMargin),
 
     // Grouped skyline on a side table (FIXTURES §3: part/orders are the
     // grouped-skyline fixtures) — cheapest-smallest part per brand.
-    "sky_grouped_part" -> ((s, d) =>
+    Gate("sky_grouped_part", (s, d) =>
       groupedSkylineRows(s.read.parquet(s"$d/part.parquet"),
-        Seq("p_brand"), Seq("p_retailprice", "p_size"))),
+        Seq("p_brand"), Seq("p_retailprice", "p_size")),
+      s"""WITH t AS (SELECT p_brand, p_retailprice, p_size FROM part)
+         |SELECT * FROM t a WHERE NOT EXISTS (SELECT 1 FROM t b
+         |WHERE b.p_brand = a.p_brand AND ${domSql(Seq("p_retailprice", "p_size"))})""".stripMargin),
 
     // MR-parity: explicit two-phase (geometric partition → local skyline →
     // global merge) must equal the single-phase skyline for every strategy.
-    "mrdim_sky2d" -> ((s, d) => {
+    Gate("mrdim_sky2d", (s, d) => {
       val df = li(s, d)
       mrSkylinePoints(df, Dims2,
         dimPartitionCol(array(Dims2.map(col): _*), MaxPrice, NPart))
-    }),
-    "mrgrid_sky2d" -> ((s, d) => {
+    },
+      sky2dSql("l_extendedprice", "l_discount", "lineitem")),
+
+    Gate("mrgrid_sky2d", (s, d) => {
       val df = li(s, d)
       mrSkylinePoints(df, Dims2,
         gridPartitionCol(array(Dims2.map(col): _*), 2, MaxPrice, NPart))
-    }),
-    "mrangle_sky2d" -> ((s, d) => {
+    },
+      sky2dSql("l_extendedprice", "l_discount", "lineitem")),
+
+    Gate("mrangle_sky2d", (s, d) => {
       val df = li(s, d)
       mrSkylinePoints(df, Dims2,
         anglePartitionCol(array(Dims2.map(col): _*), 2, NPart))
-    }),
+    },
+      sky2dSql("l_extendedprice", "l_discount", "lineitem")),
 
     // Partition-assignment histograms (the partitioners as first-class ops).
-    "mrdim_hist" -> ((s, d) =>
+    Gate("mrdim_hist", (s, d) =>
       li(s, d)
         .select(dimPartitionCol(array(col("l_extendedprice")), MaxPrice, NPart)
           .cast("long").as("pid"))
-        .groupBy("pid").agg(count(lit(1)).as("cnt"))),
+        .groupBy("pid").agg(count(lit(1)).as("cnt")),
+      s"""SELECT CAST(${dimPidSql("l_extendedprice", MaxPrice, NPart)} AS BIGINT) AS pid,
+         |CAST(COUNT(*) AS BIGINT) AS cnt FROM lineitem GROUP BY 1""".stripMargin),
 
-    "mrgrid_hist" -> ((s, d) =>
+    Gate("mrgrid_hist", (s, d) =>
       li(s, d)
         .select(gridPartitionCol(
             array(col("l_discount"), col("l_tax")), 2, 0.12, NPart)
           .cast("long").as("pid"))
-        .groupBy("pid").agg(count(lit(1)).as("cnt"))),
+        .groupBy("pid").agg(count(lit(1)).as("cnt")),
+      s"""SELECT CAST(((CASE WHEN l_discount >= 0.06 THEN 1 ELSE 0 END)
+         | + (CASE WHEN l_tax >= 0.06 THEN 2 ELSE 0 END)) % $NPart AS BIGINT) AS pid,
+         |CAST(COUNT(*) AS BIGINT) AS cnt FROM lineitem GROUP BY 1""".stripMargin),
 
-    "mrangle_hist" -> ((s, d) =>
+    Gate("mrangle_hist", (s, d) =>
       li(s, d)
         .select(anglePartitionCol(
             array(col("l_discount"), col("l_tax")), 2, NPart)
           .cast("long").as("pid"))
-        .groupBy("pid").agg(count(lit(1)).as("cnt"))),
+        .groupBy("pid").agg(count(lit(1)).as("cnt")),
+      s"""SELECT CAST(LEAST(${NPart - 1}, GREATEST(0, CAST(TRUNC(
+         |  (ATAN2(SQRT(l_tax * l_tax), l_discount) / (PI() / 2)) * $NPart) AS INTEGER))) AS BIGINT) AS pid,
+         |CAST(COUNT(*) AS BIGINT) AS cnt FROM lineitem GROUP BY 1""".stripMargin),
 
     // The reference's (disabled) grid dominance pre-filter, enabled in batch.
-    "grid_prefilter" -> ((s, d) =>
+    Gate("grid_prefilter", (s, d) =>
       SkylineOps.gridPrefilter(li(s, d), Seq("l_quantity", "l_extendedprice"), MaxPrice)
-        .groupBy("l_returnflag").agg(count(lit(1)).as("cnt"))),
+        .groupBy("l_returnflag").agg(count(lit(1)).as("cnt")),
+      s"""SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS cnt FROM lineitem
+         |WHERE l_quantity < ${MaxPrice / 2} OR l_extendedprice < ${MaxPrice / 2}
+         |GROUP BY l_returnflag""".stripMargin),
 
     // Optimality metric (reference: FlinkSkyline.java:590-608, caveat D4).
-    "opt_stats_mrdim" -> ((s, d) => {
+    Gate("opt_stats_mrdim", (s, d) => {
       val df = li(s, d).filter(col("l_orderkey") % 20 === 0)
       partitionSkylineStats(df,
           Seq("l_quantity", "l_extendedprice", "l_discount"),
           dimPartitionCol(array(col("l_quantity")), 60.0, NPart))
         .select(col("pid").cast("long").as("pid"), col("c_local"), col("c_surv"))
-    }),
-    "opt_scalar_mrdim" -> ((s, d) => {
+    },
+      (optStatsBase + optStatsSelect)),
+
+    Gate("opt_scalar_mrdim", (s, d) => {
       val df = li(s, d).filter(col("l_orderkey") % 20 === 0)
       optimality(df, Seq("l_quantity", "l_extendedprice", "l_discount"),
         dimPartitionCol(array(col("l_quantity")), 60.0, NPart), NPart)
-    }),
+    },
+      (optStatsBase +
+      s"""SELECT ROUND(SUM(CAST(COALESCE(c_surv, 0) AS DOUBLE) / CAST(c_local AS DOUBLE)) / $NPart.0, 9) AS optimality
+         |FROM loc LEFT JOIN srv ON loc.pid = srv.pid""".stripMargin)),
 
     // Per-strategy optimality (the reference's headline experiment compares
     // strategies by this metric — BASELINE.md optimality rows): identical
     // stats pipeline under the grid / angle partitioners.
-    "opt_stats_mrgrid" -> ((s, d) => {
+    Gate("opt_stats_mrgrid", (s, d) => {
       val df = li(s, d).filter(col("l_orderkey") % 20 === 0)
       partitionSkylineStats(df,
           Seq("l_quantity", "l_extendedprice", "l_discount"), gridPid)
         .select(col("pid").cast("long").as("pid"), col("c_local"), col("c_surv"))
-    }),
-    "opt_stats_mrangle" -> ((s, d) => {
+    },
+      (optStatsSql("l_orderkey % 20 = 0", gridPidSql) + optStatsSelect)),
+
+    Gate("opt_stats_mrangle", (s, d) => {
       val df = li(s, d).filter(col("l_orderkey") % 20 === 0)
       partitionSkylineStats(df,
           Seq("l_quantity", "l_extendedprice", "l_discount"), anglePid)
         .select(col("pid").cast("long").as("pid"), col("c_local"), col("c_surv"))
-    }),
+    },
+      (optStatsSql("l_orderkey % 20 = 0", anglePidSql) + optStatsSelect)),
 
     // The reference's emitted JSON result record (byte layout of
     // FlinkSkyline.java:625-650, incl. divergence D3 — no query_latency_ms).
     // Timings pinned to 0: deterministic batch semantics.
-    "metrics_json" -> ((s, d) => {
+    Gate("metrics_json", (s, d) => {
       val df = li(s, d).filter(col("l_orderkey") % 20 === 0)
       SkylineOps.metricsJson(df, Seq("l_quantity", "l_extendedprice", "l_discount"),
         dimPartitionCol(array(col("l_quantity")), 60.0, NPart), NPart, "1")
-    }),
+    },
+      (optStatsBase + metricsRecordSql("1"))),
 
     // Emitted-record parity under a non-dim partitioner: proves the metrics
     // path is strategy-agnostic, not MR-Dim-only.
-    "metrics_json_mrgrid" -> ((s, d) => {
+    Gate("metrics_json_mrgrid", (s, d) => {
       val df = li(s, d).filter(col("l_orderkey") % 20 === 0)
       SkylineOps.metricsJson(df, Seq("l_quantity", "l_extendedprice", "l_discount"),
         gridPid, NPart, "1")
-    }),
+    },
+      (optStatsSql("l_orderkey % 20 = 0", gridPidSql) + metricsRecordSql("1"))),
 
     // O22 driver surface: the reference's worst-case distribution generated
     // distributedly (partition-invariant spark.range generator), skyline'd.
@@ -266,22 +380,28 @@ object SkylineQueries {
     // oracle replays the EXACT stream in DuckDB — full hash gate, not
     // rows-only; distribution envelopes additionally asserted in
     // DataGenSourceSpec.
-    "datagen_sky2d" -> ((s, d) =>
+    Gate("datagen_sky2d", (s, d) =>
       graft.sources.DataGenSource.pointsDF(s, "anti_correlated", 42L,
           100000L, 2, 0, 10000, 32)
         .agg(graft.functions.SkylineAgg.skyline_agg(col("values")).as("sky"))
         .select(explode(col("sky")).as("p"))
-        .select(col("p")(0).as("x"), col("p")(1).as("y"))),
+        .select(col("p")(0).as("x"), col("p")(1).as("y")),
+      datagenSkySql),
 
     // O23: auto-trigger cadence emulation — one metrics record per barrier
     // prefix (query ids 1..n like the producer's counter).
-    "cadence_metrics" -> ((s, d) => {
+    Gate("cadence_metrics", (s, d) => {
       val df = li(s, d).filter(col("l_orderkey") % 20 === 0)
       SkylineOps.triggerCadence(df, "l_orderkey",
         Seq("l_quantity", "l_extendedprice", "l_discount"),
         dimPartitionCol(array(col("l_quantity")), 60.0, NPart), NPart,
         CadenceBarriers)
-    })
+    },
+      CadenceBarriers.zipWithIndex.map { case (b, i) =>
+      "SELECT json FROM (\n" +
+        optStatsSql(s"l_orderkey % 20 = 0 AND l_orderkey <= $b") +
+        metricsRecordSql((i + 1).toString) + "\n)"
+    }.mkString("\nUNION ALL\n"))
   )
 
   private def optStatsSql(where: String,
@@ -356,159 +476,4 @@ object SkylineQueries {
        |r AS (SELECT x, my, MIN(my) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM d)
        |SELECT p.x AS x, p.y AS y FROM pts p JOIN r ON p.x = r.x
        |WHERE p.y = r.my AND (r.pm IS NULL OR r.pm > p.y)""".stripMargin
-
-  private val baseOracles: Map[String, String] = Map(
-    "sky2d" -> sky2dSql("l_extendedprice", "l_discount", "lineitem"),
-
-    "sky2d_dup" -> sky2dSql("l_quantity", "l_discount", "lineitem"),
-
-    // sky_layers: the min-y/prefix-min 2D skyline applied twice — layer 2
-    // runs on the rows whose (x, y) is NOT a layer-1 point (anti join), and
-    // each layer re-joins pts to restore duplicate rows.
-    "sky_layers" ->
-      """WITH pts AS (SELECT l_quantity AS x, l_extendedprice AS y FROM lineitem),
-        |d1 AS (SELECT x, MIN(y) AS my FROM pts GROUP BY x),
-        |w1 AS (SELECT x, my, MIN(my) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM d1),
-        |s1 AS (SELECT x, my AS y FROM w1 WHERE pm IS NULL OR pm > my),
-        |rest AS (SELECT p.x, p.y FROM pts p ANTI JOIN s1 ON p.x = s1.x AND p.y = s1.y),
-        |d2 AS (SELECT x, MIN(y) AS my FROM rest GROUP BY x),
-        |w2 AS (SELECT x, my, MIN(my) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM d2),
-        |s2 AS (SELECT x, my AS y FROM w2 WHERE pm IS NULL OR pm > my)
-        |SELECT p.x AS l_quantity, p.y AS l_extendedprice, CAST(1 AS BIGINT) AS layer
-        |  FROM pts p JOIN s1 ON p.x = s1.x AND p.y = s1.y
-        |UNION ALL
-        |SELECT r.x AS l_quantity, r.y AS l_extendedprice, CAST(2 AS BIGINT) AS layer
-        |  FROM rest r JOIN s2 ON r.x = s2.x AND r.y = s2.y""".stripMargin,
-
-    // sky_topdom: distinct 2D frontier points (the O(n log n) min-y /
-    // prefix-min formulation yields them directly) scored by strict-
-    // dominance counts over the whole table, ranked (count desc, dims asc).
-    "sky_topdom" ->
-      """WITH pts AS (SELECT l_quantity AS x, l_extendedprice AS y FROM lineitem),
-        |d AS (SELECT x, MIN(y) AS my FROM pts GROUP BY x),
-        |w AS (SELECT x, my, MIN(my) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM d),
-        |sky AS (SELECT x, my AS y FROM w WHERE pm IS NULL OR pm > my),
-        |c AS (SELECT s.x, s.y, COUNT(p.x) AS dom_cnt
-        |  FROM sky s LEFT JOIN pts p
-        |    ON s.x <= p.x AND s.y <= p.y AND (s.x < p.x OR s.y < p.y)
-        |  GROUP BY s.x, s.y),
-        |r AS (SELECT x, y, dom_cnt,
-        |  ROW_NUMBER() OVER (ORDER BY dom_cnt DESC, x, y) AS rnk FROM c)
-        |SELECT x AS l_quantity, y AS l_extendedprice, CAST(dom_cnt AS BIGINT) AS dom_cnt,
-        |  CAST(rnk AS BIGINT) AS rnk
-        |FROM r WHERE rnk <= 10""".stripMargin,
-
-    // sky_skyband: textbook distinct-dominator count (quadratic — cheap on
-    // the deterministic key sample), rows dominated by < 3 distinct points.
-    "sky_skyband" ->
-      s"""WITH t AS (SELECT l_quantity, l_extendedprice, l_discount FROM lineitem WHERE l_orderkey % 20 = 0),
-         |d AS (SELECT DISTINCT l_quantity, l_extendedprice, l_discount FROM t),
-         |c AS (SELECT a.l_quantity, a.l_extendedprice, a.l_discount,
-         |  (SELECT COUNT(*) FROM d b
-         |   WHERE ${domSql(Seq("l_quantity", "l_extendedprice", "l_discount"))}) AS dom_cnt
-         |  FROM d a)
-         |SELECT t.l_quantity, t.l_extendedprice, t.l_discount,
-         |  CAST(c.dom_cnt AS BIGINT) AS dom_cnt
-         |FROM t JOIN c USING (l_quantity, l_extendedprice, l_discount)
-         |WHERE c.dom_cnt < 3""".stripMargin,
-
-    "sky3d" ->
-      s"""WITH t AS (SELECT l_quantity, l_extendedprice, l_discount FROM lineitem WHERE l_orderkey % 20 = 0)
-         |SELECT * FROM t a WHERE NOT EXISTS (SELECT 1 FROM t b
-         |WHERE ${domSql(Seq("l_quantity", "l_extendedprice", "l_discount"))})""".stripMargin,
-
-    "sky4d" ->
-      s"""WITH t AS (SELECT l_quantity, l_extendedprice, l_discount, l_tax FROM lineitem WHERE l_orderkey % 40 = 0)
-         |SELECT * FROM t a WHERE NOT EXISTS (SELECT 1 FROM t b
-         |WHERE ${domSql(Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))})""".stripMargin,
-
-    "sky_grouped" ->
-      s"""WITH t AS (SELECT l_returnflag, l_extendedprice, l_discount FROM lineitem WHERE l_orderkey % 20 = 0)
-         |SELECT * FROM t a WHERE NOT EXISTS (SELECT 1 FROM t b
-         |WHERE b.l_returnflag = a.l_returnflag AND ${domSql(Seq("l_extendedprice", "l_discount"))})""".stripMargin,
-
-    // sky_monthly: the O(n log n) per-group 2D formulation (min-y per x +
-    // prefix-min over x, partitioned by month) after the orderkey join.
-    "sky_monthly" ->
-      """WITH j AS (SELECT year(o.o_orderdate) * 100 + month(o.o_orderdate) AS mon,
-        |  l.l_extendedprice AS x, l.l_discount AS y
-        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
-        |d AS (SELECT mon, x, MIN(y) AS my FROM j GROUP BY mon, x),
-        |r AS (SELECT mon, x, my, MIN(my) OVER (PARTITION BY mon ORDER BY x
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM d)
-        |SELECT CAST(p.mon AS BIGINT) AS mon, p.x AS l_extendedprice, p.y AS l_discount
-        |FROM j p JOIN r ON p.mon = r.mon AND p.x = r.x
-        |WHERE p.y = r.my AND (r.pm IS NULL OR r.pm > p.y)""".stripMargin,
-
-    "sky_grouped_part" ->
-      s"""WITH t AS (SELECT p_brand, p_retailprice, p_size FROM part)
-         |SELECT * FROM t a WHERE NOT EXISTS (SELECT 1 FROM t b
-         |WHERE b.p_brand = a.p_brand AND ${domSql(Seq("p_retailprice", "p_size"))})""".stripMargin,
-
-    "mrdim_sky2d"   -> sky2dSql("l_extendedprice", "l_discount", "lineitem"),
-    "mrgrid_sky2d"  -> sky2dSql("l_extendedprice", "l_discount", "lineitem"),
-    "mrangle_sky2d" -> sky2dSql("l_extendedprice", "l_discount", "lineitem"),
-
-    "mrdim_hist" ->
-      s"""SELECT CAST(${dimPidSql("l_extendedprice", MaxPrice, NPart)} AS BIGINT) AS pid,
-         |CAST(COUNT(*) AS BIGINT) AS cnt FROM lineitem GROUP BY 1""".stripMargin,
-
-    "mrgrid_hist" ->
-      s"""SELECT CAST(((CASE WHEN l_discount >= 0.06 THEN 1 ELSE 0 END)
-         | + (CASE WHEN l_tax >= 0.06 THEN 2 ELSE 0 END)) % $NPart AS BIGINT) AS pid,
-         |CAST(COUNT(*) AS BIGINT) AS cnt FROM lineitem GROUP BY 1""".stripMargin,
-
-    "mrangle_hist" ->
-      s"""SELECT CAST(LEAST(${NPart - 1}, GREATEST(0, CAST(TRUNC(
-         |  (ATAN2(SQRT(l_tax * l_tax), l_discount) / (PI() / 2)) * $NPart) AS INTEGER))) AS BIGINT) AS pid,
-         |CAST(COUNT(*) AS BIGINT) AS cnt FROM lineitem GROUP BY 1""".stripMargin,
-
-    "grid_prefilter" ->
-      s"""SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS cnt FROM lineitem
-         |WHERE l_quantity < ${MaxPrice / 2} OR l_extendedprice < ${MaxPrice / 2}
-         |GROUP BY l_returnflag""".stripMargin,
-
-    "sky3d_dense" ->
-      s"""WITH t AS (SELECT l_quantity, l_extendedprice, l_discount FROM lineitem WHERE l_orderkey % 5 = 0)
-         |SELECT * FROM t a WHERE NOT EXISTS (SELECT 1 FROM t b
-         |WHERE ${domSql(Seq("l_quantity", "l_extendedprice", "l_discount"))})""".stripMargin,
-
-    "sky4d_dense" ->
-      s"""WITH t AS (SELECT l_quantity, l_extendedprice, l_discount, l_tax FROM lineitem WHERE l_orderkey % 5 = 0)
-         |SELECT * FROM t a WHERE NOT EXISTS (SELECT 1 FROM t b
-         |WHERE ${domSql(Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))})""".stripMargin,
-
-    "opt_stats_mrdim" -> (optStatsBase + optStatsSelect),
-
-    "opt_stats_mrgrid" ->
-      (optStatsSql("l_orderkey % 20 = 0", gridPidSql) + optStatsSelect),
-
-    "opt_stats_mrangle" ->
-      (optStatsSql("l_orderkey % 20 = 0", anglePidSql) + optStatsSelect),
-
-    "opt_scalar_mrdim" -> (optStatsBase +
-      s"""SELECT ROUND(SUM(CAST(COALESCE(c_surv, 0) AS DOUBLE) / CAST(c_local AS DOUBLE)) / $NPart.0, 9) AS optimality
-         |FROM loc LEFT JOIN srv ON loc.pid = srv.pid""".stripMargin),
-
-    "metrics_json" -> (optStatsBase + metricsRecordSql("1")),
-
-    "metrics_json_mrgrid" ->
-      (optStatsSql("l_orderkey % 20 = 0", gridPidSql) + metricsRecordSql("1")),
-
-    "datagen_sky2d" -> datagenSkySql,
-
-    "cadence_metrics" -> CadenceBarriers.zipWithIndex.map { case (b, i) =>
-      "SELECT json FROM (\n" +
-        optStatsSql(s"l_orderkey % 20 = 0 AND l_orderkey <= $b") +
-        metricsRecordSql((i + 1).toString) + "\n)"
-    }.mkString("\nUNION ALL\n")
-  )
-
-  /** The deploy-lane consumer gates replay the SAME SQL as their
-    * re-peeling twins — row-for-row equality of the model-reuse path with
-    * the from-scratch path is exactly what the gate checks. */
-  val oracles: Map[String, String] = baseOracles ++ Map(
-    "sky_layers_from"  -> baseOracles("sky_layers"),
-    "sky_skyband_from" -> baseOracles("sky_skyband"),
-    "sky_topdom_from"  -> baseOracles("sky_topdom"))
 }

@@ -60,7 +60,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("samp_weighted is a pruned scan into a global top-k (no sort, no window)") {
     val spark = TestSpark.spark
-    val df = graft.queries.PipelineQueries.queries("samp_weighted")(spark, sf)
+    val df = SparkEntry.queries("samp_weighted")(spark, sf)
     val plan = df.queryExecution.sparkPlan
     assert(plan.collect {
       case t: org.apache.spark.sql.execution.TakeOrderedAndProjectExec => t
@@ -76,7 +76,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("model_stump prunes its scan to (text, n_chars)") {
     val spark = TestSpark.spark
-    val df = graft.queries.PipelineQueries.queries("model_stump")(spark, sf)
+    val df = SparkEntry.queries("model_stump")(spark, sf)
     val meta = scanMeta(df)
     assert(meta.contains("text") && meta.contains("n_chars") &&
       !meta.contains("lang") && !meta.contains("doc_id"),
@@ -85,7 +85,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("the skyline query's scan reads only its dimensions") {
     val spark = TestSpark.spark
-    val df = graft.queries.SkylineQueries.queries("sky2d")(spark, sf)
+    val df = SparkEntry.queries("sky2d")(spark, sf)
     val meta = scanMeta(df)
     // Both scans (frontier aggregate + duplicate-recovery semi-join side)
     // must read the two dimension columns and nothing else.
@@ -127,7 +127,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val budget = Map("sky_layers" -> 4, "sky_skyband" -> 15, "sky_topdom" -> 3)
     budget.foreach { case (name, maxScans) =>
       graft.core.Caches.scoped {
-        val plan = graft.queries.SkylineQueries.queries(name)(spark, sf)
+        val plan = SparkEntry.queries(name)(spark, sf)
           .queryExecution.executedPlan
         val top = plan match {
           case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -149,7 +149,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("zorder_layout reads exactly its two layout dimensions") {
     val spark = TestSpark.spark
-    val df = graft.queries.PipelineQueries.queries("zorder_layout")(spark, sf)
+    val df = SparkEntry.queries("zorder_layout")(spark, sf)
     val meta = scanMeta(df)
     assert(meta.contains("l_partkey") && meta.contains("l_orderkey"),
       s"layout dims missing: $meta")
@@ -161,7 +161,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("evt_funnel pushes its step-type membership filter to the events scan") {
     val spark = TestSpark.spark
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = graft.queries.PipelineQueries.queries("evt_funnel")(spark, sf)
+    val df = SparkEntry.queries("evt_funnel")(spark, sf)
     val meta = scanMeta(df)
     // Non-funnel event types (signup, error) must never leave the reader.
     assert(meta.contains("In(event_type"),
@@ -173,7 +173,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("cdc_snapshot's per-key top-1 plans as WindowGroupLimit (shuffle carries ~|keys| rows)") {
     val spark = TestSpark.spark
-    val df = graft.queries.PipelineQueries.queries("cdc_snapshot")(spark, sf)
+    val df = SparkEntry.queries("cdc_snapshot")(spark, sf)
     val plan = df.queryExecution.sparkPlan.treeString
     assert(plan.contains("WindowGroupLimit"),
       s"rank filter not rewritten to a group limit:\n$plan")
@@ -181,7 +181,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("idx_postings' posting cap plans as WindowGroupLimit (hot tokens stay bounded)") {
     val spark = TestSpark.spark
-    val df = graft.queries.PipelineQueries.queries("idx_postings")(spark, sf)
+    val df = SparkEntry.queries("idx_postings")(spark, sf)
     val plan = df.queryExecution.sparkPlan.treeString
     assert(plan.contains("WindowGroupLimit"),
       s"posting cap not rewritten to a group limit:\n$plan")
@@ -190,7 +190,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("evt_outliers' fence table joins back by broadcast, not shuffle") {
     val spark = TestSpark.spark
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = graft.queries.PipelineQueries.queries("evt_outliers")(spark, sf)
+    val df = SparkEntry.queries("evt_outliers")(spark, sf)
     val plan = df.queryExecution.sparkPlan.treeString
     assert(plan.contains("BroadcastHashJoin"),
       s"fence join not broadcast:\n$plan")
@@ -203,7 +203,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // multi-distinct aggregate to SortAggregate and sorted the ×5-expanded
     // corpus by its 5-part grouping key.
     val spark = TestSpark.spark
-    val df = graft.queries.PipelineQueries.queries("dq_profile")(spark, sf)
+    val df = SparkEntry.queries("dq_profile")(spark, sf)
     val plan = df.queryExecution.sparkPlan
     val scans = fileScans(plan)
     assert(scans.length == 2, s"expected two lineitem scans, got ${scans.length}")
@@ -242,7 +242,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // partitioning reuse shows up here before it shows up at 100 TB.
     val spark = TestSpark.spark
     def shape(name: String): (Int, String) = {
-      val plan = graft.queries.PipelineQueries.queries(name)(spark, sf)
+      val plan = SparkEntry.queries(name)(spark, sf)
         .queryExecution.sparkPlan
       val tree = plan.treeString
       val exchanges = "(?m)^\\s*(?:\\+- |:- )?Exchange hashpartitioning".r
@@ -265,7 +265,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // regression to distinct-then-count re-shuffles the corpus-sized span
     // table by (doc_id, sh) first, a third full exchange at 100 TB.
     val spark = TestSpark.spark
-    val plan = graft.queries.PipelineQueries.queries("dedup_boilerplate")(spark, sf)
+    val plan = SparkEntry.queries("dedup_boilerplate")(spark, sf)
       .queryExecution.sparkPlan
     val tree = plan.treeString
     val exchanges = "(?m)^\\s*(?:\\+- |:- )?Exchange hashpartitioning".r
@@ -276,7 +276,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("dedup_containment plans no cartesian product (prefix ⋈ postings stays keyed)") {
     val spark = TestSpark.spark
-    val tree = graft.queries.PipelineQueries.queries("dedup_containment")(spark, sf)
+    val tree = SparkEntry.queries("dedup_containment")(spark, sf)
       .queryExecution.sparkPlan.treeString
     graft.core.Caches.releaseAll()
     assert(!tree.contains("CartesianProduct"),
@@ -289,7 +289,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // candidate key) would plan a cartesian and melt at corpus scale.
     val spark = TestSpark.spark
     Seq("dedup_minhash", "dedup_jaccard").foreach { name =>
-      val tree = graft.queries.PipelineQueries.queries(name)(spark, sf)
+      val tree = SparkEntry.queries(name)(spark, sf)
         .queryExecution.sparkPlan.treeString
       graft.core.Caches.releaseAll()
       assert(!tree.contains("CartesianProduct"), s"$name planned a cartesian:\n$tree")
@@ -306,7 +306,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // candidate distinct; the self-join and both text joins broadcast.
     val spark = TestSpark.spark
     // The executed plan (before any stage runs): exchanges are inserted.
-    val plan = graft.queries.PipelineQueries.queries("dedup_minhash")(spark, sf)
+    val plan = SparkEntry.queries("dedup_minhash")(spark, sf)
       .queryExecution.executedPlan match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
           a.executedPlan
@@ -493,7 +493,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the difference between seconds and hours at 10M vectors.
     val spark = TestSpark.spark
     val plan = graft.core.Caches.scoped {
-      graft.queries.PipelineQueries.queries("knn_lsh_mp")(spark, sf)
+      SparkEntry.queries("knn_lsh_mp")(spark, sf)
         .queryExecution.sparkPlan
     }
     val tree = plan.treeString
@@ -510,7 +510,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("samp_cluster's per-cell cap plans as WindowGroupLimit (dense cells stay bounded)") {
     val spark = TestSpark.spark
     val tree = graft.core.Caches.scoped {
-      graft.queries.PipelineQueries.queries("samp_cluster")(spark, sf)
+      SparkEntry.queries("samp_cluster")(spark, sf)
         .queryExecution.sparkPlan.treeString
     }
     assert(tree.contains("WindowGroupLimit"),

@@ -8,7 +8,9 @@ Usage: check.py SF_DIR OUT_DIR [name,name,...]
 Every requested query must have output: the named ones, or without a name
 filter every oracle_sql.json key (plus any extra output directory). A query
 whose output is missing (say, its gate crashed in Verify, which logs the
-error and moves on) prints NO OUTPUT and fails the check."""
+error and moves on) prints NO OUTPUT and fails the check. Every gate declares
+its oracle, so an output directory with no oracle_sql.json entry is stale or
+misspelled: it prints NO ORACLE and fails too."""
 import sys, json, glob, os
 import duckdb
 
@@ -29,10 +31,9 @@ for name in names:
     files = glob.glob(f"{outdir}/{name}/*.parquet")
     if not files:
         print(f"{name}: NO OUTPUT"); fails += 1; continue
-    got = con.execute(f"SELECT * FROM '{outdir}/{name}/*.parquet'").df()
     if name not in oracle:
-        print(f"{name}: rows={len(got)} (no oracle, rows-only)")
-        continue
+        print(f"{name}: NO ORACLE"); fails += 1; continue
+    got = con.execute(f"SELECT * FROM '{outdir}/{name}/*.parquet'").df()
     try:
         exp = con.execute(oracle[name]).df()
     except Exception as e:
