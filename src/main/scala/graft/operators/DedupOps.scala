@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.core.Caches
 
@@ -744,17 +748,40 @@ object DedupOps {
             (x, y) => when(x === y, 1L).otherwise(0L)),
           lit(0L), _ + _).as("est_matches"))
 
+  /** Pair graphs of at most this many edges collapse on the driver
+    * ([[nearDupClusters]]): 2^20 long pairs are ~16 MB of driver state,
+    * and the 10M-doc envelope's 999,963 verified pairs fit. */
+  private val MaxDriverEdges = 1 << 20
+
   /** Near-duplicate cluster ids: connected components over a near-dup pair
     * graph, each document labeled with the minimum doc id reachable from it
     * (docs in no pair are their own cluster) — the step a dedup pipeline
     * runs AFTER pair detection, so "keep one per cluster" is
-    * `filter(doc_id === cluster)`.
+    * `filter(doc_id === cluster)`. Output (doc_id, cluster), one row per
+    * `docs` row.
     *
-    * Min-label propagation with pointer doubling to fixpoint: labels live
-    * only on the pair-graph nodes (near-dup pairs are a vanishing fraction
-    * of a 100 TB corpus, so per-iteration joins touch the pair graph, never
-    * the corpus), the edge list is persisted once, and each iteration takes
-    * the minimum over (own label, neighbors' labels, label-of-own-label).
+    * The directed pair list is read from one cache (the caller's, when
+    * `pairs` is already persisted, else one persisted here), and ONE
+    * bounded pass collects at most 2^20 + 1 of its edges. Pairs with a
+    * null end join nothing on either path, so they label nothing.
+    *
+    * Within the bound (the dedup_neardup workload's 2,000 pairs, the 10M
+    * envelope's 999,963): union-find on the driver. The edge ends
+    * are sorted and de-duplicated with the id column's own ordering (the
+    * one `min` uses), union-find runs over their indices and always hangs
+    * the larger root under the smaller, so each root is its component's
+    * minimum id. The non-root labels join back to `docs` in one broadcast
+    * join; a pair-list cache persisted here is released at once. This is
+    * the partial-state-on-one-reducer shape of `skyline_agg`: the answer
+    * is model-sized.
+    *
+    * Above the bound: min-label propagation with pointer doubling to
+    * fixpoint, over the SAME cached pair list (pair detection never runs
+    * twice). Labels live only on the pair-graph nodes (near-dup pairs are a
+    * vanishing fraction of a 100 TB corpus, so per-iteration joins touch
+    * the pair graph, never the corpus), the mirrored edge list is persisted
+    * once, and each iteration takes the minimum over (own label, neighbors'
+    * labels, label-of-own-label).
     * The last term is the pointer jump: label values are themselves node
     * ids, so joining the label table to itself lets a label leap 2^k hops
     * along a chain per round — convergence in O(log diameter) rounds instead
@@ -765,9 +792,10 @@ object DedupOps {
     * plan references the round's checkpoint 3^k times and re-executes the
     * join tree per reference, so per-job cost grows faster than the job
     * count shrinks. One step per materialized round is the right shape.)
-    * The driver-side loop carries only a change counter, never data. The corpus joins in exactly once, at the
-    * end, to label singletons. Caches are registered for
-    * [[Caches.releaseAll]].
+    * The driver-side loop carries only a change counter, never data. The
+    * perceptual-hash cluster gates (`mm_phash_clusters`,
+    * `mm_audiohash_clusters`) used to collapse on the driver up to 2^23
+    * class pairs and fail above that; above 2^20 they now take this loop.
     *
     * Each round's label table is an EAGER `localCheckpoint`, not a plain
     * persist: the iteration references `labels` three times per round, so a
@@ -784,15 +812,87 @@ object DedupOps {
     * final one via [[graft.core.Caches]] on [[Caches.releaseAll]]. The
     * iterative loop is batch-only by contract.
     *
-    * Ids keep their native (orderable) type end-to-end — no silent cast.
+    * On both paths the corpus joins in exactly once, at the end, to label
+    * singletons; caches are registered for [[Caches.releaseAll]]. Ids keep
+    * their native (orderable) type end-to-end — no silent cast; pair ends
+    * of two different types meet at their common type, as the mirrored
+    * edge union already types them.
     */
-  def nearDupClusters(docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    // Cache the directed pair list BEFORE mirroring it: both unionAll
-    // branches would otherwise each evaluate the full (expensive, uncached)
-    // pair-detection subtree.
-    val fwd = Caches.persistTracked(pairs.select(col("id_a").as("a"), col("id_b").as("b")))
-    val edges = Caches.persistTracked(fwd.unionAll(
-      fwd.select(col("b").as("a"), col("a").as("b"))))
+  def nearDupClusters(docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame =
+    nearDupClusters(docs, idCol, pairs, MaxDriverEdges)
+
+  /** [[nearDupClusters]] with its driver-path bound given, so tests can run
+    * both paths on one graph; a negative bound always takes the loop. */
+  private[graft] def nearDupClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
+                                     maxDriverEdges: Int): DataFrame = {
+    // Cache the directed pair list BEFORE reading it: the bounded pass and
+    // (above the bound) both unionAll branches would otherwise each
+    // evaluate the full (expensive, uncached) pair-detection subtree. A
+    // caller's already persisted `pairs` (nearDupModel's) is that cache:
+    // a second copy would cost one more job and its storage.
+    val fwd = pairs.select(col("id_a").as("a"), col("id_b").as("b"))
+    val ownCache = pairs.storageLevel == StorageLevel.NONE
+    if (ownCache) Caches.persistTracked(fwd)
+    val edges = fwd.unionAll(fwd.select(col("b").as("a"), col("a").as("b")))
+    val idType = edges.schema("a").dataType
+    val bounded = fwd.select(col("a").cast(idType), col("b").cast(idType))
+      .limit(math.max(0, maxDriverEdges + 1)).collect()
+    val labels =
+      if (bounded.length <= maxDriverEdges) {
+        if (ownCache) fwd.unpersist(blocking = false)
+        broadcast(driverLabels(docs.sparkSession, bounded, idType))
+      } else roundLabels(Caches.persistTracked(edges))
+    docs.select(col(idCol).as("doc_id"))
+      .join(labels, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("cluster"))
+  }
+
+  /** Driver union-find over collected (a, b) edges of type `idType`:
+    * (doc_id, lbl) for every node whose component minimum is another node
+    * (a root's label is its own id, which the caller's coalesce supplies). */
+  private def driverLabels(spark: SparkSession, edges: Array[Row],
+                           idType: DataType): DataFrame = {
+    val ord = TypeUtils.getInterpretedOrdering(idType)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    // Edge k is (ends(2k), ends(2k + 1)).
+    val ends: Array[AnyRef] = edges.iterator
+      .filter(e => !e.isNullAt(0) && !e.isNullAt(1))
+      .flatMap(e => Iterator(e.get(0), e.get(1)))
+      .map(v => toCatalyst(v).asInstanceOf[AnyRef]).toArray
+    // Node ids: the distinct edge ends in the column type's order, so an
+    // index order IS the id order.
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids, ord)
+    var n = 0
+    for (v <- ids) if (n == 0 || ord.compare(ids(n - 1), v) != 0) { ids(n) = v; n += 1 }
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val up = parent(c); parent(c) = r; c = up }
+      r
+    }
+    def node(v: AnyRef) = java.util.Arrays.binarySearch(ids, 0, n, v, ord)
+    for (k <- ends.indices by 2) {
+      val (ra, rb) = (find(node(ends(k))), find(node(ends(k + 1))))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val toScala = CatalystTypeConverters.createToScalaConverter(idType)
+    val rows = new java.util.ArrayList[Row]()
+    (0 until n).foreach { i =>
+      val root = find(i)
+      if (root != i) rows.add(Row(toScala(ids(i)), toScala(ids(root))))
+    }
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("doc_id", idType, nullable = false),
+      StructField("lbl", idType, nullable = false))))
+  }
+
+  /** The distributed collapse above the driver bound: min-label pointer
+    * doubling over the persisted mirrored `edges` (a, b) to fixpoint, as
+    * (doc_id, lbl) over the pair-graph nodes. */
+  private def roundLabels(edges: DataFrame): DataFrame = {
     // The checkpoint's backing storage lives below the CacheManager, so it
     // must be freed explicitly: superseded rounds in-loop (their data has
     // already fed the next round's materialization), the final round via
@@ -848,57 +948,7 @@ object DedupOps {
     // (2^50 hops), so running out means the input is broken — fail loudly,
     // don't return wrong labels.
     require(changed == 0, s"nearDupClusters did not converge in $iter rounds")
-    docs.select(col(idCol).as("doc_id"))
-      .join(labels.select(col("id").as("doc_id"), col("lbl")), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("cluster"))
-  }
-
-  /** Connected components for VALUE-SPACE-BOUNDED pair graphs — the
-    * perceptual-hash case, where nodes are distinct w-bit hash CLASSES
-    * (≤ 2^16 for the 16-bit formats) rather than documents, so the edge
-    * list is model-sized driver state BY CONSTRUCTION, like k-means
-    * centroids or a Bloom bitset. The distributed pointer-doubling loop
-    * of [[nearDupClusters]] pays O(log d) whole Spark rounds (count +
-    * checkpoint each) — right for corpus-sized graphs, pure scheduling
-    * overhead for a few hundred class nodes. Here: one bounded collect,
-    * union-find with min-id representatives on the driver, one broadcast
-    * join back to label every node (absent nodes are their own cluster).
-    * Same output contract as [[nearDupClusters]]: (doc_id, cluster),
-    * cluster = minimum reachable id. Long ids only (the hash-class
-    * domain); `maxEdges` hard-fails rather than silently collecting an
-    * unbounded graph — callers pass their format's value-space bound. */
-  def smallNearDupClusters(docs: DataFrame, idCol: String, pairs: DataFrame,
-                           maxEdges: Int = 1 << 20): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val edges = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .limit(maxEdges + 1).as[(Long, Long)].collect()
-    require(edges.length <= maxEdges,
-      s"pair graph exceeds the declared value-space bound ($maxEdges edges) — " +
-        "use nearDupClusters (distributed) for corpus-sized graphs")
-    // Union-find with path compression; representative = any root, then a
-    // second pass maps every member to its component's MINIMUM id (the
-    // nearDupClusters label convention).
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    edges.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(rb) = ra
-      parent.getOrElseUpdate(ra, ra)
-    }
-    val nodes = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toSet
-    val minOfRoot = nodes.groupBy(find).map { case (r, m) => r -> m.min }
-    val labels = nodes.toSeq.map(n => (n, minOfRoot(find(n))))
-      .toDF("doc_id", "lbl")
-    docs.select(col(idCol).cast("long").as("doc_id"))
-      .join(broadcast(labels), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("lbl"), col("doc_id")).as("cluster"))
+    labels.select(col("id").as("doc_id"), col("lbl"))
   }
 
   /** The shared near-dup model a DEPLOYMENT consumes: verified MinHash pair
@@ -921,11 +971,17 @@ object DedupOps {
     * pair graph → persist. */
   def nearDupModel(docs: DataFrame, idCol: String, n: Int, b: Int, r: Int,
                    num: Int, den: Int,
-                   maxBucket: Int = DefaultMaxBucket): NearDupModel = {
+                   maxBucket: Int = DefaultMaxBucket): NearDupModel =
+    nearDupModel(docs, idCol, n, b, r, num, den, maxBucket, MaxDriverEdges)
+
+  /** [[nearDupModel]] with the collapse's driver-path bound given (tests). */
+  private[graft] def nearDupModel(docs: DataFrame, idCol: String, n: Int, b: Int,
+                                  r: Int, num: Int, den: Int, maxBucket: Int,
+                                  maxDriverEdges: Int): NearDupModel = {
     val pairs = Caches.persistTracked(
       minhashNearDups(docs, idCol, n, b, r, num, den, maxBucket))
     val clusters = Caches.persistTracked(
-      nearDupClusters(docs, idCol, pairs))
+      nearDupClusters(docs, idCol, pairs, maxDriverEdges))
     NearDupModel(pairs, clusters)
   }
 

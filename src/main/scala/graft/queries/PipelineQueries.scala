@@ -3417,10 +3417,10 @@ object PipelineQueries {
     // same pairs→components step text dedup runs (dedup_clusters), each
     // cluster keyed by its minimum member hash and rolled up to class +
     // document counts. Everything after the per-doc hash scales with the
-    // ≤ 2^16 distinct hash classes, not the corpus — and BECAUSE the node
-    // set is value-space-bounded, the collapse is the driver-side
-    // union-find (smallNearDupClusters, spec-pinned label-identical to
-    // the distributed loop), not O(log d) Spark rounds over ~100 nodes. Oracle: brute-force
+    // ≤ 2^16 distinct hash classes, not the corpus — so the class-pair
+    // graph (≤ 136 Hamming ≤ 2 neighbors per class) is small, and
+    // nearDupClusters collapses it with its driver-side union-find up to
+    // 2^20 edges, not O(log d) Spark rounds over ~100 nodes. Oracle: brute-force
     // class pairs over the independently recomputed hash + recursive-CTE
     // reachability.
     // mm_phash_clusters: brute-force Hamming ≤ 2 class pairs over the
@@ -3436,11 +3436,10 @@ object PipelineQueries {
           asBlob(col("text"))), 4).as("p"))
         .filter(col("p.ahash").isNotNull)
         .groupBy(col("p.ahash").as("h")).agg(count(lit(1)).as("cnt")))
-      graft.operators.DedupOps.smallNearDupClusters(
+      graft.operators.DedupOps.nearDupClusters(
           classes.select(col("h")), "h",
           graft.operators.DedupOps.hammingPairs(
-            classes.select(col("h").as("id"), col("h")), 16, 2, 4),
-          maxEdges = 1 << 23)
+            classes.select(col("h").as("id"), col("h")), 16, 2, 4))
         .join(classes.withColumnRenamed("h", "doc_id"), "doc_id")
         .groupBy("cluster")
         .agg(count(lit(1)).as("n_classes"), sum(col("cnt")).as("n_docs"))
@@ -3529,11 +3528,10 @@ object PipelineQueries {
           AudioHashSegs).as("p"))
         .filter(col("p.fp").isNotNull)
         .groupBy(col("p.fp").as("h")).agg(count(lit(1)).as("cnt")))
-      graft.operators.DedupOps.smallNearDupClusters(
+      graft.operators.DedupOps.nearDupClusters(
           classes.select(col("h")), "h",
           graft.operators.DedupOps.hammingPairs(
-            classes.select(col("h").as("id"), col("h")), AudioHashSegs, 2, 4),
-          maxEdges = 1 << 23)
+            classes.select(col("h").as("id"), col("h")), AudioHashSegs, 2, 4))
         .join(classes.withColumnRenamed("h", "doc_id"), "doc_id")
         .groupBy("cluster")
         .agg(count(lit(1)).as("n_classes"), sum(col("cnt")).as("n_docs"))

@@ -3,7 +3,12 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.TestSpark
 import graft.core.PropHelpers
@@ -193,15 +198,31 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
     assert(got == Set(10L, 11L), s"got $got")
   }
 
+  /** [[DedupOps.nearDupClusters]] on both of its paths: the default bound
+    * (driver union-find at test sizes), then the bound forced to 0 (the
+    * distributed loop for any non-empty pair table). Built one at a time,
+    * so releasing one path's caches never frees the other's checkpoint. */
+  private def bothPaths(docs: DataFrame, pairs: DataFrame): Iterator[DataFrame] =
+    Iterator[() => DataFrame](() => DedupOps.nearDupClusters(docs, "doc_id", pairs),
+      () => DedupOps.nearDupClusters(docs, "doc_id", pairs, 0)).map(_())
+
+  /** Whether a cluster frame came from the distributed loop: only the loop
+    * reads a checkpointed label table. */
+  private def tookLoop(clusters: DataFrame): Boolean =
+    clusters.queryExecution.analyzed.exists(_.isInstanceOf[LogicalRDD])
+
   test("nearDupClusters: min label propagates across chains; singletons keep their id") {
     val spark = TestSpark.spark
     import spark.implicits._
     // Pair graph: 1-5, 5-3 (chain -> cluster 1), 7-8 (cluster 7); 2 isolated.
     val docs = Seq(1L, 2L, 3L, 5L, 7L, 8L).toDF("doc_id")
     val pairs = Seq((1L, 5L), (3L, 5L), (7L, 8L)).toDF("id_a", "id_b")
-    val got = DedupOps.nearDupClusters(docs, "doc_id", pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 1L, 5L -> 1L, 7L -> 7L, 8L -> 7L))
+    for (clusters <- bothPaths(docs, pairs)) {
+      val got = clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      graft.core.Caches.releaseAll()
+      assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 1L, 5L -> 1L, 7L -> 7L, 8L -> 7L),
+        s"loop path: ${tookLoop(clusters)}")
+    }
   }
 
   test("property: nearDupClusters equals union-find on random pair graphs") {
@@ -220,11 +241,54 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
       }
       val expected = (0L to 11L).map(i => i -> find(i)).toMap
       val docs = (0L to 11L).toDF("doc_id")
-      val got = DedupOps.nearDupClusters(docs, "doc_id",
-          pairs.toDF("id_a", "id_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      for (clusters <- bothPaths(docs, pairs.toDF("id_a", "id_b"))) {
+        val got = clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        graft.core.Caches.releaseAll()
+        assert(got == expected,
+          s"loop path: ${tookLoop(clusters)} edges=$pairs\ngot $got\nexpected $expected")
+      }
+    }
+  }
+
+  test("nearDupClusters: driver union-find and the distributed loop give row-identical output") {
+    val spark = TestSpark.spark
+    // One graph of disjoint shapes, plus the empty pair table. None is a
+    // null end: the loop joins such a pair to nothing, so 46 and 47 stay
+    // singletons unless another pair links them.
+    val chain = (0L until 40L).map(i => (Some(i), Some(i + 1))) // 41 nodes, diameter > 2^5
+    val star = (51L to 58L).map(i => (Some(50L), Some(i)))
+    val clique = for (a <- 42L to 45L; b <- 42L to 45L if a < b) yield (Some(b), Some(a))
+    val odd = star.take(3) ++ Seq((Some(59L), Some(59L)), // duplicates, a self-loop
+      (Some(46L), None), (None, Some(47L)), (None, None), (Some(48L), Some(46L)))
+    val graphs = Seq("all shapes" -> (chain ++ star ++ clique ++ odd),
+      "empty" -> Seq.empty[(Option[Long], Option[Long])])
+    // Unpadded strings order "n10" < "n9": the label is the string minimum.
+    val types = Seq[(DataType, Long => Any)](
+      (LongType, v => v), (IntegerType, v => v.toInt), (StringType, v => s"n$v"))
+    for ((t, conv) <- types; (shape, edges) <- graphs) {
+      def frame(cols: String*)(rows: Seq[Seq[Option[Long]]]) = spark.createDataFrame(
+        rows.map(r => Row(r.map(_.map(conv).orNull): _*)).asJava,
+        StructType(cols.map(StructField(_, t))))
+      val docs = frame("doc_id")((0L to 62L).map(v => Seq(Some(v))) :+ Seq(None))
+      val pairs = frame("id_a", "id_b")(edges.map(e => Seq(e._1, e._2)))
+      val driver = DedupOps.nearDupClusters(docs, "doc_id", pairs)
+      val loop = DedupOps.nearDupClusters(docs, "doc_id", pairs, -1)
+      val (d, l) = (driver.collect().map(_.toString).sorted.toSeq,
+        loop.collect().map(_.toString).sorted.toSeq)
       graft.core.Caches.releaseAll()
-      assert(got == expected, s"edges=$pairs\ngot $got\nexpected $expected")
+      assert(!tookLoop(driver) && tookLoop(loop), s"$t $shape: wrong paths")
+      assert(driver.schema == loop.schema, s"$t $shape: ${driver.schema} vs ${loop.schema}")
+      assert(driver.schema.map(_.dataType) == Seq(t, t), s"$t $shape: ${driver.schema}")
+      assert(d == l, s"$t $shape:\ndriver $d\nloop   $l")
+      if (t == LongType && shape == "all shapes") {
+        val got = d.map(_.stripPrefix("[").stripSuffix("]").split(",") match {
+          case Array(a, b) => a -> b
+        }).toMap
+        val want = (0L to 40L).map(_ -> 0L) ++ (50L to 58L).map(_ -> 50L) ++
+          (42L to 45L).map(_ -> 42L) ++ Seq(46L -> 46L, 47L -> 47L, 48L -> 46L, 59L -> 59L)
+        assert(want.forall { case (v, c) => got(v.toString) == c.toString }, s"labels $got")
+        assert(got("null") == "null")
+      }
     }
   }
 
@@ -258,20 +322,38 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
 
   test("dedup caches: withDedupCaches leaves no cached partitions or checkpoint RDDs behind") {
     val spark = TestSpark.spark
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val df = docsDF((1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "p q r s t u"))
-    graft.core.Caches.scoped {
-      DedupOps.minhashNearDups(df, "doc_id", 3, 12, 3, 1, 2).count()
-      DedupOps.jaccardNearDups(df, "doc_id", 3, 1, 2).count()
-      // The component loop checkpoints per round — storage below the
-      // CacheManager that must ALSO be released on the way out.
-      DedupOps.nearDupClusters(df, "doc_id",
-        DedupOps.minhashNearDups(df, "doc_id", 3, 12, 3, 1, 2)).count()
+    // A persisted input, as a deployment holds its corpus: it must be the
+    // only storage left once each scope ends.
+    val df = docsDF((1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "p q r s t u"),
+      (4L, (1 to 40).map(i => s"tok$i").mkString(" ")),
+      (5L, ((1 to 38).map(i => s"tok$i") ++ Seq("zzz", "tok40")).mkString(" ")))
+      .persist()
+    df.count()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // The default bound collapses on the driver; bound 0 runs the loop,
+    // which checkpoints per round — storage below the CacheManager that
+    // must ALSO be released on the way out.
+    for (bound <- Seq(1 << 20, 0)) {
+      graft.core.Caches.scoped {
+        DedupOps.minhashNearDups(df, "doc_id", 3, 12, 3, 1, 2).count()
+        DedupOps.jaccardNearDups(df, "doc_id", 3, 1, 2).count()
+        val m = DedupOps.nearDupModel(df, "doc_id", 3, 12, 3, 1, 2,
+          DedupOps.DefaultMaxBucket, bound)
+        assert(m.pairs.count() > 0, "fixture must give the collapse a pair graph")
+        assert(tookLoop(m.clusters) == (bound == 0))
+        m.clusters.filter(col("doc_id") === col("cluster")).count()
+        m.clusters.groupBy("cluster").count().count()
+        // An unpersisted pair plan: the collapse caches its own pair list.
+        DedupOps.nearDupClusters(df, "doc_id",
+          DedupOps.minhashNearDups(df, "doc_id", 3, 12, 3, 1, 2), bound).count()
+      }
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+        s"bound $bound: storage leaked: ${spark.sparkContext.getPersistentRDDs.keySet} vs $before")
+      assert(df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
     }
+    df.unpersist(blocking = true)
     assert(spark.sharedState.cacheManager.isEmpty,
       "dedup intermediates still cached after Caches.scoped")
-    assert(spark.sparkContext.getPersistentRDDs.size <= before,
-      s"checkpoint RDD storage leaked: ${spark.sparkContext.getPersistentRDDs.size} > $before")
   }
 
   test("simhashNearDups pairs near-identical docs, not dissimilar ones; self-pairs absent") {
@@ -436,35 +518,21 @@ class DedupOpsSpec extends AnyFunSuite with PropHelpers {
     assert(got(3L)._3 == 2L && got(3L)._4 == 16L)
   }
 
-  test("smallNearDupClusters: label-identical to the distributed loop; edge bound hard-fails") {
+  test("nearDupClusters: above the driver bound, the distributed path gives the same labels") {
     val spark = TestSpark.spark
     import spark.implicits._
-    // Random pair graphs over a small id space: chains, cliques,
-    // singletons, and self-contained components must all label to the
-    // component minimum exactly as nearDupClusters does.
-    val edgesGen = Gen.chooseNum(0, 12).flatMap(m =>
-      Gen.listOfN(m, Gen.zip(Gen.chooseNum(0L, 15L), Gen.chooseNum(0L, 15L))
-        .suchThat { case (a, b) => a != b }))
-    forAll(edgesGen, 10) { edges =>
-      val nodes = (0L to 15L).toDF("h")
-      val pairs = (if (edges.isEmpty) Seq((99L, 98L)) else edges) // never-empty plan
-        .toDF("id_a", "id_b")
-        .filter(lit(edges.nonEmpty))
-      val small = DedupOps.smallNearDupClusters(nodes, "h", pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val dist = DedupOps.nearDupClusters(nodes, "h", pairs)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      graft.core.Caches.releaseAll()
-      assert(small == dist, s"edges=$edges")
-    }
-    // The value-space guard: more edges than declared must fail loudly,
-    // not silently truncate the graph.
-    val big = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val ex = intercept[IllegalArgumentException] {
-      DedupOps.smallNearDupClusters((0L to 40L).toDF("h"), "h", big,
-        maxEdges = 10).collect()
-    }
-    assert(ex.getMessage.contains("value-space bound"))
+    // 40 edges over a bound of 10: the bounded pass sees 11 edges and hands
+    // the whole graph to the round loop instead of truncating it.
+    val docs = (0L to 41L).toDF("doc_id")
+    val chain = (0L until 40L).map(i => (i + 1, i)).toDF("id_a", "id_b")
+    val above = DedupOps.nearDupClusters(docs, "doc_id", chain, 10)
+    val got = above.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    graft.core.Caches.releaseAll()
+    val within = DedupOps.nearDupClusters(docs, "doc_id", chain, 40)
+    val want = within.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    graft.core.Caches.releaseAll()
+    assert(tookLoop(above) && !tookLoop(within))
+    assert(got == want && want == (0L to 40L).map(_ -> 0L).toMap + (41L -> 41L), s"got $got")
   }
 
   /** Ground truth for duplicatedSpanRuns straight from the covered
