@@ -128,15 +128,16 @@ object ScaleBatch {
     val (_, genSec) = timed(docs.count())
 
     // At 10 M the WHOLE leg chain runs twice (per-leg first AND min land in
-    // the JSON). Legs share persisted intermediates within one rep (pairs'
-    // intermediates stay warm for the cluster leg), so per-leg semantics
-    // match the single-run protocol of earlier rounds.
+    // the JSON). Legs share persisted intermediates within one rep: the
+    // pair list is persisted as it is counted, so the cluster leg times
+    // the collapse alone, not pair detection again.
     val reps = if (n >= 10000000L) 2 else 1
     val r = firstMin(reps) { lap =>
       // Full chain, the dedup_clusters shape: banding (b=12, r=3) →
       // verified pairs (Jaccard >= 1/2 over 3-shingles) → components.
       val (pairs, nPairs) = lap {
-        val p = DedupOps.minhashNearDups(docs, "doc_id", 3, 12, 3, 1, 2)
+        val p = graft.core.Caches.persistTracked(
+          DedupOps.minhashNearDups(docs, "doc_id", 3, 12, 3, 1, 2))
         (p, p.count())
       }
       val nClustered = lap {

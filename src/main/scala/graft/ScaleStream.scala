@@ -26,8 +26,9 @@ object ScaleStream {
   /** Streaming-mode scalability envelope: the reference's headline claim
     * ("linear up to 10M records 2D/3D, total time < 400 s" —
     * `project_documentation.pdf` p.17 §5.2, BASELINE.md) reproduced through
-    * the ACTUAL streaming topology ([[StreamingSkyline]]: MR-Dim keyed local
-    * phase → latched global merge), not the batch analog — with a query
+    * the ACTUAL streaming topology ([[StreamingSkyline]]: MR-Dim map-side
+    * local skylines → one stateful operator holding every partition's
+    * skyline and the latch), not the batch analog — with a query
     * trigger fanned out every `cadence` records (SPARK_GRAFT_STREAM_CADENCE,
     * default 1M) and every snapshot checked for parity against the batch
     * skyline of its exact prefix (SURVEY §7.4 item 5).

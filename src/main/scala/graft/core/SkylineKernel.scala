@@ -373,6 +373,13 @@ final class SkyBuffer(
     if (points.length >= compactAt) compact()
   }
 
+  /** `count` copies of `p` as one entry. */
+  def add(p: Array[Double], count: Long): Unit = {
+    points += p
+    counts += count
+    if (points.length >= compactAt) compact()
+  }
+
   def absorb(other: SkyBuffer): Unit = {
     points ++= other.points
     counts ++= other.counts

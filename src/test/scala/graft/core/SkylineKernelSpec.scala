@@ -131,6 +131,23 @@ class SkylineKernelSpec extends AnyFunSuite with PropHelpers {
       asSets((0 until 1000).map(i => distinct(i % 40))))
   }
 
+  test("SkyBuffer.add(p, count): multiplicities survive compaction and absorb") {
+    // Counted adds (the streaming map-side local skyline's entries) must
+    // give the same multiset as adding each copy once: across compaction
+    // (3000 entries pass MinCompact) and absorb, and result() re-expands
+    // every count exactly.
+    forAll(Gen.listOfN(3000, Gen.zip(pointGen, Gen.choose(1, 5))), n = 5) { cps =>
+      val (l, r) = cps.splitAt(cps.length / 2)
+      val b1 = new SkyBuffer(); l.foreach { case (p, c) => b1.add(p, c.toLong) }
+      val b2 = new SkyBuffer(); r.foreach { case (p, c) => b2.add(p, c.toLong) }
+      b1.absorb(b2)
+      val flat = cps.flatMap { case (p, c) => Seq.fill(c)(p) }
+      val sky = b1.result().toSeq
+      assert(asSets(sky) == asSets(bruteForce(flat)))
+      assert(b1.counts.sum == sky.length.toLong)
+    }
+  }
+
   test("tagged counted SFS: per-tag multiset equals brute force per tag") {
     // Property: the tagged merge (the streaming global phase's
     // representation — dominance ignores the tag, equal points with

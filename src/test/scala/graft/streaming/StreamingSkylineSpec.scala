@@ -3,11 +3,14 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.api.java.Optional
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
 
 import graft.TestSpark
 import graft.core.{GeoPartitioners, SkylineKernel}
-import graft.streaming.StreamingSkyline.SkyEvent
+import graft.streaming.StreamingSkyline.{GlobalState, LocalState, SkyEvent}
 
 /** End-to-end streaming parity (SURVEY §7.4 q5 + caveats D5/D6 + the `-1`
   * fast-path), driven through MemoryStream micro-batches. The fixed clock
@@ -253,5 +256,107 @@ class StreamingSkylineSpec extends AnyFunSuite {
     val expAll = SkylineKernel.skylineOf(ArrayBuffer(pts.map(_._2): _*)).size
     assert(parse(byQid("1"), "skyline_size").toInt == exp1)
     assert(parse(byQid("2"), "skyline_size").toInt == expAll)
+  }
+
+  /** The two-operator topology the fused operator replaced, replayed on the
+    * driver: per micro-batch, [[StreamingSkyline.localFn]] per pid that has
+    * events, then [[StreamingSkyline.globalFn]] per payload with arrivals,
+    * each over its own key's state. Returns each batch's records. */
+  private def twoOperatorReference(batches: Seq[Seq[SkyEvent]]): Seq[Seq[String]] = {
+    def groupState[S](prev: Option[S]) = TestGroupState.create[S](
+      prev.fold(Optional.empty[S]())(Optional.of(_)),
+      GroupStateTimeout.NoTimeout, 0L, Optional.empty[Long](), false)
+    val locals = scala.collection.mutable.Map.empty[Int, LocalState]
+    val globals = scala.collection.mutable.Map.empty[String, GlobalState]
+    batches.map { batch =>
+      val results = batch.groupBy(_.pid).toSeq.flatMap { case (pid, evs) =>
+        val st = groupState(locals.get(pid))
+        val out = StreamingSkyline.localFn(clock)(pid, evs.iterator, st).toList
+        locals(pid) = st.get
+        out
+      }
+      results.groupBy(_.payload).toSeq.flatMap { case (payload, rs) =>
+        val st = groupState(globals.get(payload))
+        val out = StreamingSkyline.globalFn(NPart, clock)(payload, rs.iterator, st).toList
+        if (st.exists) globals(payload) = st.get else globals -= payload
+        out
+      }
+    }
+  }
+
+  test("one stateful operator == the two-operator topology over random batches") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def key(json: String) = Seq("query_id", "record_count", "skyline_size",
+      "optimality").map(parse(json, _))
+    var parkedAcross = 0
+    (1 to 4).foreach { trial =>
+      val rnd = new scala.util.Random(100 + trial)
+      // A random subset of pids ever sees data, so triggers also take the
+      // -1 fast path; each batch feeds a random subset of those, so a
+      // barrier can be met at some pids and parked at others.
+      val active = rnd.shuffle((0 until NPart).toList).take(1 + rnd.nextInt(NPart))
+      val n = 400 + rnd.nextInt(400)
+      val cuts = (0 +: Seq.fill(2 + rnd.nextInt(3))(rnd.nextInt(n)).sorted :+ n).distinct
+      val sentIn = scala.collection.mutable.Map.empty[String, Int]
+      val batches = cuts.sliding(2).zipWithIndex.map { case (Seq(lo, hi), b) =>
+        val fed = rnd.shuffle(active).take(1 + rnd.nextInt(active.size))
+        // Duplicate-heavy 2-D integer points near an anti-diagonal: most of
+        // a frontier is repeated copies, so multiplicities decide sizes.
+        val pts = (lo until hi).map { i =>
+          val x = rnd.nextInt(12)
+          SkyEvent(fed(rnd.nextInt(fed.size)), isTrigger = false, i.toLong,
+            Array(x.toDouble, (12 - x + rnd.nextInt(3)).toDouble), "", 0L)
+        }
+        // Up to 3 triggers whose barrier is already met, met inside this
+        // batch, met in a later batch, or never met; the last batch also
+        // queries everything ingested (D5).
+        val qids = Seq.tabulate(rnd.nextInt(4))(q => s"$trial-$b-$q") ++
+          (if (hi == n) Seq(s"$trial-last") else Nil)
+        val trig = qids.flatMap { qid =>
+          sentIn(qid) = b
+          val payload = if (qid.endsWith("last")) qid else rnd.nextInt(5) match {
+            case 0 => qid
+            case 1 => s"$qid,${rnd.nextInt(math.max(1, hi))}"
+            case 2 => s"$qid,${lo + rnd.nextInt(math.max(1, hi - lo))}"
+            case 3 => s"$qid,${hi + rnd.nextInt(n - hi + 1)}"
+            case _ => s"$qid,${n + 10}"
+          }
+          StreamingSkyline.fanOutTrigger(payload, NPart, 7L)
+        }
+        rnd.shuffle(pts ++ trig)
+      }.toSeq
+      val stream = MemoryStream[SkyEvent](3)
+      val got = runQuery(stream) { sync =>
+        batches.foreach { b => stream.addData(b); sync }
+      }
+      val expected = twoOperatorReference(batches)
+      parkedAcross += expected.zipWithIndex.count { case (rs, b) =>
+        rs.exists(r => sentIn(parse(r, "query_id")) < b) }
+      assert(got.map(key).sortBy(_.head) == expected.flatten.map(key).sortBy(_.head),
+        s"trial $trial")
+    }
+    assert(parkedAcross > 0, "no latch was parked across batches")
+  }
+
+  test("plan shape: one stateful operator behind one shuffle") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val stream = MemoryStream[SkyEvent]
+    val q = StreamingSkyline(stream.toDS(), NPart, clock)
+      .writeStream.format("memory").queryName(s"sky_plan_${System.nanoTime()}")
+      .outputMode("append").start()
+    val plan = try {
+      stream.addData(gen(50).map { case (id, v) => point(id, v) })
+      q.processAllAvailable()
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+    } finally q.stop()
+    val stateful = plan.collect {
+      case p if p.getClass.getSimpleName == "FlatMapGroupsWithStateExec" => p }
+    val shuffles = plan.collect { case p: ShuffleExchangeLike => p }
+    assert(stateful.size == 1, plan.treeString)
+    assert(shuffles.size == 1, plan.treeString)
   }
 }
