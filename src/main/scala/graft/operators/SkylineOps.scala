@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.SkylineAgg.skyline_agg
 import graft.functions.SkylineStats.skyline_stats
@@ -16,15 +17,16 @@ import graft.functions.SkylineStats.skyline_stats
   * (local BNL per input partition, only local skylines cross the shuffle,
   * global BNL merge — reference: `java/org.main/FlinkSkyline.java:162-174`).
   *
-  * Scale design (100 TB): the frontier is usually tiny relative to the input
-  * (≪ 1% for realistic distributions), so [[skylineRows]] does one full
-  * scan to produce the frontier (map-side partial aggregation ⇒ O(skyline)
-  * shuffle bytes per partition), then a second scan with a semi-join to
-  * recover the original duplicate-preserving rows. The join strategy is left
-  * to AQE: when the frontier is small (the common case) it becomes a runtime
-  * broadcast join; for anti-correlated high-dim data the frontier can be
-  * huge (the reference's own 4D runs blow up — BASELINE.md 4D row), and a
-  * forced broadcast would kill the driver, so no hint is forced.
+  * Scale design (100 TB): every operator that turns the aggregate's
+  * frontier into rows ([[skylineRows]], [[groupedSkylineRows]],
+  * [[frontier]], [[mrSkylinePoints]], and the streaming
+  * [[graft.streaming.EventWindows.windowedFrontier]]) runs ONE body: one
+  * input scan, map-side partial aggregation (O(local skyline) shuffle
+  * bytes per partition), then the merged frontier multiset — duplicates
+  * included — exploded and cast back to the input column types. That is
+  * the reference's answer path: the global phase emits the result
+  * (`FlinkSkyline.java:162-174`), no input row is re-read. The cast back
+  * is exact because [[vec]] admits only values a double carries exactly.
   *
   * The onion extensions (layers, k-skyband, top-k dominating) share ONE
   * shape. One peel builds the first k layers as a DISTINCT point table
@@ -37,32 +39,64 @@ import graft.functions.SkylineStats.skyline_stats
   */
 object SkylineOps {
 
-  /** `array(dims...)` cast to double — the aggregate's input vector. */
-  private def vec(dims: Seq[String]): Column =
-    array(dims.map(d => col(d).cast("double")): _*)
+  /** The skyline aggregates' input vector: `array(dims...)` cast to double,
+    * and the one place that makes the cast exact, so every frontier point
+    * casts back to the very input value it came from.
+    *   - A non-numeric dimension fails here, when the plan is built
+    *     (`IllegalArgumentException` naming the column and its type).
+    *   - A null coordinate fails the query (`raise_error` naming the
+    *     column); it would otherwise read as 0.0 and dominate real rows.
+    *   - `long`, and decimals of precision above 15, are checked per row:
+    *     the double must cast back to the original value, or the query
+    *     fails naming the column. Every other numeric type is always exact.
+    */
+  private[graft] def vec(df: DataFrame, dims: Seq[String]): Column =
+    array(dims.zip(dimTypes(df, dims)).map { case (d, t) =>
+      require(t.isInstanceOf[NumericType],
+        s"skyline dimension `$d` must be numeric, not ${t.simpleString}")
+      val v = coalesce(col(d), raise_error(lit(s"skyline dimension `$d` is null")))
+        .cast(DoubleType)
+      val exact = t match {
+        case LongType => false
+        case dt: DecimalType => dt.precision <= 15
+        case _ => true
+      }
+      if (exact) v
+      else when(v.try_cast(t) === col(d), v).otherwise(raise_error(lit(
+        s"skyline dimension `$d` holds a ${t.simpleString} value that a " +
+          "double cannot carry exactly")))
+    }: _*)
 
-  /** Distinct frontier points of `df` over `dims`, one column per dim. */
+  private def dimTypes(df: DataFrame, dims: Seq[String]): Seq[DataType] =
+    df.select(dims.map(col): _*).schema.fields.toSeq.map(_.dataType)
+
+  /** The one body behind every operator that turns `skyline_agg`'s array
+    * into rows: one input scan grouped by `keys` (none = one global group),
+    * the aggregate's frontier multiset exploded — every duplicate of a
+    * frontier point stays — and each coordinate cast back to its input
+    * column type. Output: the key columns, then `dims`. */
+  private[graft] def skylineOf(df: DataFrame, keys: Seq[Column],
+                               dims: Seq[String]): DataFrame = {
+    val sky = df.groupBy(keys: _*).agg(skyline_agg(vec(df, dims)).as("graft_sky"))
+    val keyCols = sky.columns.init.toSeq.map(col)
+    sky.select(keyCols :+ explode(col("graft_sky")).as("graft_p"): _*)
+      .select(keyCols ++ dims.zip(dimTypes(df, dims)).zipWithIndex.map {
+        case ((d, t), i) => col("graft_p")(i).cast(t).as(d)
+      }: _*)
+  }
+
+  /** Distinct frontier points of `df` over `dims`, one column per dim, in
+    * `df`'s column types. */
   def frontier(df: DataFrame, dims: Seq[String]): DataFrame =
-    df.agg(skyline_agg(vec(dims)).as("sky"))
-      .select(explode(col("sky")).as("p"))
-      .select(dims.zipWithIndex.map { case (d, i) => col("p")(i).as(d) }: _*)
-      .distinct()
+    skylineOf(df, Nil, dims).distinct()
 
   /** All non-dominated rows of `df` over `dims` (duplicates of frontier
-    * points all survive — SURVEY §1.2). Equivalent to the SQL anti-join
-    * `WHERE NOT EXISTS (dominating row)`.
+    * points all survive — SURVEY §1.2), in `df`'s column types. Equivalent
+    * to the SQL anti-join `WHERE NOT EXISTS (dominating row)`, answered in
+    * one scan by [[skylineOf]].
     */
   def skylineRows(df: DataFrame, dims: Seq[String]): DataFrame =
-    df.select(dims.map(col): _*)
-      .join(frontier(df, dims), dims, "left_semi")
-
-  /** [[frontier]] cast back from the aggregate's double vector to `df`'s
-    * column types, so the points equi-join the input again. */
-  private def typedFrontier(df: DataFrame, dims: Seq[String]): DataFrame = {
-    val types = df.select(dims.map(col): _*).schema
-      .fields.map(f => f.name -> f.dataType).toMap
-    frontier(df, dims).select(dims.map(c => col(c).cast(types(c)).as(c)): _*)
-  }
+    skylineOf(df, Nil, dims)
 
   /** Rows of alias `b` dominate rows of alias `a` over `dims`: ≤ on every
     * dimension and < on at least one (minimization). */
@@ -81,7 +115,7 @@ object SkylineOps {
   private def peel(df: DataFrame, dims: Seq[String], layers: Int): DataFrame = {
     var rest = df.select(dims.map(col): _*)
     (1 to layers).map { l =>
-      val sky = typedFrontier(rest, dims)
+      val sky = frontier(rest, dims)
       if (l < layers) rest = rest.join(sky, dims, "left_anti")
       sky.withColumn("layer", lit(l.toLong))
     }.reduce(_ unionAll _)
@@ -137,20 +171,13 @@ object SkylineOps {
     skybandRowsFrom(skylineModel(df, dims, k), df, k)
   }
 
-  /** Grouped skyline: non-dominated rows within each group. One shuffle on
-    * the group keys for the frontier (partial-aggregated map-side), then a
-    * broadcast semi-join on (groupCols ++ dims).
+  /** Grouped skyline: non-dominated rows within each group, one scan and
+    * one shuffle on the group keys (partial-aggregated map-side). A null
+    * key is its own group, as in SQL `GROUP BY`. Output: groupCols, then
+    * dims, in `df`'s column types.
     */
-  def groupedSkylineRows(df: DataFrame, groupCols: Seq[String], dims: Seq[String]): DataFrame = {
-    val front = df.groupBy(groupCols.map(col): _*)
-      .agg(skyline_agg(vec(dims)).as("sky"))
-      .select(groupCols.map(col) :+ explode(col("sky")).as("p"): _*)
-      .select(groupCols.map(col) ++
-        dims.zipWithIndex.map { case (d, i) => col("p")(i).as(d) }: _*)
-      .distinct()
-    df.select((groupCols ++ dims).map(col): _*)
-      .join(front, groupCols ++ dims, "left_semi")
-  }
+  def groupedSkylineRows(df: DataFrame, groupCols: Seq[String], dims: Seq[String]): DataFrame =
+    skylineOf(df, groupCols.map(col), dims)
 
   /** The skyline family's shared DEPLOY artifact: the first `layers`
     * onion layers as one DISTINCT point table (dims…, layer). Built by
@@ -176,8 +203,8 @@ object SkylineOps {
 
   /** Layer rows from a model: ONE corpus scan equi-joined to the point
     * table, so every duplicate row of a layer point comes back tagged with
-    * that layer. No hint is forced: AQE picks the join, as in
-    * [[skylineRows]] (the point table broadcasts when small). */
+    * that layer. No hint is forced: AQE picks the join (the point table
+    * broadcasts when small). */
   def layerRowsFrom(m: SkylineModel, df: DataFrame): DataFrame =
     df.select(m.dims.map(col): _*)
       .join(m.pts, m.dims)
@@ -279,20 +306,16 @@ object SkylineOps {
 
   /** Explicit two-phase MR skyline (parity demonstration): geometric
     * partition → per-partition local skyline → merge of local skylines →
-    * global skyline. Emits the duplicate-preserving global multiset (each
+    * global skyline, i.e. [[skylineOf]] over [[skylineOf]] keyed by the
+    * partition id. Emits the duplicate-preserving global multiset (each
     * partition's local phase keeps its own duplicates; equal vectors never
-    * dominate, so the merge keeps all of them) — identical row multiset to
-    * [[skylineRows]].
+    * dominate, so the merge keeps all of them) — identical row multiset
+    * and column types to [[skylineRows]].
     */
-  def mrSkylinePoints(df: DataFrame, dims: Seq[String], pid: Column): DataFrame = {
-    val local = df.withColumn("graft_pid", pid)
-      .groupBy("graft_pid")
-      .agg(skyline_agg(vec(dims)).as("sky"))
-    local.select(explode(col("sky")).as("v"))
-      .agg(skyline_agg(col("v")).as("sky"))
-      .select(explode(col("sky")).as("p"))
-      .select(dims.zipWithIndex.map { case (d, i) => col("p")(i).as(d) }: _*)
-  }
+  def mrSkylinePoints(df: DataFrame, dims: Seq[String], pid: Column): DataFrame =
+    skylineOf(
+      skylineOf(df.withColumn("graft_pid", pid), Seq(col("graft_pid")), dims),
+      Nil, dims)
 
   /** Per-partition skyline statistics for the optimality metric
     * (reference formula: `java/org.main/FlinkSkyline.java:590-608`, caveat
@@ -322,7 +345,7 @@ object SkylineOps {
   private def statsByKeys(tagged: DataFrame, dims: Seq[String],
                           keys: Seq[String]): DataFrame =
     tagged.groupBy(keys.map(col): _*)
-      .agg(skyline_stats(col("pid").cast("int"), vec(dims)).as("st"))
+      .agg(skyline_stats(col("pid").cast("int"), vec(tagged, dims)).as("st"))
       .select(keys.map(col) :+ explode(col("st")).as("s"): _*)
       .select(keys.map(col) ++
         Seq("pid", "c_rows", "c_local", "c_surv").map(c => col(s"s.$c").as(c)): _*)

@@ -4048,16 +4048,17 @@ object PipelineQueries {
 
   /** The SAMPLED farthest-first replay ([[graft.operators.VectorOps
     * .kmeansFarthestFirstSampled]]): seeding argmaxes AND the Lloyd chain
-    * run over the sampled CTE `qs`; assignment over the full corpus. */
+    * run over the sampled CTE `qs`; assignment over the full corpus.
+    * `qs` and the seed sets are MATERIALIZED, as in [[kmppCteSql]]. */
   private lazy val kmppSampledCteSql: String = {
     val steps = (2 to KmppK).map { j =>
       s"""d$j AS (SELECT q.id, MIN($kmDistSql) AS md FROM qs q, s${j - 1} c GROUP BY q.id),
          |n$j AS (SELECT q.id, q.v FROM qs q JOIN (SELECT id FROM d$j ORDER BY md DESC, id LIMIT 1) t USING (id)),
-         |s$j AS (SELECT * FROM s${j - 1} UNION ALL SELECT id AS cid, v AS cv FROM n$j)""".stripMargin
+         |s$j AS MATERIALIZED (SELECT * FROM s${j - 1} UNION ALL SELECT id AS cid, v AS cv FROM n$j)""".stripMargin
     }.mkString(",\n")
     s"""$kmQuantCtes,
-       |qs AS (SELECT id, v FROM q WHERE $ivfsDrawSql % $IvfkSampleMod = 0),
-       |s1 AS (SELECT id AS cid, v AS cv FROM qs WHERE id = (SELECT MIN(id) FROM qs)),
+       |qs AS MATERIALIZED (SELECT id, v FROM q WHERE $ivfsDrawSql % $IvfkSampleMod = 0),
+       |s1 AS MATERIALIZED (SELECT id AS cid, v AS cv FROM qs WHERE id = (SELECT MIN(id) FROM qs)),
        |$steps,
        |c0 AS (SELECT cid, cv FROM s$KmppK),
        |${kmIterCtesFrom("qs")}""".stripMargin
@@ -4072,15 +4073,18 @@ object PipelineQueries {
   /** Farthest-first seeding chain s1..s$KmppK (expects `q`): s1 = the min
     * id; each s_{j} adds the vector maximizing its min distance to s_{j-1}
     * (ties to the lowest id) — replaying
-    * [[graft.operators.VectorOps.kmeansFarthestFirst]]'s seeding. */
+    * [[graft.operators.VectorOps.kmeansFarthestFirst]]'s seeding. Each
+    * s_{j} reads s_{j-1} twice (directly and through d_{j}), and DuckDB
+    * does not share a CTE between its readers unless it is MATERIALIZED:
+    * unshared, the chain is recomputed exponentially in k. */
   private val kmppCteSql: String = {
     val steps = (2 to KmppK).map { j =>
       s"""d$j AS (SELECT q.id, MIN($kmDistSql) AS md FROM q, s${j - 1} c GROUP BY q.id),
          |n$j AS (SELECT q.id, q.v FROM q JOIN (SELECT id FROM d$j ORDER BY md DESC, id LIMIT 1) t USING (id)),
-         |s$j AS (SELECT * FROM s${j - 1} UNION ALL SELECT id AS cid, v AS cv FROM n$j)""".stripMargin
+         |s$j AS MATERIALIZED (SELECT * FROM s${j - 1} UNION ALL SELECT id AS cid, v AS cv FROM n$j)""".stripMargin
     }.mkString(",\n")
     s"""$kmQuantCtes,
-       |s1 AS (SELECT id AS cid, v AS cv FROM q WHERE id = (SELECT MIN(id) FROM q)),
+       |s1 AS MATERIALIZED (SELECT id AS cid, v AS cv FROM q WHERE id = (SELECT MIN(id) FROM q)),
        |$steps,
        |c0 AS (SELECT cid, cv FROM s$KmppK),
        |$kmIterCtes""".stripMargin

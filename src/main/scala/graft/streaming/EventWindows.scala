@@ -61,16 +61,15 @@ object EventWindows {
     * watermark closes it (append mode). Over a batch DataFrame the same
     * plan is the plain windowed skyline — the [[windowedKeyCounts]]
     * batch/stream duality applied to the reference's core operator
-    * (continuous QoS frontier per time window). Output: (w_start, dims...).
+    * (continuous QoS frontier per time window). It is the skyline body
+    * ([[graft.operators.SkylineOps.skylineOf]]) keyed by the window, so
+    * its rules hold here too: numeric dims only, a null coordinate fails
+    * the query, and every frontier row (duplicates included) comes back
+    * in its input column types. Output: (w_start, dims...).
     */
   def windowedFrontier(events: DataFrame, tsCol: String, dims: Seq[String],
                        windowLen: String, lateness: String): DataFrame =
-    events
-      .withWatermark(tsCol, lateness)
-      .groupBy(window(col(tsCol), windowLen).as("w"))
-      .agg(graft.functions.SkylineAgg.skyline_agg(
-        array(dims.map(d => col(d).cast("double")): _*)).as("sky"))
-      .select(col("w.start").as("w_start"), explode(col("sky")).as("p"))
-      .select(col("w_start") +:
-        dims.zipWithIndex.map { case (d, i) => col("p")(i).as(d) }: _*)
+    graft.operators.SkylineOps.skylineOf(events.withWatermark(tsCol, lateness),
+        Seq(window(col(tsCol), windowLen).as("w")), dims)
+      .select(col("w.start").as("w_start") +: dims.map(col): _*)
 }

@@ -46,14 +46,12 @@ object StreamEmbDedup {
   final case class EmbVote(vec_id: Long, table: Int,
                            ts: java.sql.Timestamp, dup: Boolean)
 
-  /** Internal row (public: generated deserializers must reach the
-    * constructor — the Janino note on the sibling twins). */
-  final case class EmbIn(bucket: Int, vecId: Long,
-                         ts: java.sql.Timestamp, v: Array[Double])
-
   /** (idCol, tsCol, vecCol) stream → flagged stream (vec_id, dup).
     * Append mode. Also runs on a batch frame (state starts empty: pure
-    * greedy first-occurrence flagging over the input).
+    * greedy first-occurrence flagging over the input). It is
+    * [[flagNearDupVotes]] with one table, each vote projected to its
+    * (vec_id, dup): same operator, same state (key = bucket, the table-0
+    * key of the multi-table layout).
     *
     * `saturated` (optional): a registered LongAccumulator incremented
     * once per valid, unflagged arrival REJECTED from the keep-set because
@@ -67,56 +65,9 @@ object StreamEmbDedup {
                    cap: Int, lateness: String,
                    saturated: Option[org.apache.spark.util.LongAccumulator]
                      = None): Dataset[EmbFlag] = {
-    require(bits >= 1 && bits <= 16, s"bits out of range: $bits")
-    require(cap >= 1, s"cap must be >= 1: $cap")
-    val spark = embs.sparkSession
-    import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
-    val rows = embs
-      .select(col(idCol).cast("long").as("vecId"), col(tsCol).as("ts"),
-        graft.operators.VectorOps.asDouble(col(vecCol)).as("v"))
-      .withWatermark("ts", lateness)
-      // A null or dimension-drifted vector nulls every plane dot, so all
-      // its sign bits fall to the otherwise(0) arm and it lands in bucket
-      // 0 — harmless: the per-row guards below flag it false and never
-      // admit it to the keep-set.
-      .select(
-        graft.operators.VectorOps.bucketCol(col("v"), 0, bits, dims)
-          .as("bucket"),
-        col("vecId"), col("ts"), col("v"))
-      .as[EmbIn]
-
-    rows
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState[List[(Long, Array[Double])], EmbFlag](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: Int, it: Iterator[EmbIn],
-         state: GroupState[List[(Long, Array[Double])]]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = it.toArray.sortBy(r => (r.ts.getTime, r.vecId))
-            val kept0 = state.getOption.getOrElse(Nil)
-            var kept = kept0
-            val out = sorted.map { r =>
-              val ok = r.v != null && r.v.length == dims
-              val dup = ok &&
-                kept.exists { case (_, kv) => cos(kv, r.v) >= minCos }
-              if (ok && !dup) {
-                if (kept.size < cap) kept = (r.vecId, r.v) :: kept
-                else saturated.foreach(_.add(1L))
-              }
-              EmbFlag(r.vecId, dup)
-            }
-            // Write only when the keep-set grew (a per-batch put
-            // otherwise — the sibling twins' state-write discipline).
-            if (kept ne kept0) state.update(kept)
-            try state.setTimeoutTimestamp(
-              sorted.map(_.ts.getTime).max, lateness)
-            catch { case _: UnsupportedOperationException |
-                         _: IllegalArgumentException => () }
-            out.iterator
-          }
-      }
+    import embs.sparkSession.implicits._
+    flagNearDupVotes(embs, idCol, tsCol, vecCol, 1, bits, dims, minCos, cap,
+      lateness, saturated).select(col("vec_id"), col("dup")).as[EmbFlag]
   }
 
   private def cos(a: Array[Double], b: Array[Double]): Double = {
@@ -129,8 +80,9 @@ object StreamEmbDedup {
   }
 
   /** Internal multi-table row: `key` = table · 2¹⁶ + bucket (bits ≤ 16,
-    * so buckets never collide across tables). Public for the generated
-    * deserializers, as [[EmbIn]]. */
+    * so buckets never collide across tables). Public: generated
+    * deserializers must reach the constructor (the Janino note on the
+    * sibling twins). */
   final case class EmbTIn(key: Int, vecId: Long,
                           ts: java.sql.Timestamp, v: Array[Double])
 

@@ -87,8 +87,8 @@ class PlanShapeSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     val df = SparkEntry.queries("sky2d")(spark, sf)
     val meta = scanMeta(df)
-    // Both scans (frontier aggregate + duplicate-recovery semi-join side)
-    // must read the two dimension columns and nothing else.
+    // The one scan (the frontier aggregate's input) must read the two
+    // dimension columns and nothing else.
     assert(meta.contains("l_extendedprice") && meta.contains("l_discount"),
       s"dims missing from scan: $meta")
     assert(!meta.contains("l_orderkey") && !meta.contains("l_comment"),
@@ -101,10 +101,17 @@ class PlanShapeSpec extends AnyFunSuite {
     val dims = Seq("l_extendedprice", "l_discount")
     val pid = graft.operators.SkylineOps.dimPartitionCol(
       array(dims.map(col): _*), 100000.0, 8)
+    // The row-returning skyline operators answer from the aggregate too:
+    // no second scan, no semi-join back to the input.
     Seq(
       "metricsJson" -> graft.operators.SkylineOps.metricsJson(li, dims, pid, 8, "1"),
       "partitionSkylineStatsFull" ->
-        graft.operators.SkylineOps.partitionSkylineStatsFull(li, dims, pid)
+        graft.operators.SkylineOps.partitionSkylineStatsFull(li, dims, pid),
+      "skylineRows" -> graft.operators.SkylineOps.skylineRows(li, dims),
+      "groupedSkylineRows" ->
+        graft.operators.SkylineOps.groupedSkylineRows(li, Seq("l_returnflag"), dims),
+      "mrSkylinePoints" -> graft.operators.SkylineOps.mrSkylinePoints(li, dims, pid),
+      "frontier" -> graft.operators.SkylineOps.frontier(li, dims)
     ).foreach { case (name, df) =>
       val plan = df.queryExecution.sparkPlan
       assert(fileScans(plan).size == 1, s"$name must scan its input once:\n$plan")

@@ -1,9 +1,13 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.TestSpark
 import graft.core.PropHelpers
@@ -209,5 +213,196 @@ class SkylineOpsEdgeSpec extends AnyFunSuite with PropHelpers {
           s"topdom diverged: $pts")
       }
     }
+  }
+
+  // ------------------------------------------------ typed row multisets
+
+  /** Exact dimension types and their value ladders: index 0 and 1 are
+    * IEEE-equal for the float types (-0.0 and 0.0), and every value is
+    * exactly a double. `long` sits near 2^52, decimal(15,2) near 10^13. */
+  private val ExactTypes: Seq[(DataType, Seq[Any])] = Seq(
+    IntegerType -> Seq(-3, 4, 4, 11, 18),
+    ShortType -> Seq(-2000, -1000, 0, 1000, 2000).map(_.toShort),
+    LongType -> Seq(-(1L << 53), -(1L << 52) + 1, 0L, (1L << 52) + 3, (1L << 53) - 1),
+    FloatType -> Seq(-0.0f, 0.0f, 0.1f, 2.5f, 7000.25f),
+    DoubleType -> Seq(-0.0, 0.0, 0.1, 2.5, 7000.125),
+    DecimalType(15, 2) -> Seq("-9999999999999.99", "-0.01", "0.00",
+      "1234567890123.45", "9999999999999.99").map(new java.math.BigDecimal(_)))
+
+  private def num(v: Any): Double = v.asInstanceOf[Number].doubleValue
+
+  /** One cell as (type, exact bits): -0.0 and 0.0 stay apart. */
+  private def typedKey(v: Any): (String, String) = v match {
+    case d: Double => "double" -> java.lang.Double.doubleToRawLongBits(d).toString
+    case f: Float => "float" -> java.lang.Float.floatToRawIntBits(f).toString
+    case b: java.math.BigDecimal => "decimal" -> b.toPlainString
+    case n: Number => n.getClass.getSimpleName -> n.toString
+  }
+
+  /** One cell by its value, -0.0 folded into 0.0 (distinct's equality). */
+  private def valueKey(v: Any): Double = num(v) + 0.0
+
+  private def multiset[K](rows: Seq[Seq[Any]], key: Any => K): Map[Seq[K], Int] =
+    rows.map(_.map(key)).groupBy(identity).view.mapValues(_.size).toMap
+
+  private def dom(a: Seq[Any], b: Seq[Any]): Boolean =
+    a.zip(b).forall { case (x, y) => num(x) <= num(y) } &&
+      a.zip(b).exists { case (x, y) => num(x) < num(y) }
+
+  /** O(n²) reference: rows no other row dominates, duplicates kept. */
+  private def bruteSkyline(rows: Seq[Seq[Any]]): Seq[Seq[Any]] =
+    rows.filter(p => !rows.exists(q => dom(q, p)))
+
+  test("skyline operators return the brute-force typed row multiset over exact numeric types") {
+    val spark = TestSpark.spark
+    val caseGen = for {
+      d <- Gen.choose(2, 3)
+      types <- Gen.listOfN(d, Gen.oneOf(ExactTypes.indices))
+      rows <- Gen.listOfN(24, Gen.zip(Gen.choose(0, 2), Gen.listOfN(d, Gen.choose(0, 4))))
+    } yield (types, rows)
+    forAll(caseGen, n = 10) { case (typeIdx, picks) =>
+      val dims = typeIdx.indices.map(i => s"d$i")
+      val schema = StructType(StructField("g", IntegerType) +:
+        typeIdx.zip(dims).map { case (t, d) => StructField(d, ExactTypes(t)._1) })
+      val rows = picks.map { case (g, ks) =>
+        g +: ks.zip(typeIdx).map { case (k, t) => ExactTypes(t)._2(k) } }
+      val df = spark.createDataFrame(rows.map(Row.fromSeq).asJava, schema)
+        .repartition(3)
+      val pts = rows.map(_.tail)
+      val sky = bruteSkyline(pts)
+      val ctx = s"types=${typeIdx.map(ExactTypes(_)._1.simpleString)} rows=$rows"
+      def got(out: DataFrame): Seq[Seq[Any]] = out.collect().map(_.toSeq).toSeq
+      def sameTypes(out: DataFrame, cols: Seq[String], name: String): Unit =
+        assert(out.schema.fields.map(_.dataType).toSeq ==
+          cols.map(c => schema(c).dataType), s"$name types: ${out.schema} $ctx")
+
+      val rowsOut = SkylineOps.skylineRows(df, dims)
+      sameTypes(rowsOut, dims, "skylineRows")
+      assert(multiset(got(rowsOut), typedKey) == multiset(sky, typedKey),
+        s"skylineRows $ctx")
+
+      val grouped = SkylineOps.groupedSkylineRows(df, Seq("g"), dims)
+      sameTypes(grouped, "g" +: dims, "groupedSkylineRows")
+      val groupedRef = rows.groupBy(_.head).toSeq.flatMap { case (g, rs) =>
+        bruteSkyline(rs.map(_.tail)).map(g +: _) }
+      assert(multiset(got(grouped), typedKey) == multiset(groupedRef, typedKey),
+        s"groupedSkylineRows $ctx")
+
+      val front = SkylineOps.frontier(df, dims)
+      sameTypes(front, dims, "frontier")
+      assert(multiset(got(front), valueKey) ==
+        multiset(sky, valueKey).keys.map(_ -> 1).toMap,
+        s"frontier $ctx")
+
+      // atan squeezes every ladder into (0.4, 3.6), so the partition ids
+      // spread over all four partitions and no int cast overflows.
+      val vecD = array(dims.map(d => atan(col(d).cast("double")) + lit(2.0)): _*)
+      Seq(
+        "mrdim" -> SkylineOps.dimPartitionCol(vecD, 4.0, 4),
+        "mrgrid" -> SkylineOps.gridPartitionCol(vecD, dims.size, 4.0, 4),
+        "mrangle" -> SkylineOps.anglePartitionCol(vecD, dims.size, 4)
+      ).foreach { case (name, pid) =>
+        val mr = SkylineOps.mrSkylinePoints(df, dims, pid)
+        sameTypes(mr, dims, s"mrSkylinePoints $name")
+        assert(multiset(got(mr), typedKey) == multiset(sky, typedKey),
+          s"mrSkylinePoints $name $ctx")
+      }
+    }
+  }
+
+  test("skylineRows keeps the kernel's NaN rules and every duplicate's multiplicity") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // d <= 3 with a NaN routes the kernel to SFS, where a NaN coordinate
+    // is a wildcard: (4, 0.5) drops both copies of (NaN, 1), while
+    // (NaN, 0.1) survives next to the points it "dominates".
+    val nan = Double.NaN
+    val df = Seq((nan, 1.0), (2.0, 2.0), (1.0, 3.0), (nan, 1.0), (4.0, 0.5),
+      (nan, 0.1), (nan, 0.1), (5.0, 5.0)).toDF("x", "y")
+    val got = SkylineOps.skylineRows(df, Seq("x", "y")).collect()
+      .map(r => (r.getDouble(0), r.getDouble(1)))
+    assert(got.map(_.toString).sorted.toSeq ==
+      Seq((1.0, 3.0), (2.0, 2.0), (4.0, 0.5), (nan, 0.1), (nan, 0.1))
+        .map(_.toString).sorted, s"got ${got.toSeq}")
+  }
+
+  /** The messages of `t` and every cause below it. */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  /** `df` over dims (x, y) through skylineRows, metricsJson and the batch
+    * windowedFrontier: each must fail, naming column `x` and `what`. */
+  private def failsNamed(df: DataFrame, what: String): Unit = {
+    val withTs = df.withColumn("ts", lit(new java.sql.Timestamp(0L)))
+    Seq[(String, () => Any)](
+      "skylineRows" -> (() => SkylineOps.skylineRows(df, Seq("x", "y")).collect()),
+      "metricsJson" -> (() => SkylineOps.metricsJson(df, Seq("x", "y"),
+        lit(0), 4, "1").collect()),
+      "windowedFrontier" -> (() => graft.streaming.EventWindows.windowedFrontier(
+        withTs, "ts", Seq("x", "y"), "10 minutes", "5 minutes").collect())
+    ).foreach { case (name, run) =>
+      val e = intercept[Exception](run())
+      val msg = messages(e)
+      assert(msg.contains("skyline dimension `x`") && msg.contains(what),
+        s"$name: $msg")
+    }
+  }
+
+  test("a null coordinate fails the query, naming its column") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // Read as 0.0, the null would dominate (1, 6) and (0.5, 7).
+    failsNamed(Seq[(Option[Double], Double)]((None, 5.0), (Some(1.0), 6.0),
+      (Some(0.5), 7.0), (Some(3.0), 3.0)).toDF("x", "y"), "is null")
+  }
+
+  test("a long above 2^53 fails the query, naming its column") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // Both cast to 2^53: the second row would survive though dominated.
+    failsNamed(Seq(((1L << 53), 0L), ((1L << 53) + 1, 0L)).toDF("x", "y"),
+      "bigint value that a double cannot carry exactly")
+    // Every long a double carries exactly passes, 2^53 itself included.
+    assert(SkylineOps.skylineRows(Seq(((1L << 53), 0L), ((1L << 53) - 1, 1L))
+      .toDF("x", "y"), Seq("x", "y")).count() == 2)
+  }
+
+  test("a decimal(20,2) a double cannot carry fails the query, naming its column") {
+    val spark = TestSpark.spark
+    val schema = StructType(Seq(StructField("x", DecimalType(20, 2)),
+      StructField("y", DecimalType(20, 2))))
+    def df(xs: String*) = spark.createDataFrame(xs.map(x =>
+      Row(new java.math.BigDecimal(x), new java.math.BigDecimal("0.00"))).asJava, schema)
+    failsNamed(df("123456789012345678.90", "123456789012345678.91"),
+      "decimal(20,2) value that a double cannot carry exactly")
+    assert(SkylineOps.skylineRows(df("0.10", "0.20"), Seq("x", "y"))
+      .collect().map(_.getDecimal(0).toPlainString).toSeq == Seq("0.10"))
+  }
+
+  test("a non-numeric dimension fails when the plan is built, naming column and type") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val df = Seq(("1", 2.0), ("3", 1.0)).toDF("x", "y")
+    val withTs = df.withColumn("ts", lit(new java.sql.Timestamp(0L)))
+    Seq[(String, () => Any)](
+      "skylineRows" -> (() => SkylineOps.skylineRows(df, Seq("x", "y"))),
+      "metricsJson" -> (() => SkylineOps.metricsJson(df, Seq("x", "y"), lit(0), 4, "1")),
+      "windowedFrontier" -> (() => graft.streaming.EventWindows.windowedFrontier(
+        withTs, "ts", Seq("x", "y"), "10 minutes", "5 minutes"))
+    ).foreach { case (name, build) =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains("`x`") && e.getMessage.contains("string"),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("groupedSkylineRows: a null group key is its own group") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val df = Seq[(Option[String], Int, Int)]((None, 1, 1), (None, 2, 2),
+      (Some("a"), 3, 3), (Some("a"), 4, 4), (None, 0, 5)).toDF("g", "x", "y")
+    val got = SkylineOps.groupedSkylineRows(df, Seq("g"), Seq("x", "y"))
+      .collect().map(r => (Option(r.getString(0)), r.getInt(1), r.getInt(2))).toSet
+    assert(got == Set((None, 1, 1), (None, 0, 5), (Some("a"), 3, 3)), s"got $got")
   }
 }
