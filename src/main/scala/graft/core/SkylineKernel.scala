@@ -64,13 +64,13 @@ object SkylineKernel {
   }
 
   /** [[skylineCounted]] with an opaque Int tag riding on every entry
-    * (origin-partition lineage in the streaming global merge — reference
+    * (origin-partition lineage in the MR statistics merge — reference
     * `FlinkSkyline.java:593-608`): dominance ignores the tag, equal points
     * with DIFFERENT tags stay separate entries (equal vectors never
     * dominate, so both survive), and only (point, tag)-equal entries merge
-    * their counts. This is what lets the global phase hold its merged
-    * skyline in counted form — quadratic in DISTINCT (point, origin)
-    * entries, not in the duplicate-heavy expanded multiset. */
+    * their counts. This is what lets the global merge run over counted
+    * local skylines — quadratic in DISTINCT (point, origin) entries, not
+    * in the duplicate-heavy expanded multiset. */
   def skylineCountedTagged(points: ArrayBuffer[Array[Double]],
                            tags: ArrayBuffer[Int], counts: ArrayBuffer[Long])
       : (ArrayBuffer[Array[Double]], ArrayBuffer[Int], ArrayBuffer[Long]) = {
@@ -153,22 +153,23 @@ object SkylineKernel {
     (accP, accT, accC)
   }
 
-  /** [[skylineCountedTagged]] plus the surviving multiplicity per tag —
+  /** The surviving multiplicity per tag of [[skylineCountedTagged]] —
     * the MR optimality numerator (rows of each origin partition on the
-    * global skyline, reference `FlinkSkyline.java:593-608`). Shared by
-    * the streaming global phase and the batch `skyline_stats` aggregate,
-    * so both count survivors under the same rule: equal points with
-    * different tags all survive, each under its own tag. */
+    * global skyline, reference `FlinkSkyline.java:593-608`; tags with no
+    * survivor are absent). Read by [[graft.functions.SkyStatsBuffer.stats]],
+    * which both the batch `skyline_stats` aggregate and the streaming
+    * global latch use, so both count survivors under the same rule: equal
+    * points with different tags all survive, each under its own tag. */
   def mergeTagged(points: ArrayBuffer[Array[Double]], tags: ArrayBuffer[Int],
-                  counts: ArrayBuffer[Long]): TaggedMerge = {
-    val (p, t, c) = skylineCountedTagged(points, tags, counts)
+                  counts: ArrayBuffer[Long]): Map[Int, Long] = {
+    val (_, t, c) = skylineCountedTagged(points, tags, counts)
     val surv = scala.collection.mutable.HashMap.empty[Int, Long]
     var i = 0
     while (i < t.length) {
       surv(t(i)) = surv.getOrElse(t(i), 0L) + c(i)
       i += 1
     }
-    TaggedMerge(p, t, c, surv.toMap)
+    surv.toMap
   }
 
   /** d ≤ 3 staircase sweep (see the object scaladoc). Processing order is
@@ -331,13 +332,6 @@ object SkylineKernel {
   def merge(a: ArrayBuffer[Array[Double]], b: ArrayBuffer[Array[Double]]): ArrayBuffer[Array[Double]] =
     skylineOf(a ++ b)
 }
-
-/** Result of [[SkylineKernel.mergeTagged]]: the merged skyline as counted
-  * (point, tag, multiplicity) entries, and the surviving multiplicity per
-  * tag (tags with no survivor are absent). */
-final case class TaggedMerge(points: ArrayBuffer[Array[Double]],
-                             tags: ArrayBuffer[Int], counts: ArrayBuffer[Long],
-                             survivors: Map[Int, Long])
 
 /** Mutable aggregation buffer for the skyline aggregate function.
   *

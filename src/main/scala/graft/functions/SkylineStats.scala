@@ -1,6 +1,7 @@
 package graft.functions
 
 import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
@@ -35,12 +36,19 @@ final class SkyStatsBuffer(val parts: mutable.HashMap[Int, SkyStatsBuffer.Part])
       }
     }
 
+  /** Partition `pid`'s local skyline, already counted: `counts(i)` copies
+    * of `points(i)`. The streaming latch's arrivals; no input rows are
+    * counted, so its `c_rows` stay 0. */
+  def put(pid: Int, points: Array[Array[Double]], counts: Array[Long]): Unit =
+    parts(pid) = new SkyStatsBuffer.Part(0L,
+      new SkyBuffer(ArrayBuffer.from(points), ArrayBuffer.from(counts), SkyBuffer.MinCompact))
+
   /** Compact every local skyline, then merge them tagged by pid: a
     * partition's survivors are its entries left on the merged skyline. */
   def stats(): Array[PartitionStats] = {
-    val pts = mutable.ArrayBuffer.empty[Array[Double]]
-    val tags = mutable.ArrayBuffer.empty[Int]
-    val cnts = mutable.ArrayBuffer.empty[Long]
+    val pts = ArrayBuffer.empty[Array[Double]]
+    val tags = ArrayBuffer.empty[Int]
+    val cnts = ArrayBuffer.empty[Long]
     val local = parts.toSeq.sortBy(_._1).map { case (pid, p) =>
       p.sky.compact()
       pts ++= p.sky.points
@@ -48,7 +56,7 @@ final class SkyStatsBuffer(val parts: mutable.HashMap[Int, SkyStatsBuffer.Part])
       cnts ++= p.sky.counts
       (pid, p.rows, p.sky.counts.sum)
     }
-    val surv = SkylineKernel.mergeTagged(pts, tags, cnts).survivors
+    val surv = SkylineKernel.mergeTagged(pts, tags, cnts)
     local.map { case (pid, rows, loc) =>
       PartitionStats(pid, rows, loc, surv.getOrElse(pid, 0L))
     }.toArray
@@ -68,9 +76,10 @@ object SkyStatsBuffer {
   * its partition's local skyline map-side, only compacted local skylines
   * (plus one row count per partition) cross the shuffle, and `finish`
   * merges the local skylines tagged by partition id
-  * ([[graft.core.SkylineKernel.mergeTagged]], the tagged merge the
-  * streaming global phase uses). One output entry per partition id that
-  * had rows, sorted by pid.
+  * ([[graft.core.SkylineKernel.mergeTagged]]). One output entry per
+  * partition id that had rows, sorted by pid. The streaming latch holds
+  * the same buffer, so both paths count survivors in [[SkyStatsBuffer.stats]]
+  * and write their record through [[SkylineStats.record]].
   *
   * A null partition id fails the query: the buffer keys on `Int`, and
   * folding nulls into some partition would silently skew the statistics.
@@ -101,6 +110,33 @@ class SkylineStats
 
 object SkylineStats {
   val NullPid = "skyline_stats: null partition id (the pid column must be non-null)"
+
+  /** D4 optimality (reference formula: `FlinkSkyline.java:590-608`): the
+    * sum of `c_surv / c_local` over partitions with a local skyline, taken
+    * in pid order, divided by the FIXED partition count, so a partition
+    * without one contributes 0 but stays in the denominator. */
+  def optimality(stats: Seq[PartitionStats], partitions: Int): Double =
+    stats.sortBy(_.pid).collect {
+      case s if s.c_local > 0 => s.c_surv.toDouble / s.c_local
+    }.sum / partitions
+
+  /** The reference's emitted metrics record, byte for byte the hand-built
+    * JSON of `FlinkSkyline.java:625-650`: query_id, record_count,
+    * skyline_size (the survivors of every partition), optimality (%.4f)
+    * and the four timings. Divergence D3: `query_latency_ms` is computed
+    * by the reference but absent from its record, so it is absent here. */
+  def record(queryId: String, recordCount: String, stats: Seq[PartitionStats],
+             partitions: Int, ingestMs: Long, localMs: Long, globalMs: Long,
+             totalMs: Long): String =
+    String.format(java.util.Locale.US, RecordFmt, queryId, recordCount,
+      Long.box(stats.map(_.c_surv).sum), Double.box(optimality(stats, partitions)),
+      Long.box(ingestMs), Long.box(localMs), Long.box(globalMs), Long.box(totalMs))
+
+  private val RecordFmt =
+    "{\"query_id\": \"%s\", \"record_count\": %s, \"skyline_size\": %d, " +
+      "\"optimality\": %.4f, \"ingestion_time_ms\": %d, " +
+      "\"local_processing_time_ms\": %d, \"global_processing_time_ms\": %d, " +
+      "\"total_processing_time_ms\": %d}"
 
   private lazy val fn = udaf(new SkylineStats)
 

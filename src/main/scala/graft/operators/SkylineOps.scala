@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.{PartitionStats, SkylineStats}
 import graft.functions.SkylineAgg.skyline_agg
 import graft.functions.SkylineStats.skyline_stats
 
@@ -332,53 +333,48 @@ object SkylineOps {
     * its partition's local skyline map-side and merges the local skylines,
     * tagged by partition id, in `finish`. */
   def partitionSkylineStatsFull(df: DataFrame, dims: Seq[String], pid: Column): DataFrame =
-    statsByKeys(df.select((pid.as("pid") +: dims.map(col)): _*), dims, Nil)
+    statsOf(df, dims, pid).toDF("st")
+      .select(explode(col("st")).as("s"))
+      .select(Seq("pid", "c_rows", "c_local", "c_surv").map(c => col(s"s.$c").as(c)): _*)
 
-  /** The stats pipeline behind [[partitionSkylineStatsFull]], generalized to
-    * extra leading group keys (used by [[triggerCadence]] to compute every
+  /** The stats pipeline behind every MR statistic, generalized to extra
+    * leading group keys (used by [[triggerCadence]] to compute every
     * barrier's stats in ONE pass): `tagged` carries `keys ++ "pid" ++ dims`.
     * One `skyline_stats` aggregate per key group (a single global group when
-    * `keys` is empty), exploded to one row per (keys, pid) with
-    * c_rows / c_local / c_surv. Only local skylines cross the shuffle — the
-    * MR design's own cost model; no input row is shuffled or joined.
+    * `keys` is empty) as column `st`, every pid's [[PartitionStats]] sorted
+    * by pid. Only local skylines cross the shuffle — the MR design's own
+    * cost model; no input row is shuffled or joined.
     */
   private def statsByKeys(tagged: DataFrame, dims: Seq[String],
                           keys: Seq[String]): DataFrame =
     tagged.groupBy(keys.map(col): _*)
       .agg(skyline_stats(col("pid").cast("int"), vec(tagged, dims)).as("st"))
-      .select(keys.map(col) :+ explode(col("st")).as("s"): _*)
-      .select(keys.map(col) ++
-        Seq("pid", "c_rows", "c_local", "c_surv").map(c => col(s"s.$c").as(c)): _*)
 
-  /** The reference's emitted result record (byte-layout parity with the
-    * hand-built JSON at `java/org.main/FlinkSkyline.java:625-650`):
-    * query_id, record_count, skyline_size, optimality (%.4f), and the four
-    * timing fields. Divergence D3 preserved: `query_latency_ms` is computed
-    * by the reference but absent from the emitted record, so it is absent
-    * here too. Batch semantics: the caller supplies the timings (the
+  /** Every partition's [[PartitionStats]] of `df`, as one row (empty for an
+    * empty input). */
+  private def statsOf(df: DataFrame, dims: Seq[String],
+                      pid: Column): Dataset[Array[PartitionStats]] = {
+    import df.sparkSession.implicits._
+    statsByKeys(df.select((pid.as("pid") +: dims.map(col)): _*), dims, Nil)
+      .as[Array[PartitionStats]]
+  }
+
+  /** The reference's emitted result record, one row in column `json`:
+    * [[graft.functions.SkylineStats.record]] over the partitions' stats,
+    * with `record_count` the input row count. An empty input emits a
+    * zeroed record. Batch semantics: the caller supplies the timings (the
     * barrier/ingestion clock is a streaming concept); the driver-facing
     * query pins them to 0 for determinism.
     */
-  private val RecordFmt =
-    "{\"query_id\": \"%s\", \"record_count\": %d, \"skyline_size\": %d, " +
-      "\"optimality\": %.4f, \"ingestion_time_ms\": %d, " +
-      "\"local_processing_time_ms\": %d, \"global_processing_time_ms\": %d, " +
-      "\"total_processing_time_ms\": %d}"
-
   def metricsJson(df: DataFrame, dims: Seq[String], pid: Column, partitions: Int,
                   queryId: String, ingestMs: Long = 0L, localMs: Long = 0L,
-                  globalMs: Long = 0L, totalMs: Long = 0L): DataFrame =
-    partitionSkylineStatsFull(df, dims, pid)
-      .agg(
-        // coalesce: an empty input has no partition rows, so the sums are
-        // null — emit a zeroed record, not a null-poisoned json string.
-        coalesce(sum(col("c_rows")), lit(0L)).as("rc"),
-        coalesce(sum(col("c_surv")), lit(0L)).as("ss"),
-        coalesce(sum(col("c_surv").cast("double") / col("c_local").cast("double"))
-          / lit(partitions.toDouble), lit(0.0)).as("opt"))
-      .select(format_string(RecordFmt,
-        lit(queryId), col("rc"), col("ss"), col("opt"),
-        lit(ingestMs), lit(localMs), lit(globalMs), lit(totalMs)).as("json"))
+                  globalMs: Long = 0L, totalMs: Long = 0L): DataFrame = {
+    import df.sparkSession.implicits._
+    statsOf(df, dims, pid).map(st => SkylineStats.record(queryId,
+        st.map(_.c_rows).sum.toString, st.toSeq, partitions,
+        ingestMs, localMs, globalMs, totalMs))
+      .toDF("json")
+  }
 
   /** O23 parity: the producer's auto-trigger cadence — "query every N
     * records" (`python/unified_producer.py:25,180-187`) — emulated in batch:
@@ -398,39 +394,39 @@ object SkylineOps {
   def triggerCadence(df: DataFrame, idCol: String, dims: Seq[String], pid: Column,
                      partitions: Int, barriers: Seq[Long]): DataFrame = {
     require(barriers.nonEmpty, "triggerCadence needs at least one barrier")
+    import df.sparkSession.implicits._
     val qids = filter(
       array(barriers.zipWithIndex.map { case (b, i) =>
         when(col(idCol) <= b, lit(i + 1)) }: _*),
       q => q.isNotNull)
     val tagged = df.select(
       explode(qids).as("qid") +: pid.as("pid") +: dims.map(col): _*)
-    val perQid = statsByKeys(tagged, dims, Seq("qid"))
-      .groupBy("qid")
-      .agg(
-        sum(col("c_rows")).as("rc"), sum(col("c_surv")).as("ss"),
-        (sum(col("c_surv").cast("double") / col("c_local").cast("double"))
-          / lit(partitions.toDouble)).as("opt"))
     // Left join against the full barrier list: a barrier with an empty
     // prefix has no tagged rows at all, so it must be re-introduced here.
     df.sparkSession.range(1, barriers.size + 1)
       .select(col("id").cast("int").as("qid"))
-      .join(perQid, Seq("qid"), "left")
+      .join(statsByKeys(tagged, dims, Seq("qid")), Seq("qid"), "left")
       .orderBy("qid")
-      .select(format_string(RecordFmt,
-        col("qid").cast("string"),
-        coalesce(col("rc"), lit(0L)), coalesce(col("ss"), lit(0L)),
-        coalesce(col("opt"), lit(0.0)),
-        lit(0L), lit(0L), lit(0L), lit(0L)).as("json"))
+      .as[(Int, Array[PartitionStats])]
+      .map { case (qid, st) =>
+        val stats = Option(st).getOrElse(Array.empty[PartitionStats])
+        SkylineStats.record(qid.toString, stats.map(_.c_rows).sum.toString,
+          stats.toSeq, partitions, 0L, 0L, 0L, 0L)
+      }
+      .toDF("json")
   }
 
-  /** Scalar optimality per the reference's exact formula (D4): mean over the
-    * FIXED partition count of (survivors_i / localSkylineSize_i); partitions
-    * that produced no local skyline contribute 0 to the sum but stay in the
-    * denominator. Rounded to 9 decimals — the final small-vector sum is the
-    * one place engine-dependent double summation order could differ.
-    */
-  def optimality(df: DataFrame, dims: Seq[String], pid: Column, partitions: Int): DataFrame =
-    partitionSkylineStats(df, dims, pid)
-      .select((col("c_surv").cast("double") / col("c_local").cast("double")).as("ratio"))
-      .agg(round(sum(col("ratio")) / lit(partitions.toDouble), 9).as("optimality"))
+  /** Scalar optimality per the reference's exact formula (D4,
+    * [[graft.functions.SkylineStats.optimality]]), rounded half-up to 9
+    * decimals like SQL `ROUND`: the final small-vector sum is the one place
+    * an engine's double summation order could differ. Null for an empty
+    * input, which has no partition to average. */
+  def optimality(df: DataFrame, dims: Seq[String], pid: Column, partitions: Int): DataFrame = {
+    import df.sparkSession.implicits._
+    statsOf(df, dims, pid).map(st =>
+      if (st.isEmpty) None
+      else Some(java.math.BigDecimal.valueOf(SkylineStats.optimality(st.toSeq, partitions))
+        .setScale(9, java.math.RoundingMode.HALF_UP).doubleValue()))
+      .toDF("optimality")
+  }
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.core.{SkyBuffer, SkylineKernel}
+import graft.core.SkyBuffer
+import graft.functions.{SkylineStats, SkyStatsBuffer}
 
 /** Streaming parity mode: the reference's two-phase streaming skyline
   * topology re-expressed as one Structured Streaming stateful operator.
@@ -27,7 +28,7 @@ import graft.core.{SkyBuffer, SkylineKernel}
   *   2. one `flatMapGroupsWithState` keyed by a constant. Its single state
   *      row holds every pid's [[LocalState]] and every pending
   *      [[GlobalState]] latch. Per micro-batch it runs the local phase for
-  *      each pid that received events, merges each released snapshot into
+  *      each pid that received events, files each released snapshot in
   *      its payload's latch, and emits the record once all partitions
   *      have answered.
   * One operator means one set of state-store commits per micro-batch,
@@ -47,9 +48,13 @@ import graft.core.{SkyBuffer, SkylineKernel}
   *     never seen data answers immediately with an empty skyline.
   *   - D6: local skylines are cumulative for the life of the job (never
   *     cleared); a latch clears after its emission.
-  *   - D4: optimality sums survivor ratios over reporting partitions with
-  *     localSize > 0, divided by the FIXED total partition count.
-  *   - D3: query_latency_ms is computed but absent from the emitted JSON.
+  *   - D4 and D3: the record is the batch one. The full latch's snapshots
+  *     are a [[graft.functions.SkyStatsBuffer]], and its `stats()` and
+  *     [[graft.functions.SkylineStats.record]] count survivors, take the
+  *     optimality over the FIXED partition count, and write the JSON
+  *     without query_latency_ms, exactly as `metricsJson` does.
+  *   - A payload sent twice is two triggers: each pid's second answer opens
+  *     the payload's next latch, so each trigger gets its own record.
   */
 object StreamingSkyline {
 
@@ -64,9 +69,11 @@ object StreamingSkyline {
                       count: Long = 1L)
 
   /** Local-phase answer: the partition's cumulative skyline snapshot
-    * (reference Tuple6, `FlinkSkyline.java:201-213`). */
+    * (reference Tuple6, `FlinkSkyline.java:201-213`), counted: `counts(i)`
+    * copies of `sky(i)`. */
   case class LocalResult(payload: String, pid: Int, dispatchMs: Long,
-                         startMs: Long, sky: Array[Array[Double]], cpuMs: Long)
+                         startMs: Long, sky: Array[Array[Double]],
+                         counts: Array[Long], cpuMs: Long)
 
   /** Per-partition state: cumulative skyline in COUNTED form (the
     * [[graft.core.SkyBuffer]] representation — (distinct point,
@@ -80,26 +87,18 @@ object StreamingSkyline {
                         pending: List[(String, Long)], startMs: Long,
                         cpuNanos: Long)
 
-  /** Per-query global state: merged skyline as COUNTED
-    * (point, originPid, multiplicity) entries (dominance ignores the
-    * origin tag; equal points from different origins stay separate — see
-    * [[graft.core.SkylineKernel.skylineCountedTagged]]), latch count,
-    * per-partition local sizes, timing water marks. */
-  case class GlobalState(entries: List[(Array[Double], Int, Long)], arrived: Int,
-                         localSizes: Map[Int, Int], minStartMs: Long,
-                         lastArrivalMs: Long, maxLocalCpuMs: Long)
+  /** Per-payload global latch: each arrived pid's counted snapshot, the
+    * timing water marks, and the payload's next latch, which a pid's
+    * second answer to the same payload opens. */
+  case class GlobalState(snapshots: SkyStatsBuffer, minStartMs: Long,
+                         lastArrivalMs: Long, maxLocalCpuMs: Long,
+                         next: Option[GlobalState])
 
   /** The single operator's state row: every pid's local phase and every
     * payload's pending latch. Not `private`: `Encoders.kryo` rejects a
     * class that is not public in bytecode. */
   private[streaming] case class TopologyState(locals: Map[Int, LocalState],
                                               latches: Map[String, GlobalState])
-
-  /** A released local snapshot in counted form: `counts(i)` copies of
-    * `points(i)`. */
-  private case class Snapshot(payload: String, pid: Int, dispatchMs: Long,
-                              startMs: Long, points: ArrayBuffer[Array[Double]],
-                              counts: ArrayBuffer[Long], cpuMs: Long)
 
   private implicit val topologyStateEnc: Encoder[TopologyState] =
     Encoders.kryo[TopologyState]
@@ -122,7 +121,7 @@ object StreamingSkyline {
     * or newly-arrived trigger whose barrier is met (or whose partition is
     * untouched — the `-1` fast-path) as a counted snapshot. */
   private def localStep(clock: () => Long, pid: Int, events: Iterable[SkyEvent],
-                        prev: Option[LocalState]): (LocalState, Seq[Snapshot]) = {
+                        prev: Option[LocalState]): (LocalState, Seq[LocalResult]) = {
     val st = prev.getOrElse(
       LocalState(Nil, Nil, SkyBuffer.MinCompact, -1L, Nil, 0L, 0L))
     val points = events.filter(!_.isTrigger)
@@ -140,13 +139,13 @@ object StreamingSkyline {
     }
     val cpuNanos = st.cpuNanos + (System.nanoTime() - t0)
 
-    val out = ArrayBuffer.empty[Snapshot]
+    val out = ArrayBuffer.empty[LocalResult]
+    lazy val snap = { buf.compact(); (buf.points.toArray, buf.counts.toArray) }
     val stillPending = (st.pending ++ triggers).filter { case (payload, dispatchMs) =>
       val barrierMet = maxId >= requiredCount(payload)
       val untouched  = maxId == -1L // -1 fast-path: empty partition answers now
       if (barrierMet || untouched) {
-        if (out.isEmpty) buf.compact() // every snapshot of this step shares it
-        out += Snapshot(payload, pid, dispatchMs, startMs, buf.points, buf.counts,
+        out += LocalResult(payload, pid, dispatchMs, startMs, snap._1, snap._2,
           cpuNanos / 1000000L)
         false
       } else true
@@ -156,102 +155,72 @@ object StreamingSkyline {
   }
 
   /** Local phase of the two-operator formulation, keyed by pid: one
-    * [[localStep]], with each snapshot's multiplicities re-expanded. */
+    * [[localStep]]. */
   def localFn(clock: () => Long)(
       pid: Int, events: Iterator[SkyEvent],
       state: GroupState[LocalState]): Iterator[LocalResult] = {
     val (st, snaps) = localStep(clock, pid, events.toSeq, state.getOption)
     state.update(st)
-    snaps.iterator.map(s => LocalResult(s.payload, s.pid, s.dispatchMs, s.startMs,
-      SkylineKernel.expand(s.points, s.counts).toArray, s.cpuMs))
+    snaps.iterator
   }
 
-  /** Global phase step (`FlinkSkyline.java:460-660`) for one payload: merge
-    * the arriving counted snapshots into the latch (tracking origin
-    * lineage; counted tagged SFS — same result multiset as the reference's
-    * BNL merge). Right(the reference's JSON record) once `totalPartitions`
-    * have arrived (the latch then clears, D6), else Left(the latch). */
+  /** Global phase step (`FlinkSkyline.java:460-660`) for one payload: file
+    * each arriving snapshot in the first latch that lacks its pid, then
+    * emit the record of every latch all `totalPartitions` pids have
+    * answered (the latch then clears, D6). A later latch only holds pids
+    * its predecessor holds, so the full ones are a prefix of the chain.
+    * Returns the open latches and the records. */
   private def globalStep(totalPartitions: Int, clock: () => Long, payload: String,
-                         prev: Option[GlobalState], arrivals: Iterator[Snapshot])
-      : Either[GlobalState, String] = {
-    var st = prev.getOrElse(GlobalState(Nil, 0, Map.empty, Long.MaxValue, 0L, 0L))
-    // Accumulate this step's arrivals, then ONE SFS pass re-establishes the
-    // merged skyline. Cost is sort + scan over DISTINCT (point, origin)
-    // entries — the raw per-point BNL list this replaces was quadratic in
-    // the duplicate-heavy expanded multiset (249k points at 2D×10M).
-    val pts  = ArrayBuffer.empty[Array[Double]]
-    val tags = ArrayBuffer.empty[Int]
-    val cnts = ArrayBuffer.empty[Long]
-    st.entries.foreach { case (p, t, c) => pts += p; tags += t; cnts += c }
-    arrivals.foreach { r =>
-      pts ++= r.points; tags ++= Iterator.fill(r.points.length)(r.pid); cnts ++= r.counts
-      st = GlobalState(
-        st.entries,
-        st.arrived + 1,
-        st.localSizes + (r.pid -> r.counts.sum.toInt),
-        math.min(st.minStartMs, if (r.startMs == 0L) Long.MaxValue else r.startMs),
-        clock(),
-        math.max(st.maxLocalCpuMs, r.cpuMs))
+                         prev: Option[GlobalState], arrivals: Iterator[LocalResult])
+      : (Option[GlobalState], Seq[String]) = {
+    def file(latch: Option[GlobalState], r: LocalResult): GlobalState = latch match {
+      case Some(g) if g.snapshots.parts.contains(r.pid) =>
+        g.copy(next = Some(file(g.next, r)))
+      case _ =>
+        val g = latch.getOrElse(
+          GlobalState(new SkyStatsBuffer(), Long.MaxValue, 0L, 0L, None))
+        g.snapshots.put(r.pid, r.sky, r.counts)
+        g.copy(
+          minStartMs = math.min(g.minStartMs,
+            if (r.startMs == 0L) Long.MaxValue else r.startMs),
+          lastArrivalMs = clock(),
+          maxLocalCpuMs = math.max(g.maxLocalCpuMs, r.cpuMs))
     }
-    // Re-merging already-merged entries is idempotent, so a step with no
-    // arrivals costs one pass and changes nothing.
-    val m = SkylineKernel.mergeTagged(pts, tags, cnts)
-    st = st.copy(entries =
-      m.points.indices.map(i => (m.points(i), m.tags(i), m.counts(i))).toList)
-    if (st.arrived < totalPartitions) Left(st)
-    else {
-      val finishMs = clock()
-      val skySize = m.survivors.values.sum
-      val sumRatios = st.localSizes.collect {
-        case (p, size) if size > 0 => m.survivors.getOrElse(p, 0L).toDouble / size
-      }.sum
-      val optimality = sumRatios / totalPartitions
-      val mapWall    = if (st.minStartMs == Long.MaxValue) 0L
-                       else st.lastArrivalMs - st.minStartMs
-      val ingestion  = math.max(0L, mapWall - st.maxLocalCpuMs)
-      val globalMs   = finishMs - st.lastArrivalMs
-      val totalMs    = if (st.minStartMs == Long.MaxValue) 0L
-                       else finishMs - st.minStartMs
-      val parts = payload.split(",")
-      val qId = parts(0)
-      val recCount = if (parts.length > 1) parts(1).trim else "unknown"
-      Right(String.format(java.util.Locale.US,
-        "{\"query_id\": \"%s\", \"record_count\": %s, \"skyline_size\": %d, " +
-          "\"optimality\": %.4f, \"ingestion_time_ms\": %d, " +
-          "\"local_processing_time_ms\": %d, \"global_processing_time_ms\": %d, " +
-          "\"total_processing_time_ms\": %d}",
-        qId, recCount, Long.box(skySize), Double.box(optimality),
-        Long.box(ingestion), Long.box(st.maxLocalCpuMs), Long.box(globalMs),
-        Long.box(totalMs)))
+    var st = prev
+    arrivals.foreach(r => st = Some(file(st, r)))
+    val out = ArrayBuffer.empty[String]
+    while (st.exists(_.snapshots.parts.size >= totalPartitions)) {
+      out += record(totalPartitions, clock, payload, st.get)
+      st = st.get.next
     }
+    (st, out.toSeq)
+  }
+
+  /** A full latch's record: the partitions' stats in one tagged merge,
+    * written by the batch record function. The global time covers that
+    * merge. */
+  private def record(totalPartitions: Int, clock: () => Long, payload: String,
+                     g: GlobalState): String = {
+    val stats = g.snapshots.stats()
+    val finishMs = clock()
+    val started = g.minStartMs != Long.MaxValue
+    val mapWall = if (started) g.lastArrivalMs - g.minStartMs else 0L
+    val parts = payload.split(",")
+    SkylineStats.record(parts(0), if (parts.length > 1) parts(1).trim else "unknown",
+      stats.toSeq, totalPartitions,
+      ingestMs = math.max(0L, mapWall - g.maxLocalCpuMs), localMs = g.maxLocalCpuMs,
+      globalMs = finishMs - g.lastArrivalMs,
+      totalMs = if (started) finishMs - g.minStartMs else 0L)
   }
 
   /** Global phase of the two-operator formulation, keyed by payload: one
-    * [[globalStep]] over the arriving snapshots, run-length compressed
-    * back to counted form. */
+    * [[globalStep]] over the arriving snapshots. */
   def globalFn(totalPartitions: Int, clock: () => Long)(
       payload: String, results: Iterator[LocalResult],
-      state: GroupState[GlobalState]): Iterator[String] =
-    globalStep(totalPartitions, clock, payload, state.getOption,
-      results.map(counted)) match {
-      case Left(st) => state.update(st); Iterator.empty
-      case Right(record) => state.remove(); Iterator.single(record)
-    }
-
-  /** A [[LocalResult]] as a counted snapshot. Duplicates are adjacent
-    * ([[graft.core.SkylineKernel.expand]] expands counted runs); value
-    * equality, not `eq` — a shuffle re-materializes arrays. */
-  private def counted(r: LocalResult): Snapshot = {
-    val pts  = ArrayBuffer.empty[Array[Double]]
-    val cnts = ArrayBuffer.empty[Long]
-    var i = 0
-    while (i < r.sky.length) {
-      var j = i + 1
-      while (j < r.sky.length && java.util.Arrays.equals(r.sky(j), r.sky(i))) j += 1
-      pts += r.sky(i); cnts += (j - i).toLong
-      i = j
-    }
-    Snapshot(r.payload, r.pid, r.dispatchMs, r.startMs, pts, cnts, r.cpuMs)
+      state: GroupState[GlobalState]): Iterator[String] = {
+    val (st, records) = globalStep(totalPartitions, clock, payload, state.getOption, results)
+    st.fold(state.remove())(state.update)
+    records.iterator
   }
 
   /** The stateful step of [[apply]]: one [[localStep]] per pid that received
@@ -261,7 +230,7 @@ object StreamingSkyline {
       state: GroupState[TopologyState]): Iterator[String] = {
     val st = state.getOption.getOrElse(TopologyState(Map.empty, Map.empty))
     var locals = st.locals
-    val released = ArrayBuffer.empty[Snapshot]
+    val released = ArrayBuffer.empty[LocalResult]
     events.toSeq.groupBy(_.pid).foreach { case (pid, evs) =>
       val (ls, snaps) = localStep(clock, pid, evs, locals.get(pid))
       locals += pid -> ls
@@ -270,11 +239,10 @@ object StreamingSkyline {
     var latches = st.latches
     val out = ArrayBuffer.empty[String]
     released.groupBy(_.payload).foreach { case (payload, snaps) =>
-      globalStep(totalPartitions, clock, payload, latches.get(payload),
-        snaps.iterator) match {
-        case Left(g) => latches += payload -> g
-        case Right(record) => latches -= payload; out += record
-      }
+      val (g, records) = globalStep(totalPartitions, clock, payload,
+        latches.get(payload), snaps.iterator)
+      latches = g.fold(latches - payload)(latches.updated(payload, _))
+      out ++= records
     }
     state.update(TopologyState(locals, latches))
     out.iterator

@@ -258,6 +258,55 @@ class StreamingSkylineSpec extends AnyFunSuite {
     assert(parse(byQid("2"), "skyline_size").toInt == expAll)
   }
 
+  test("a repeated trigger payload gets one record per trigger, in one micro-batch or two") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val pts = gen(500).map { case (id, v) => point(id, v) }
+    def trigger = StreamingSkyline.fanOutTrigger("7,450", NPart, 123L)
+    val layouts = Seq(
+      "one micro-batch" -> Seq(pts, trigger ++ trigger),
+      "two micro-batches" -> Seq(pts, trigger, trigger))
+    val expected = SkylineKernel.skylineOf(ArrayBuffer(gen(500).map(_._2): _*)).size
+    val records = layouts.map { case (name, batches) =>
+      val stream = MemoryStream[SkyEvent]
+      val got = runQuery(stream) { sync => batches.foreach { b => stream.addData(b); sync } }
+      assert(got.size == 2, s"$name: $got")
+      got.foreach(r => assert(parse(r, "skyline_size").toInt == expected, s"$name: $r"))
+      name -> got.map(r => (parse(r, "query_id"), parse(r, "skyline_size"),
+        parse(r, "optimality")))
+    }
+    // Both layouts: two equal records, each the single trigger's answer.
+    assert(records.map(_._2).distinct.size == 1, records)
+    assert(records.head._2.distinct.size == 1, records)
+  }
+
+  test("stream records agree with the batch triggerCadence records on every prefix") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val pts = gen(600)
+    val barriers = Seq(199L, 399L, 599L)
+    val stream = MemoryStream[SkyEvent]
+    val got = runQuery(stream) { sync =>
+      barriers.zipWithIndex.foldLeft(0L) { case (lo, (b, i)) =>
+        stream.addData(pts.filter { case (id, _) => id >= lo && id <= b }
+          .map { case (id, v) => point(id, v) })
+        sync
+        stream.addData(StreamingSkyline.fanOutTrigger(s"${i + 1},0", NPart, 1L))
+        sync
+        b + 1
+      }
+    }
+    val df = pts.map { case (id, v) => (id, v(0), v(1)) }.toDF("id", "x", "y")
+    val pid = graft.operators.SkylineOps.dimPartitionCol(
+      org.apache.spark.sql.functions.array($"x", $"y"), 10000.0, NPart)
+    val want = graft.operators.SkylineOps.triggerCadence(df, "id", Seq("x", "y"), pid,
+      NPart, barriers).as[String].collect().toSeq
+    def key(json: String) = Seq("query_id", "skyline_size", "optimality").map(parse(json, _))
+    assert(got.map(key).sortBy(_.head) == want.map(key), s"stream $got\nbatch $want")
+  }
+
   /** The two-operator topology the fused operator replaced, replayed on the
     * driver: per micro-batch, [[StreamingSkyline.localFn]] per pid that has
     * events, then [[StreamingSkyline.globalFn]] per payload with arrivals,
