@@ -88,16 +88,42 @@ object SkylineKernel {
     // bit-for-bit rather than silently changing shape.
     if (points(0).length <= 3 && !points.exists(hasNaN))
       return skylineCountedTaggedLex(points, tags, counts)
+    // Sort key (rank, sum), a linear extension of dominance off NaN: rank
+    // is the count of +Infinity coordinates minus the count of -Infinity
+    // ones, sum the sum of the finite coordinates. A dominator's rank is
+    // <= the candidate's, and at equal rank both hold their infinities at
+    // the same positions, so its finite sum is <= the candidate's. (A plain
+    // coordinate sum is NaN for a point holding both infinities, which
+    // sorted it after the points it dominates.) NaN-bearing points rank
+    // last with a NaN sum, as they always sorted.
+    val ranks = new Array[Int](n)
     val sums = new Array[Double](n)
     var i = 0
-    while (i < n) { sums(i) = Dominance.coordSum(points(i)); i += 1 }
-    // (sum asc, coords lexicographic, tag) — equal (point, tag) entries
-    // become adjacent. All comparisons via Double.compare: a TOTAL order
-    // (NaN sorts last, consistently), so sortWith's strict-weak-order
+    while (i < n) {
+      val p = points(i)
+      var r = 0
+      var sum = 0.0
+      var k = 0
+      while (k < p.length) {
+        val v = p(k)
+        if (v == Double.PositiveInfinity) r += 1
+        else if (v == Double.NegativeInfinity) r -= 1
+        else sum += v
+        k += 1
+      }
+      if (sum.isNaN) { ranks(i) = Int.MaxValue; sums(i) = Double.NaN }
+      else { ranks(i) = r; sums(i) = sum }
+      i += 1
+    }
+    def keyCompare(ra: Int, sa: Double, rb: Int, sb: Double): Int =
+      if (ra != rb) Integer.compare(ra, rb) else java.lang.Double.compare(sa, sb)
+    // (rank, sum asc, coords lexicographic, tag) — equal (point, tag)
+    // entries become adjacent. All comparisons via Double.compare: a TOTAL
+    // order (NaN sorts last, consistently), so sortWith's strict-weak-order
     // contract holds for any input — a plain `<` comparator violates it
     // under NaN and TimSort may throw mid-aggregation.
     val order = points.indices.toArray.sortWith { (a, b) =>
-      val c = java.lang.Double.compare(sums(a), sums(b))
+      val c = keyCompare(ranks(a), sums(a), ranks(b), sums(b))
       if (c != 0) c < 0
       else {
         val pa = points(a); val pb = points(b)
@@ -112,40 +138,42 @@ object SkylineKernel {
     val accP = new ArrayBuffer[Array[Double]](math.min(64, n))
     val accT = new ArrayBuffer[Int](math.min(64, n))
     val accC = new ArrayBuffer[Long](math.min(64, n))
+    val accR = new ArrayBuffer[Int](math.min(64, n))
     val accS = new ArrayBuffer[Double](math.min(64, n))
     var s = 0
     while (s < order.length) {
       val id = order(s)
       val p = points(id)
+      val pr = ranks(id)
       val ps = sums(id)
       // Copies of the last SURVIVOR merge without a scan (adjacency);
       // copies of a dominated point fail this check and get re-scanned —
       // each distinct dominated point still costs only one scan group.
       if (accP.nonEmpty &&
-          java.lang.Double.compare(accS(accP.length - 1), ps) == 0 &&
+          keyCompare(accR(accP.length - 1), accS(accP.length - 1), pr, ps) == 0 &&
           accT(accT.length - 1) == tags(id) &&
           java.util.Arrays.equals(accP(accP.length - 1), p)) {
         accC(accC.length - 1) += counts(id)
       } else {
         var dominated = false
         var j = 0
-        // A dominator's EXACT sum is strictly smaller, and left-to-right
-        // double summation is monotone per coordinate, so a dominator's
-        // COMPUTED sum is <= the candidate's — possibly EQUAL under
-        // rounding (1e16-magnitude coords) or at +-Infinity. The scan
-        // therefore covers the equal-sum group too and stops only at the
-        // first accepted sum strictly greater (Double.compare order, the
-        // sort's own total order — NaN-sum points just scan everything,
-        // which is correct and rare). Exact ties (same true sum) cannot
-        // dominate, so integer-band data pays only the group scan, not a
-        // lost early-exit.
-        while (j < accP.length && java.lang.Double.compare(accS(j), ps) <= 0
+        // At equal rank a dominator's EXACT finite sum is strictly
+        // smaller, and left-to-right double summation is monotone per
+        // coordinate, so its COMPUTED sum is <= the candidate's — possibly
+        // EQUAL under rounding (1e16-magnitude coords). The scan therefore
+        // covers the equal-key group too and stops only at the first
+        // accepted key strictly greater (the sort's own total order —
+        // NaN-bearing points just scan everything, which is correct and
+        // rare). Exact ties (same true sum) cannot dominate, so
+        // integer-band data pays only the group scan, not a lost
+        // early-exit.
+        while (j < accP.length && keyCompare(accR(j), accS(j), pr, ps) <= 0
             && !dominated) {
           if (Dominance.dominates(accP(j), p)) dominated = true
           j += 1
         }
         if (!dominated) {
-          accP += p; accT += tags(id); accC += counts(id); accS += ps
+          accP += p; accT += tags(id); accC += counts(id); accR += pr; accS += ps
         }
       }
       s += 1
@@ -273,8 +301,9 @@ object SkylineKernel {
     (accP, accT, accC)
   }
 
-  /** Any coordinate NaN? (Routes to the SFS path — see the fast-path gate.) */
-  private def hasNaN(p: Array[Double]): Boolean = {
+  /** Any coordinate NaN? (Routes to the SFS path — see the fast-path gate —
+    * and past [[SkyBuffer]]'s elimination filter.) */
+  private[core] def hasNaN(p: Array[Double]): Boolean = {
     var i = 0
     while (i < p.length) { if (p(i).isNaN) return true; i += 1 }
     false
@@ -333,25 +362,38 @@ object SkylineKernel {
     skylineOf(a ++ b)
 }
 
-/** Mutable aggregation buffer for the skyline aggregate function.
+/** Mutable aggregation buffer for the skyline aggregates.
   *
   * Holds a COUNTED multiset — (point, multiplicity) pairs — and compacts to
   * the running skyline once the entry count doubles past the last
   * compaction result (amortized O(log) compaction passes, each SFS). This
-  * keeps per-row `reduce` cost at an append, bounds memory at
+  * keeps per-row `add` cost at an append, bounds memory at
   * O(2·s_distinct + threshold) entries, and makes duplicate-heavy inputs
   * (the anti-correlated integer worst case) cost one entry per DISTINCT
   * point instead of one per row. [[result]] re-expands multiplicities, so
   * the aggregate's output multiset — duplicates of frontier points all
   * present — is unchanged by the representation.
   *
-  * Serialized by Kryo only at the partial→final shuffle boundary (Spark
-  * keeps aggregation buffers as live objects within a partition). The
-  * shuffled payload is bounded by `compactAt` entries (≈ 2·s_distinct +
-  * [[SkyBuffer.MinCompact]]); `merge` absorbs lazily — concatenate counted
-  * entries, compact only past the threshold — so an N-way merge costs
-  * O(log) SFS passes, not N (mirroring the reference's MR local-phase
-  * output, `FlinkSkyline.java:396-403`).
+  * Elimination filter (the EF window of LESS, Godfrey, Shipley & Gryz,
+  * VLDB 2005): each [[compact]] keeps its [[SkyBuffer.WindowSize]]
+  * lowest-coordinate-sum NaN-free survivors, and [[add]] drops a NaN-free
+  * point that one of them dominates instead of appending it. Off NaN,
+  * dominance is a strict partial order, so a dropped point is dominated by
+  * an entry of the multiset (or, transitively, by that entry's dominator)
+  * and can never be on the skyline. A dropped add still counts toward
+  * `compactAt` ([[skipped]]), so compactions run exactly when they would
+  * without the filter, and each compaction returns exactly what it would
+  * have: NaN-bearing points bypass the filter and keep the legacy SFS
+  * semantics bit for bit.
+  *
+  * The native aggregates ([[graft.functions.SkylineAggExpr]],
+  * [[graft.functions.SkylineStatsExpr]]) keep buffers as live objects
+  * within a task and ship them across the partial→final shuffle in their
+  * own binary format ([[graft.functions.SkyBufferFormat]]: the counted
+  * entries, `compactAt` and [[skipped]]). `absorb` merges lazily —
+  * concatenate counted entries, compact only past the threshold — so an
+  * N-way merge costs O(log) SFS passes, not N (mirroring the reference's
+  * MR local-phase output, `FlinkSkyline.java:396-403`).
   */
 final class SkyBuffer(
     var points: ArrayBuffer[Array[Double]],
@@ -361,23 +403,39 @@ final class SkyBuffer(
   def this() = this(new ArrayBuffer[Array[Double]], new ArrayBuffer[Long],
     SkyBuffer.MinCompact)
 
-  def add(p: Array[Double]): Unit = {
-    points += p
-    counts += 1L
-    if (points.length >= compactAt) compact()
-  }
+  /** Adds since the last compaction that the filter dropped; they count
+    * toward `compactAt` as if appended. Transient, like the window, so the
+    * streaming state's Kryo layout of this class is unchanged; the
+    * aggregates' binary format carries it. */
+  @transient var skipped: Int = 0
+
+  // The filter's window, rebuilt by every compaction; empty before the
+  // first one. Java deserialization leaves it null.
+  @transient private var window: Array[Array[Double]] = SkyBuffer.NoWindow
+
+  /** The buffer's dimensionality, or -1 while it holds no entry. */
+  def dims: Int = if (points.isEmpty) -1 else points(0).length
+
+  def add(p: Array[Double]): Unit = offer(p, 1L, copy = false)
 
   /** `count` copies of `p` as one entry. */
-  def add(p: Array[Double], count: Long): Unit = {
-    points += p
-    counts += count
-    if (points.length >= compactAt) compact()
+  def add(p: Array[Double], count: Long): Unit = offer(p, count, copy = false)
+
+  /** [[add]] of one copy for a caller that refills `p` for every row: `p`
+    * is copied only when it is kept, so a dropped row allocates nothing. */
+  def addCopy(p: Array[Double]): Unit = offer(p, 1L, copy = true)
+
+  private def offer(p: Array[Double], count: Long, copy: Boolean): Unit = {
+    if (eliminated(p)) skipped += 1
+    else { points += (if (copy) p.clone() else p); counts += count }
+    if (points.length + skipped >= compactAt) compact()
   }
 
   def absorb(other: SkyBuffer): Unit = {
     points ++= other.points
     counts ++= other.counts
-    if (points.length >= compactAt) compact()
+    skipped += other.skipped
+    if (points.length + skipped >= compactAt) compact()
   }
 
   def compact(): Unit = {
@@ -385,6 +443,8 @@ final class SkyBuffer(
     points = p
     counts = c
     compactAt = math.max(SkyBuffer.MinCompact, 2 * points.length)
+    skipped = 0
+    window = SkyBuffer.windowOf(points)
   }
 
   /** Final skyline as an array (the aggregate `finish`/`eval`), duplicates
@@ -393,9 +453,52 @@ final class SkyBuffer(
     compact()
     SkylineKernel.expand(points, counts).toArray
   }
+
+  /** Does a window point dominate `p`? Never for a NaN-bearing `p`. */
+  private def eliminated(p: Array[Double]): Boolean = {
+    val w = window
+    if (w == null || w.length == 0 || SkylineKernel.hasNaN(p)) return false
+    var i = 0
+    while (i < w.length) {
+      if (Dominance.dominates(w(i), p)) return true
+      i += 1
+    }
+    false
+  }
 }
 
 object SkyBuffer {
   /** Minimum entries between compactions; amortizes SFS sort cost. */
   val MinCompact = 1024
+
+  /** Points in the elimination filter's window. */
+  val WindowSize = 16
+
+  private val NoWindow = new Array[Array[Double]](0)
+
+  /** The [[WindowSize]] NaN-free points of `pts` with the lowest
+    * coordinate sums, lowest first (a dominator has a smaller sum, so the
+    * strongest candidates are tried first). */
+  private def windowOf(pts: ArrayBuffer[Array[Double]]): Array[Array[Double]] = {
+    val w = new Array[Array[Double]](WindowSize)
+    val ws = new Array[Double](WindowSize)
+    var n = 0
+    var i = 0
+    while (i < pts.length) {
+      val p = pts(i)
+      if (!SkylineKernel.hasNaN(p)) {
+        val s = Dominance.coordSum(p)
+        if (n < WindowSize || java.lang.Double.compare(s, ws(n - 1)) < 0) {
+          var j = math.min(n, WindowSize - 1)
+          while (j > 0 && java.lang.Double.compare(s, ws(j - 1)) < 0) {
+            w(j) = w(j - 1); ws(j) = ws(j - 1); j -= 1
+          }
+          w(j) = p; ws(j) = s
+          if (n < WindowSize) n += 1
+        }
+      }
+      i += 1
+    }
+    if (n == WindowSize) w else java.util.Arrays.copyOf(w, n)
+  }
 }

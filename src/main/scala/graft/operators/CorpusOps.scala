@@ -91,7 +91,7 @@ object CorpusOps {
       if (b.length == k) b.last else null
 
     // Kryo only crosses the shuffle boundary; within a task the buffer is a
-    // live JVM list (same rationale as SkylineAgg's SkyBuffer).
+    // live JVM list.
     override def bufferEncoder: Encoder[List[String]] =
       Encoders.kryo[List[String]]
     override def outputEncoder: Encoder[String] = Encoders.STRING

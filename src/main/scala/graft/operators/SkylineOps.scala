@@ -13,10 +13,14 @@ import graft.functions.SkylineStats.skyline_stats
   *
   * The centerpiece pattern: the skyline (Pareto frontier, minimization on
   * every dimension — reference: `java/org.main/ServiceTuple.java:53-77`) is
-  * computed by the [[graft.functions.SkylineAgg]] aggregate, whose
-  * partial/merge decomposition IS the reference's MR two-phase design
-  * (local BNL per input partition, only local skylines cross the shuffle,
-  * global BNL merge — reference: `java/org.main/FlinkSkyline.java:162-174`).
+  * computed by the native `graft_skyline_agg` aggregate
+  * ([[graft.functions.SkylineAggExpr]]), whose partial/merge decomposition
+  * IS the reference's MR two-phase design (local skyline per input
+  * partition, only local skylines cross the shuffle in the aggregate's own
+  * binary buffer, global merge — reference:
+  * `java/org.main/FlinkSkyline.java:162-174`). The MR statistics run the
+  * same way through `graft_skyline_stats`
+  * ([[graft.functions.SkylineStatsExpr]]).
   *
   * Scale design (100 TB): every operator that turns the aggregate's
   * frontier into rows ([[skylineRows]], [[groupedSkylineRows]],
@@ -78,7 +82,8 @@ object SkylineOps {
     * column type. Output: the key columns, then `dims`. */
   private[graft] def skylineOf(df: DataFrame, keys: Seq[Column],
                                dims: Seq[String]): DataFrame = {
-    val sky = df.groupBy(keys: _*).agg(skyline_agg(vec(df, dims)).as("graft_sky"))
+    val sky = graft.plans.GraftFunctions.on(df).groupBy(keys: _*)
+      .agg(skyline_agg(vec(df, dims)).as("graft_sky"))
     val keyCols = sky.columns.init.toSeq.map(col)
     sky.select(keyCols :+ explode(col("graft_sky")).as("graft_p"): _*)
       .select(keyCols ++ dims.zip(dimTypes(df, dims)).zipWithIndex.map {
@@ -347,7 +352,7 @@ object SkylineOps {
     */
   private def statsByKeys(tagged: DataFrame, dims: Seq[String],
                           keys: Seq[String]): DataFrame =
-    tagged.groupBy(keys.map(col): _*)
+    graft.plans.GraftFunctions.on(tagged).groupBy(keys.map(col): _*)
       .agg(skyline_stats(col("pid").cast("int"), vec(tagged, dims)).as("st"))
 
   /** Every partition's [[PartitionStats]] of `df`, as one row (empty for an

@@ -81,8 +81,8 @@ case class DotProduct(left: Expression, right: Expression)
 /** Registration of graft's native expressions into a session's function
   * registry, so column code can reach them via `call_function`. Uses the
   * internal `sessionState.functionRegistry` (the same registry
-  * `SparkSessionExtensions.injectFunction` feeds) — isolated here, pinned
-  * to the Spark 4.x line like the encoder note in SkylineAgg. */
+  * `SparkSessionExtensions.injectFunction` feeds) — isolated here, and
+  * pinned to the Spark 4.x line like the native expressions it lists. */
 object GraftFunctions {
   val DotName = "graft_dot"
   val ZOrderName = "graft_zorder"
@@ -94,6 +94,8 @@ object GraftFunctions {
   val ShinglesName = "graft_shingles"
   val MinhashBandsName = "graft_minhash_bands"
   val ShingleOverlapName = "graft_shingle_overlap"
+  val SkylineAggName = "graft_skyline_agg"
+  val SkylineStatsName = "graft_skyline_stats"
 
   /** The native-function catalog, one entry per expression — shared by
     * the in-process [[register]] path and the `spark.sql.extensions`
@@ -129,7 +131,13 @@ object GraftFunctions {
       (children: Seq[Expression]) => MinhashBands.fromChildren(children)),
     (FunctionIdentifier(ShingleOverlapName),
       new ExpressionInfo(classOf[ShingleOverlap].getName, ShingleOverlapName),
-      (children: Seq[Expression]) => ShingleOverlap.fromChildren(children)))
+      (children: Seq[Expression]) => ShingleOverlap.fromChildren(children)),
+    (FunctionIdentifier(SkylineAggName),
+      new ExpressionInfo(classOf[graft.functions.SkylineAggExpr].getName, SkylineAggName),
+      (children: Seq[Expression]) => graft.functions.SkylineAggExpr.fromChildren(children)),
+    (FunctionIdentifier(SkylineStatsName),
+      new ExpressionInfo(classOf[graft.functions.SkylineStatsExpr].getName, SkylineStatsName),
+      (children: Seq[Expression]) => graft.functions.SkylineStatsExpr.fromChildren(children)))
 
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry

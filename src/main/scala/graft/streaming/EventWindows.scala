@@ -54,7 +54,7 @@ object EventWindows {
       .select(col(keyCol), col("sw.start").as("w_start"), col("n_events"))
 
   /** Pareto FRONTIER per tumbling event-time window — the centerpiece
-    * skyline aggregate ([[graft.functions.SkylineAgg]]) as a watermarked
+    * skyline aggregate ([[graft.functions.SkylineAggExpr]]) as a watermarked
     * streaming aggregation: per micro-batch the partial local skylines
     * combine in the state store, so per-window state is O(frontier), never
     * the window's row count, and a window's final frontier emits once the

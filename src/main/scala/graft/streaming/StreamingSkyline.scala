@@ -150,8 +150,10 @@ object StreamingSkyline {
         false
       } else true
     }
-    (LocalState(buf.points.toList, buf.counts.toList, buf.compactAt, maxId,
-      stillPending, startMs, cpuNanos), out.toSeq)
+    // The filter's dropped adds still count toward the next compaction:
+    // fold them into the stored threshold, which keeps the schedule.
+    (LocalState(buf.points.toList, buf.counts.toList, buf.compactAt - buf.skipped,
+      maxId, stillPending, startMs, cpuNanos), out.toSeq)
   }
 
   /** Local phase of the two-operator formulation, keyed by pid: one

@@ -122,6 +122,44 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("skylineRows and metricsJson run the native aggregate as one partial/final ObjectHashAggregate pair") {
+    val spark = TestSpark.spark
+    val li = spark.read.parquet(s"$sf/lineitem.parquet")
+    val dims = Seq("l_extendedprice", "l_discount")
+    val pid = graft.operators.SkylineOps.dimPartitionCol(
+      array(dims.map(col): _*), 100000.0, 8)
+    Seq(
+      ("skylineRows", graft.operators.SkylineOps.skylineRows(li, dims),
+        classOf[graft.functions.SkylineAggExpr]),
+      ("metricsJson", graft.operators.SkylineOps.metricsJson(li, dims, pid, 8, "1"),
+        classOf[graft.functions.SkylineStatsExpr])
+    ).foreach { case (name, df, fn) =>
+      // The initial adaptive plan: exchanges are in, and nothing has run.
+      val plan = df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val aggs = plan.collect {
+        case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => a
+      }
+      val modes = aggs.flatMap(_.aggregateExpressions.collect {
+        case e if fn.isInstance(e.aggregateFunction) => e.mode
+      })
+      import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+      assert(aggs.size == 2 && modes == Seq(Final, Partial),
+        s"$name: expected one partial/final ObjectHashAggregate pair:\n$plan")
+      val exchanges = plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }
+      assert(exchanges.size == 1, s"$name plans ${exchanges.size} exchanges:\n$plan")
+      assert(!plan.treeString.contains("ScalaAggregator") && plan.collect {
+        case p => p.expressions.flatMap(_.collect {
+          case s: org.apache.spark.sql.execution.aggregate.ScalaAggregator[_, _, _] => s
+        })
+      }.flatten.isEmpty, s"$name still wraps an Aggregator:\n$plan")
+    }
+  }
+
   test("skyline onion gates share one peel: bounded lineitem scans, no persist in layers/topdom") {
     // sky_layers, sky_skyband and sky_topdom answer from ONE onion peel
     // (k frontier scans over the anti-joined rest) plus one corpus scan.

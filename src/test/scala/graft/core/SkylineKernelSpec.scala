@@ -148,6 +148,121 @@ class SkylineKernelSpec extends AnyFunSuite with PropHelpers {
     }
   }
 
+  /** The buffer without the elimination filter: every add appends, and a
+    * compaction runs once the entries reach `compactAt`. The filter must
+    * keep this schedule and its every compaction result. */
+  private final class UnfilteredBuffer {
+    var points = ArrayBuffer.empty[Array[Double]]
+    var counts = ArrayBuffer.empty[Long]
+    var compactAt = SkyBuffer.MinCompact
+    def add(p: Array[Double], c: Long): Unit = {
+      points += p; counts += c
+      if (points.length >= compactAt) compact()
+    }
+    def absorb(o: UnfilteredBuffer): Unit = {
+      points ++= o.points; counts ++= o.counts
+      if (points.length >= compactAt) compact()
+    }
+    def compact(): Unit = {
+      val (p, c) = SkylineKernel.skylineCounted(points, counts)
+      points = p; counts = c
+      compactAt = math.max(SkyBuffer.MinCompact, 2 * p.length)
+    }
+  }
+
+  private def bits(p: Array[Double]): Seq[Long] = p.toSeq.map(java.lang.Double.doubleToLongBits)
+
+  /** The counted skyline by brute force: per bit-distinct input point, its
+    * total count, kept iff no input point dominates it. */
+  private def bruteCounted(in: Seq[(Array[Double], Long)]): Map[Seq[Long], Long] = {
+    val total = in.groupMapReduce(e => bits(e._1))(_._2)(_ + _)
+    val distinct = in.map(_._1).distinctBy(bits)
+    distinct.filter(p => !distinct.exists(q => Dominance.dominates(q, p)))
+      .map(p => bits(p) -> total(bits(p))).toMap
+  }
+
+  /** Seeded rows over a small lattice plus -0.0, ±Infinity and (at `nanRate`)
+    * NaN: duplicate-heavy, with counted adds among them. */
+  private def rows(seed: Int, d: Int, n: Int, nanRate: Double): Seq[(Array[Double], Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val special = Array(-0.0, 0.0, Double.PositiveInfinity, Double.NegativeInfinity)
+    Seq.fill(n) {
+      val p = Array.fill(d) {
+        val u = rnd.nextDouble()
+        if (u < nanRate) Double.NaN
+        else if (u < nanRate + 0.04) special(rnd.nextInt(special.length))
+        else rnd.nextInt(8).toDouble
+      }
+      (p, if (rnd.nextInt(5) == 0) 1L + rnd.nextInt(4) else 1L)
+    }
+  }
+
+  /** `rs` through a filtered [[SkyBuffer]] and an [[UnfilteredBuffer]], split in
+    * two halves merged by `absorb`. Checks after every add that both
+    * buffers are as many adds away from their next compaction, and returns
+    * (buffer, unfiltered buffer, adds the filter dropped). */
+  private def feed(rs: Seq[(Array[Double], Long)]): (SkyBuffer, UnfilteredBuffer, Int) = {
+    var dropped = 0
+    def half(part: Seq[(Array[Double], Long)]): (SkyBuffer, UnfilteredBuffer) = {
+      val b = new SkyBuffer(); val l = new UnfilteredBuffer
+      part.foreach { case (p, c) =>
+        val before = b.skipped
+        if (c == 1L && p.length % 2 == 0) b.addCopy(p) else b.add(p, c)
+        if (b.skipped > before) dropped += 1
+        l.add(p, c)
+        assert(b.compactAt - b.skipped - b.points.length == l.compactAt - l.points.length,
+          "the filter moved the compaction schedule")
+      }
+      (b, l)
+    }
+    val (h1, h2) = rs.splitAt(rs.length / 2)
+    val (b1, l1) = half(h1)
+    val (b2, l2) = half(h2)
+    b1.absorb(b2); l1.absorb(l2)
+    (b1, l1, dropped)
+  }
+
+  test("elimination filter: SkyBuffer = brute-force counted multiset, d = 2..5, ±0.0, ±∞, counted adds") {
+    for (d <- 2 to 5; seed <- 1 to 3) {
+      val rs = rows(seed * 10 + d, d, 6000, nanRate = 0.0)
+      val (b, _, dropped) = feed(rs)
+      assert(dropped > 0, s"d=$d seed=$seed: the filter never dropped a row")
+      b.compact()
+      val got = b.points.indices.groupMapReduce(i => bits(b.points(i)))(b.counts(_))(_ + _)
+      assert(got == bruteCounted(rs), s"d=$d seed=$seed")
+    }
+  }
+
+  test("elimination filter keeps the unfiltered compactions exactly, NaN rows included") {
+    for (d <- 2 to 5; nanRate <- Seq(0.0, 0.02, 0.2)) {
+      val rs = rows(100 + d, d, 6000, nanRate)
+      val (b, l, _) = feed(rs)
+      b.compact(); l.compact()
+      assert(b.points.map(bits) == l.points.map(bits) && b.counts == l.counts &&
+        b.compactAt == l.compactAt, s"d=$d nanRate=$nanRate diverged from the unfiltered buffer")
+    }
+  }
+
+  test("SFS path: a point holding both infinities still dominates (d = 4, 5 special values)") {
+    // Its coordinate sum is NaN, which used to sort it after the points it
+    // dominates, so they survived.
+    val sky = SkylineKernel.skylineOf(ArrayBuffer(
+      Array(0.0, Double.PositiveInfinity, 0.0, 0.0),
+      Array(Double.NegativeInfinity, Double.PositiveInfinity, 0.0, 0.0)))
+    assert(sky.map(_.toSeq) ==
+      ArrayBuffer(Seq(Double.NegativeInfinity, Double.PositiveInfinity, 0.0, 0.0)))
+    val special = Gen.oneOf[Double](-0.0, 0.0, 1.0, 2.0,
+      Double.PositiveInfinity, Double.NegativeInfinity)
+    (4 to 5).foreach { d =>
+      forAll(Gen.listOf(Gen.listOfN(d, special).map(_.toArray)), n = 200) { pts =>
+        val (p, c) = SkylineKernel.skylineCounted(
+          ArrayBuffer(pts: _*), ArrayBuffer.fill(pts.length)(1L))
+        val got = p.indices.flatMap(i => Seq.fill(c(i).toInt)(p(i)))
+        assert(asSets(got) == asSets(bruteForce(pts)))
+      }
+    }
+  }
+
   test("tagged counted SFS: per-tag multiset equals brute force per tag") {
     // Property: the tagged merge (the streaming global phase's
     // representation — dominance ignores the tag, equal points with
