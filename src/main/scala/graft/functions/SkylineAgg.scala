@@ -121,7 +121,11 @@ object SkylineAggExpr {
 }
 
 object SkylineAgg {
-  /** Column form: `skyline_agg($"values")`, i.e. `graft_skyline_agg`. */
+  /** Column form: `skyline_agg($"values")`, i.e. `graft_skyline_agg`.
+    * The column resolves by name in the session that analyzes its plan,
+    * and this registers the function only in the thread's active (or
+    * default) session: aggregate a frame of any other session through
+    * `GraftFunctions.on(df)`, as [[graft.operators.SkylineOps]] does. */
   def skyline_agg(values: Column): Column = {
     GraftFunctions.registerCurrent()
     call_function(GraftFunctions.SkylineAggName, values)

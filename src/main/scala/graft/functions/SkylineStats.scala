@@ -241,7 +241,9 @@ object SkylineStats {
       "\"total_processing_time_ms\": %d}"
 
   /** Column form: `skyline_stats($"pid", $"values")`, i.e.
-    * `graft_skyline_stats`. */
+    * `graft_skyline_stats`. Registered like [[SkylineAgg.skyline_agg]]:
+    * only in the active (or default) session, so aggregate a frame of any
+    * other session through `GraftFunctions.on(df)`. */
   def skyline_stats(pid: Column, values: Column): Column = {
     GraftFunctions.registerCurrent()
     call_function(GraftFunctions.SkylineStatsName, pid, values)

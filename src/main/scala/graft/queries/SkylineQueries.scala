@@ -381,8 +381,8 @@ object SkylineQueries {
     // rows-only; distribution envelopes additionally asserted in
     // DataGenSourceSpec.
     Gate("datagen_sky2d", (s, d) =>
-      graft.sources.DataGenSource.pointsDF(s, "anti_correlated", 42L,
-          100000L, 2, 0, 10000, 32)
+      graft.plans.GraftFunctions.on(graft.sources.DataGenSource.pointsDF(s,
+          "anti_correlated", 42L, 100000L, 2, 0, 10000, 32))
         .agg(graft.functions.SkylineAgg.skyline_agg(col("values")).as("sky"))
         .select(explode(col("sky")).as("p"))
         .select(col("p")(0).as("x"), col("p")(1).as("y")),
